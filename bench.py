@@ -235,7 +235,7 @@ def _bench_lakehouse(
     from etl_loading_scripts_spark.catalog import load_table
     from etl_loading_scripts_spark.llm import annindex as ai
     from etl_loading_scripts_spark.operators import deltalog as dl
-    from etl_loading_scripts_spark.operators.cow import _with_month
+    from etl_loading_scripts_spark.sources.io import with_month
 
     root = tempfile.mkdtemp(prefix="bench_lakehouse_")
     try:
@@ -256,7 +256,7 @@ def _bench_lakehouse(
         # --- fixtures (plant once, unbilled) --------------------------
         cow_path = os.path.join(root, "fact_cow")
         dl.write_delta_table(
-            _with_month(fact, "datekey"), cow_path, partition_by=["month"]
+            with_month(fact, "datekey"), cow_path, partition_by=["month"]
         )
         wh = os.path.join(root, "wh")
         inc_spec = {"fact": {"on": ["txn_id"], "datekey_col": "datekey",
@@ -270,7 +270,7 @@ def _bench_lakehouse(
         ).repartitionByRange(16, "k")
         dl.write_delta_table(dim, dim_path)
         cdc_path = os.path.join(root, "fact_cdc")
-        dl.write_delta_table(_with_month(fact, "datekey"), cdc_path,
+        dl.write_delta_table(with_month(fact, "datekey"), cdc_path,
                              partition_by=["month"])
         for i in range(1, 4):  # a 3-commit CDC range to net
             dl.merge_cow_deltalog_with_retry(
@@ -288,7 +288,7 @@ def _bench_lakehouse(
         # contains some churn keys, the keyed path degenerates to a
         # slow full rewrite)
         dl.write_delta_table(
-            _with_month(fact, "datekey").repartitionByRange(8, "txn_id"),
+            with_month(fact, "datekey").repartitionByRange(8, "txn_id"),
             keyed_path, partition_by=["month"],
         )
         dv_path = os.path.join(root, "fact_dv")
@@ -359,7 +359,7 @@ def _bench_lakehouse(
             # ONLY the churn, so the diff's target scan stats-prunes)
             dl.merge_dim_deltalog_with_retry(
                 spark, keyed_path,
-                _with_month(
+                with_month(
                     fact.filter(
                         F.col("txn_id").between(i * 4000, i * 4000 + 3999)
                     ),

@@ -146,8 +146,8 @@ def gdpr_forget_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (small) request set or the derived orderkey set; counts are
     map-side-combinable aggregates, so the audit costs one pass per
     table and shuffles only key columns. The same semi-joins negated
-    (left_anti) ARE the delete — `operators.mutations.delete_where` +
-    `publish_table` apply them atomically; this query is the audit face
+    (left_anti) ARE the delete — `operators.deltalog.delete_delta`
+    applies them atomically, one version per table; this query is the audit face
     of that pipeline."""
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")

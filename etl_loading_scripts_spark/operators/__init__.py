@@ -15,7 +15,6 @@ from etl_loading_scripts_spark.operators.joins import (
     top1_per_group,
     top1_per_group_agg,
 )
-from etl_loading_scripts_spark.operators.publish import publish_table, truncate_insert
 from etl_loading_scripts_spark.operators.ranks import global_ntile, global_row_number
 
 __all__ = [
@@ -28,10 +27,8 @@ __all__ = [
     "insert_if_absent",
     "merge_upsert",
     "or_join",
-    "publish_table",
     "scd2_apply",
     "top1_per_group",
     "top1_per_group_agg",
-    "truncate_insert",
     "update_from_join",
 ]

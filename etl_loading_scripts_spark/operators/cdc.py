@@ -216,8 +216,8 @@ def snapshot_diff(
     per key present in either side, with ``diff_status`` ∈
     {added, removed, changed, unchanged}.
 
-    The audit companion to ``publish_versioned`` (what changed between
-    v=N-1 and v=N?) and the reverse of ``apply_changelog`` (reconstruct
+    The audit companion to a Delta table's time travel (what changed
+    between version N-1 and version N?) and the reverse of ``apply_changelog`` (reconstruct
     the changelog from states). Comparison is column-by-column null-safe
     equality over ``compare_cols`` (default: all shared non-key columns)
     — no cross-engine struct-hash dependence.

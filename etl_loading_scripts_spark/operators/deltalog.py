@@ -9,7 +9,14 @@ action files — ``protocol`` / ``metaData`` / ``add`` / ``remove`` —
 where each ``{version:020d}.json`` commit is made visible atomically by
 a single putIfAbsent. This module implements the core protocol from
 scratch, and (round 7) the pieces that make it INFRASTRUCTURE rather
-than a demo:
+than a demo.
+
+It is the engine's ONE commit protocol. Every atomic table write
+commits through this log: the staged monthly close and its multi-table
+publish, the month-grain copy-on-write merges and deletes, OPTIMIZE,
+the streaming CDC bridge (``streaming/cdc_bridge.py``) and the
+streaming upsert sink (``streaming/sinks.py``). There is no
+directory-rename commit beside it. The pieces:
 
 - :func:`write_delta_table` — create/overwrite/append, one atomic
   commit per call; ``partition_by`` creates a PARTITIONED table whose
@@ -28,20 +35,18 @@ than a demo:
 - :func:`merge_upsert_deltalog` — the reference's MERGE semantics
   (``spScript.sql:95-202`` shape via ``operators.mutations.
   merge_upsert``) EXECUTED against the Delta format, full-table grain;
-- :func:`merge_cow_deltalog` — the month-grain COPY-ON-WRITE composition
-  ``operators/cow.py`` documents: only the months named by the source's
-  date keys are read, merged (month part of the join key, cow.py's
-  contract), and restaged; untouched months' files stay REFERENCED and
-  byte-identical, and the whole rewrite is ONE atomic
-  remove(affected)+add(new) version;
+- :func:`merge_cow_deltalog` — the month-grain COPY-ON-WRITE merge:
+  only the months named by the source's date keys are read, merged
+  (month part of the join key), and restaged; untouched months' files
+  stay REFERENCED and byte-identical, and the whole rewrite is ONE
+  atomic remove(affected)+add(new) version;
 - :func:`publish_set_deltalog` / :func:`read_published_set_deltalog` —
   the multi-table atomic publish (the reference's single-transaction
   dim+fact sync, ``spScript.sql:20-22,345-357``) built ON the log: each
   table is its own Delta table, and one coordinator commit (same
   putIfAbsent primitive) pins ``{table: delta_version}``, giving the
   monthly load cross-run time travel over the entire warehouse — this
-  is the pipeline's publish path (``pipeline/staged.py``), replacing
-  the parallel ``publish_set`` manifest mechanism;
+  is the pipeline's publish path (``pipeline/staged.py``);
 - :func:`vacuum_delta` — retention GC of files no live version
   references, age-gated so a concurrent writer's staged-but-uncommitted
   files are never collected.
@@ -134,6 +139,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401 — callers' convenience
 from pyspark.sql.types import StructType
+
+from etl_loading_scripts_spark.sources.io import MONTH_COL, with_month
 
 _LOG_DIR = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -335,7 +342,10 @@ def _is_commit_conflict(exc: BaseException) -> bool:
 
 
 def _stage_data_files(
-    df: DataFrame, table: str, partition_cols: Sequence[str] | None = None
+    df: DataFrame,
+    table: str,
+    partition_cols: Sequence[str] | None = None,
+    max_records_per_file: int | None = None,
 ) -> list[dict]:
     """Write ``df`` as parquet into the table directory under fresh
     uuid names (staged via a temp subdir so a crash mid-write leaves
@@ -343,10 +353,14 @@ def _stage_data_files(
     ``partition_cols`` the staged write is hive-partitioned and each
     add action carries the real ``partitionValues`` parsed from its
     directory (hive-unescaped to the LOGICAL values per the protocol;
-    null partitions recorded as None). Files are INVISIBLE until a
-    commit references them — the protocol's data/metadata split."""
+    null partitions recorded as None). ``max_records_per_file`` caps
+    the rows of each written file, so one task's output splits into
+    several files. Files are INVISIBLE until a commit references them
+    — the protocol's data/metadata split."""
     staging = os.path.join(table, f".staging-{uuid.uuid4().hex}")
     writer = df.write.mode("overwrite")
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(staging)
@@ -1953,7 +1967,7 @@ def merge_upsert_deltalog_with_retry(
 
 
 # --------------------------------------------------------------------------
-# Month-grain copy-on-write MERGE — operators/cow.py composed with the log
+# Month-grain copy-on-write MERGE
 # --------------------------------------------------------------------------
 
 
@@ -1968,26 +1982,35 @@ def merge_cow_deltalog(
     operation_parameters: Mapping[str, object] | None = None,
     **merge_kwargs,
 ) -> dict:
-    """File-level-rewrite MERGE into a MONTH-PARTITIONED Delta table —
-    the composition ``operators/cow.py`` documents, executed: the
-    month-scoped merge semantics of :func:`operators.cow.
-    merge_cow_partitioned` (month is PART of the join key; a source row
-    matches only within its own month; ``delete_unmatched_source=True``
-    is the reference's month-scoped full sync, ``S4:91-107``) staged as
-    new month-partitioned files and committed as ONE Delta version that
-    removes only the AFFECTED months' old files. Untouched months'
-    files stay referenced and byte-identical (test-asserted), the
-    pre-merge version stays time-travelable, and a racing writer
-    collides on the version number (OCC — wrap with
-    :func:`merge_cow_deltalog_with_retry`).
+    """File-level-rewrite MERGE into a MONTH-PARTITIONED Delta table.
+
+    Semantics are exactly :func:`operators.mutations.merge_upsert`
+    (update-when-matched / insert-when-not-matched / optional
+    WHEN-NOT-MATCHED-BY-SOURCE delete with guard — O4, ``P-SF:95-202``)
+    restricted to the months present in ``source``: month is PART of
+    the join key, so a source row matches only within its own month,
+    and ``delete_unmatched_source=True`` is the reference's month-scoped
+    full sync (``S4:91-107``), not a whole-table purge. The merged
+    months are staged as new month-partitioned files and committed as
+    ONE Delta version that removes only the AFFECTED months' old files.
+    Untouched months' files stay referenced and byte-identical
+    (test-asserted), the pre-merge version stays time-travelable, and a
+    racing writer collides on the version number (OCC — wrap with
+    :func:`merge_cow_deltalog_with_retry`). Readers see the whole merge
+    or none of it: the log commit has no reader-visible window.
+
+    CONTRACT — the partition key is immutable under the merge: a source
+    row's ``datekey_col`` names the month that both locates its target
+    match and receives the merged row. Moving a row across months is two
+    operations (:func:`delete_delta` in the old month + merge into the
+    new); a single MERGE that relocated rows would have to scan every
+    month to find the match, the full-table rewrite this avoids.
 
     Scale: a monthly increment touches ~1/100th of a 100 TB fact — the
     affected-month read is pruned driver-side from partitionValues, the
     merge is one (month, key) shuffle over that slice, and the commit
-    is O(affected files) metadata. This supersedes cow.py's two-rename
-    directory swap: the log commit has NO reader-visible window at all.
+    is O(affected files) metadata.
     """
-    from etl_loading_scripts_spark.operators.cow import MONTH_COL, _with_month
     from etl_loading_scripts_spark.operators.mutations import merge_upsert
 
     on = list(on)
@@ -2017,7 +2040,7 @@ def merge_cow_deltalog(
         )
     raw_months = [
         r[0]
-        for r in _with_month(source, datekey_col)
+        for r in with_month(source, datekey_col)
         .select(MONTH_COL)
         .distinct()
         .collect()
@@ -2069,7 +2092,7 @@ def merge_cow_deltalog(
     )
     merged = merge_upsert(
         affected.select([*data_cols, MONTH_COL]),
-        _with_month(
+        with_month(
             source.select([c for c in source.columns if c in data_cols]),
             datekey_col,
         ),
@@ -2185,8 +2208,6 @@ class DeltaCommitConflict(RuntimeError):
 
 def _path_month(path: str) -> str | None:
     """month partition value from a hive-layout file path, or None."""
-    from etl_loading_scripts_spark.operators.cow import MONTH_COL
-
     for seg in path.split("/")[:-1]:
         k, _, v = seg.partition("=")
         if k == MONTH_COL:
@@ -2203,8 +2224,6 @@ def _try_recommit_disjoint(conflict: DeltaCommitConflict, max_attempts: int = 5)
     Returns the updated result dict, or None when the commits overlap
     (or can't be verified: expired JSON, metadata change, un-parseable
     path) — the caller then falls back to full recompute."""
-    from etl_loading_scripts_spark.operators.cow import MONTH_COL
-
     table = conflict.table
     for _ in range(max_attempts):
         latest = _all_versions(table)[-1]
@@ -4537,8 +4556,6 @@ def _orphan_unmerge_months(table: str, lo: int, hi: int) -> set[str] | None:
     Row-preserving dataChange=false maintenance (OPTIMIZE) is
     transparent: rebuilding a month it compacted from the pin is
     row-identical."""
-    from etl_loading_scripts_spark.operators.cow import MONTH_COL
-
     orphan_months: set[str] = set()
     oob_months: set[str] = set()
     for v in range(lo + 1, hi + 1):
@@ -4587,8 +4604,6 @@ def _fence_remove_months(
     can't express 'this month must not exist'). One publishSet-stamped
     MERGE-shaped commit removes their files with CDC delete rows
     encoded, so the commit stays fence-provable and CDC-composable."""
-    from etl_loading_scripts_spark.operators.cow import MONTH_COL
-
     def _attempt():
         avail = _all_versions(table)
         pinned = avail[-1]
@@ -4784,11 +4799,6 @@ def publish_set_deltalog(
         return res["version"] if res["version"] is not None else version
 
     def _publish_incremental(name: str, df: DataFrame) -> int:
-        from etl_loading_scripts_spark.operators.cow import (
-            MONTH_COL,
-            _with_month,
-        )
-
         tpath = os.path.join(base_dir, name)
         spec = dict(incr[name])
         grain = spec.pop("grain", "fact")
@@ -4864,7 +4874,7 @@ def publish_set_deltalog(
                 )
             v = _occ_retry(
                 lambda: write_delta_table(
-                    _with_month(df, datekey_col), tpath, mode="overwrite",
+                    with_month(df, datekey_col), tpath, mode="overwrite",
                     partition_by=[MONTH_COL],
                     operation_parameters={"publishSet": "true"},
                 ),
@@ -7299,6 +7309,7 @@ def optimize_delta(
             meta_rows += nrec - int(
                 (dv_refs.get(p) or {}).get("cardinality") or 0
             )
+    max_records = None
     if zorder_by:
         n_out = None
         if target_file_rows and meta_rows is not None:
@@ -7312,6 +7323,9 @@ def optimize_delta(
         if target_file_rows:
             n_rows = meta_rows if meta_rows is not None else df.count()
             n_out = max(n_out, (n_rows + target_file_rows - 1) // target_file_rows)
+            # the hash repartition puts a whole partition on one task;
+            # the per-file row cap is what splits a whale partition
+            max_records = target_file_rows
         df = (
             df.repartition(n_out, *[F.col(c) for c in pcols])
             if pcols
@@ -7322,7 +7336,7 @@ def optimize_delta(
         {"remove": {"path": p, "deletionTimestamp": now, "dataChange": False}}
         for p in touched
     ]
-    adds = _stage_data_files(df, table, pcols)
+    adds = _stage_data_files(df, table, pcols, max_records)
     for a in adds:
         a["add"]["dataChange"] = False  # compaction: no row changed
     actions.extend(adds)

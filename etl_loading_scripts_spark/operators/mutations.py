@@ -4,7 +4,7 @@ The reference mutates SQL Server tables in place; Spark tables are immutable
 files. Every in-place idiom becomes read → derive → (atomically) overwrite:
 the five primitives here cover ~90% of the reference's statements
 (SURVEY §7.1 M2). All are pure ``DataFrame -> DataFrame`` transforms; the
-write/publish side lives in ``publish.py``.
+commit side lives in ``deltalog.py``.
 
 Scale notes (100 TB): each primitive is a join or window over the target's
 key — Catalyst picks broadcast when the mapping side is small, sort-merge

@@ -7,8 +7,8 @@ nothing here materializes violating rows unless a check is drilled into
 individually, so the report costs one pass per check at any scale (and
 Catalyst shares scan subtrees where checks hit the same table).
 
-Extends the publish-time referential-integrity assert
-(``operators/publish.py``, reference O11) into a standing report.
+:func:`referential_integrity_check` is the publish-time FK assert
+(reference O11); the checks below extend it into a standing report.
 """
 
 from __future__ import annotations
@@ -39,6 +39,17 @@ def fk_check(child: DataFrame, child_key: str, parent: DataFrame, parent_key: st
     return child.select(F.col(child_key).alias("k")).join(
         parent.select(F.col(parent_key).alias("k")).distinct(), "k", "left_anti"
     )
+
+
+def referential_integrity_check(
+    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
+) -> int:
+    """Post-write FK assertion replacing the reference's constraint toggles
+    (O11; ``P-SF:25-29``, ``P-RES:440``): count of dangling non-null fact
+    keys. Run after publish; a non-zero result fails the pipeline run."""
+    return fk_check(
+        fact.filter(F.col(fact_key).isNotNull()), fact_key, dim, dim_key
+    ).count()
 
 
 def run_checks(spark: SparkSession, checks: list[Check]) -> DataFrame:

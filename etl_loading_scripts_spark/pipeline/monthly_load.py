@@ -2,8 +2,8 @@
 
 Runs stages 1→5 in the reference's order over a :class:`Domain`, returning
 the updated state plus every stage's validation metrics. The caller decides
-publishing (``operators.publish.publish_table`` per output = the engine's
-stage-all-then-publish transaction discipline, SURVEY §4.5).
+publishing (``operators.deltalog.publish_set_deltalog`` commits every output
+as one atomic set — the engine's transaction discipline, SURVEY §4.5).
 
 At 100 TB: each stage's fact rewrite touches only the month partition
 (datekey guard → partition pruning); dims and staging maps broadcast. The
@@ -140,34 +140,6 @@ def run_monthly_load_partitioned(
     overwrite_fact_month(out.fact_transaction, warehouse_path)
     published = spark.read.parquet(warehouse_path).drop("month")
     return replace(out, fact_transaction=published), metrics
-
-
-def publish_monthly_set(dom: Domain, base_dir: str) -> int:
-    """Commit the monthly load's outputs — fact plus every mutated dim —
-    as ONE atomic multi-table set (``operators.publish.publish_set``);
-    returns the committed version.
-
-    This is the engine's equivalent of the reference wrapping the
-    DimSalesForceBrand/DimSalesForceRestaurant/DimFingerprint MERGEs and
-    the fact syncs in a single SQL transaction with rollback
-    (``…spScript.sql:20-22,345-357``): a reader of the published
-    warehouse either sees the entire new load (new dims AND new fact) or
-    the entire previous one — never a new dim joined to an old fact,
-    which is exactly the torn state a crash between two per-table
-    ``publish_table`` calls could expose (VERDICT r4's last O10 gap).
-    """
-    from etl_loading_scripts_spark.operators.publish import publish_set
-
-    return publish_set(
-        [
-            ("fact_transaction", dom.fact_transaction),
-            ("dim_patron", dom.dim_patron),
-            ("dim_restaurant", dom.dim_restaurant),
-            ("dim_billing_group", dom.dim_billing_group),
-            ("pos_fingerprints", dom.pos_fingerprints),
-        ],
-        base_dir,
-    )
 
 
 def full_window(dom: Domain) -> tuple[int, int]:

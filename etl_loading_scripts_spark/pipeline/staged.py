@@ -363,8 +363,7 @@ def run_monthly_load_staged(
         # every table a Delta table, one coordinator commit per run — so
         # consecutive staged loads over different month windows give
         # cross-RUN time travel over the whole warehouse (read any prior
-        # run's consistent dim+fact set by set version). This replaced the
-        # parallel publish_set manifest mechanism in round 7.
+        # run's consistent dim+fact set by set version).
         from etl_loading_scripts_spark.operators.deltalog import (
             publish_set_deltalog,
         )

@@ -1,10 +1,11 @@
-"""Driver-visible queries for the copy-on-write partition mutations.
+"""Registry queries for the month-grain copy-on-write mutations.
 
-Each query materializes a month-partitioned order fact under ``/tmp``
-(fresh per run — idempotent), applies a file-level-rewrite mutation
-(``operators/cow.py``), and returns the full table's per-month end state,
-which the DuckDB oracle derives independently from the ``orders`` view.
-The byte-level "untouched partitions kept their files" half of the
+Each query plants a month-partitioned order fact as a Delta table under
+``/tmp`` (reset per call, so repeated runs never grow a log), applies a
+file-level-rewrite mutation committed through the delta log
+(``operators/deltalog.py``), and returns the full table's per-month end
+state, which the DuckDB oracle derives independently from the ``orders``
+view. The byte-level "untouched partitions kept their files" half of the
 contract is asserted in ``tests/test_cow.py`` (hash oracles can't see
 file layout).
 
@@ -15,18 +16,24 @@ BETWEEN`` incremental window ``S4:91-107``, DELETE…WHERE ``P-RES:65-66``.
 
 from __future__ import annotations
 
-import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_loading_scripts_spark.catalog import load_table
-from etl_loading_scripts_spark.operators.cow import (
-    delete_cow_partitioned,
-    merge_cow_partitioned,
+from etl_loading_scripts_spark.operators.deltalog import (
+    _fixture_dir,
+    delete_delta,
+    merge_cow_deltalog,
+    optimize_delta,
+    publish_set_deltalog,
+    read_delta_table,
+    read_published_set_deltalog,
+    write_delta_table,
 )
 from etl_loading_scripts_spark.registry import register
-from etl_loading_scripts_spark.sources.io import write_fact_partitioned
+from etl_loading_scripts_spark.sources.io import MONTH_COL, with_month
 
 #: Inserted keys are offset far past any real TPC-H orderkey (sf1 tops out
 #: around 6M; even sf100 stays under 1e9), so synthetic rows can't collide.
@@ -48,14 +55,18 @@ def _order_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _warehouse(tag: str, sf_dir: str) -> str:
-    from etl_loading_scripts_spark.operators.deltalog import _fixture_dir
+def _fresh_fact(tag: str, sf_dir: str, fact: DataFrame) -> str:
+    """Plant ``fact`` as a month-partitioned Delta table at a fixed
+    per-tag path, wiping whatever an earlier run left there."""
+    path = _fixture_dir(sf_dir, tag=tag)
+    shutil.rmtree(path, ignore_errors=True)
+    write_delta_table(with_month(fact), path, partition_by=[MONTH_COL])
+    return path
 
-    return _fixture_dir(sf_dir, tag=tag)
 
-
-def _month_rollup(df: DataFrame) -> DataFrame:
-    return df.groupBy(F.col("month").cast("int").alias("month")).agg(
+def _month_rollup(spark: SparkSession, path: str) -> DataFrame:
+    df = read_delta_table(spark, path)
+    return df.groupBy(F.col(MONTH_COL).cast("int").alias("month")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("price").cast("double").alias("total_price"),
     )
@@ -87,28 +98,27 @@ def _month_rollup(df: DataFrame) -> DataFrame:
            CAST(SUM(price) AS DOUBLE) AS total_price
     FROM final GROUP BY 1
     """,
-    doc="File-level-rewrite MERGE (the lakehouse idiom on plain parquet): "
+    doc="File-level-rewrite MERGE through the delta log: "
     "restate the busiest month of a month-partitioned order fact — even keys "
     "repriced ×2 (update), every 97th key re-inserted under a new key "
     "(insert), odd keys dropped (month-scoped NOT-MATCHED-BY-SOURCE "
-    "delete) — then roll up the whole table per month. Months outside the "
-    "window keep their files byte-identical (tests/test_cow.py).",
+    "delete) — committed as one Delta version, then roll up the whole "
+    "table per month. Months outside the window keep their files "
+    "byte-identical (tests/test_cow.py).",
 )
 def merge_cow_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: the merge lists, reads, and swaps ONLY the restated month's
-    partition directory — at 100 TB a monthly restatement is a ~1/100th
-    rewrite with a metadata-rename commit, while the join inside the
-    window is an ordinary key shuffle (AQE broadcasts dimension-sized
+    """Scale: the merge reads and replaces ONLY the restated month's
+    files — at 100 TB a monthly restatement is a ~1/100th rewrite with
+    an O(affected files) log commit, while the join inside the window
+    is an ordinary key shuffle (AQE broadcasts dimension-sized
     increments). This is `merge_upsert`'s semantics contract executed
-    with Delta/Iceberg's physical behavior, minus their manifest layer
-    (environment blocker recorded in BASELINE.md).
+    with Delta's physical behavior (`merge_cow_deltalog`).
 
     The restated window is the BUSIEST month (tie-break: latest) — the
     calendar-tail month can be a 2-row stub whose keys are all odd,
     which would make the merge source empty and the demo vacuous."""
     base = _order_fact(spark, sf_dir)
-    path = _warehouse("cow_merge", sf_dir)
-    write_fact_partitioned(base, path)
+    path = _fresh_fact("cow_merge", sf_dir, base)
 
     busiest = (
         base.groupBy((F.col("datekey") / 100).cast("int").alias("m"))
@@ -123,14 +133,14 @@ def merge_cow_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     inserts = window.filter(F.col("k") % 97 == 0).withColumn(
         "k", F.col("k") + F.lit(_INSERT_OFFSET)
     )
-    merge_cow_partitioned(
+    merge_cow_deltalog(
         spark,
         path,
         updates.unionByName(inserts),
         on=["k"],
         delete_unmatched_source=True,
     )
-    return _month_rollup(spark.read.parquet(path))
+    return _month_rollup(spark, path)
 
 
 @register(
@@ -176,12 +186,11 @@ def merge_cow_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     month-scoped merge was designed for — the effective key is
     (month, k), so a natural key recurring across the three affected
     months merges each month independently in one shuffle, one staged
-    write, one per-partition two-phase commit sweep. At 100 TB a
-    quarter is ~3/100ths of the fact rewritten; the other ~97 partitions
-    are never listed, read, or renamed (byte-audited at test scale)."""
+    write, one Delta commit. At 100 TB a quarter is ~3/100ths of the
+    fact rewritten; the other ~97 partitions' files are never read or
+    replaced (byte-audited at test scale)."""
     base = _order_fact(spark, sf_dir)
-    path = _warehouse("cow_quarter", sf_dir)
-    write_fact_partitioned(base, path)
+    path = _fresh_fact("cow_quarter", sf_dir, base)
 
     yq = (
         (F.col("datekey") / 10000).cast("int") * 10
@@ -200,11 +209,11 @@ def merge_cow_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     inserts = window.filter(F.col("k") % 101 == 0).withColumn(
         "k", F.col("k") + F.lit(_INSERT_OFFSET)
     )
-    stats = merge_cow_partitioned(
+    stats = merge_cow_deltalog(
         spark, path, updates.unionByName(inserts), on=["k"]
     )
     assert len(stats["months_rewritten"]) == 3, stats
-    return _month_rollup(spark.read.parquet(path))
+    return _month_rollup(spark, path)
 
 
 @register(
@@ -219,21 +228,18 @@ def merge_cow_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="GDPR-style purge with file-level rewrite: DELETE every order "
     "whose key falls in the forget set (k % 500 = 7) across ALL months "
-    "of the partitioned fact, removing any partition directory the purge "
-    "empties; remaining table rolled up per month.",
+    "of the partitioned Delta fact in one version; a month the purge "
+    "empties keeps no active file; remaining table rolled up per month.",
 )
 def delete_cow_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: a right-to-be-forgotten sweep must visit every partition,
-    but each partition is rewritten independently (no global shuffle —
-    the repartition key is the partition column itself) and committed by
-    rename; parquet footer counts make the before/after row accounting
-    metadata-only. Contrast `gdpr_forget_cascade` (the audit of WHAT to
-    forget) — this is the physical erasure."""
-    base = _order_fact(spark, sf_dir)
-    path = _warehouse("cow_purge", sf_dir)
-    write_fact_partitioned(base, path)
-    delete_cow_partitioned(spark, path, F.col("k") % 500 == 7)
-    return _month_rollup(spark.read.parquet(path))
+    """Scale: a right-to-be-forgotten sweep must probe every partition,
+    but only files holding a matching row are rewritten (a
+    predicate-pushed probe scan finds them) and the whole purge commits
+    as one `delete_delta` version. Contrast `gdpr_forget_cascade` (the
+    audit of WHAT to forget) — this is the physical erasure."""
+    path = _fresh_fact("cow_purge", sf_dir, _order_fact(spark, sf_dir))
+    delete_delta(spark, path, F.col("k") % 500 == 7)
+    return _month_rollup(spark, path)
 
 
 @register(
@@ -245,31 +251,26 @@ def delete_cow_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1
     """,
-    doc="Small-file compaction (lakehouse OPTIMIZE on plain parquet): a "
-    "deliberately fragmented month-partitioned fact (8 writer tasks per "
-    "month — the classic partitioned-write mistake) is bin-packed to "
-    "~one target-size file per month via maxRecordsPerFile, committed "
-    "with the COW two-phase rename sweep; the rollup proves compaction "
-    "changed ZERO rows. File-count/byte assertions live in "
-    "tests/test_compaction.py (a hash oracle can't see file layout).",
+    doc="Small-file compaction (lakehouse OPTIMIZE on the delta log): a "
+    "deliberately fragmented month-partitioned Delta fact (8 writer tasks "
+    "per month — the classic partitioned-write mistake) is bin-packed to "
+    "~one file per month and committed as one dataChange=false version; "
+    "the rollup proves compaction changed ZERO rows. File-count/byte "
+    "assertions live in tests/test_compaction.py (a hash oracle can't "
+    "see file layout).",
 )
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: the compactor's decision pass is metadata-only (listing +
-    footer counts) and per-partition, so a nightly run reads only the
-    partitions whose file count drifted past ceil(bytes/target); the
-    rewrite bills exactly the fragmented partitions' bytes and commits
-    crash-safe (operators/compaction.py). At 100 TB this is what keeps
-    scan-side file-open cost O(data) instead of O(writes-ever-made)."""
-    from etl_loading_scripts_spark.operators.compaction import (
-        compact_partition_files,
-    )
-
+    """Scale: OPTIMIZE's selection pass is log metadata only (file sizes
+    in the add actions) and per-partition, so a nightly run reads only
+    the small files; the rewrite bills exactly their bytes and commits
+    as one atomic version (`optimize_delta`). At 100 TB this is what
+    keeps scan-side file-open cost O(data) instead of
+    O(writes-ever-made)."""
     base = _order_fact(spark, sf_dir)
-    path = _warehouse("compact", sf_dir)
-    write_fact_partitioned(base.repartition(8, "k"), path, compact=False)
-    stats = compact_partition_files(spark, path)
-    assert stats["months_compacted"], stats
-    return _month_rollup(spark.read.parquet(path))
+    path = _fresh_fact("compact", sf_dir, base.repartition(8, "k"))
+    stats = optimize_delta(spark, path)
+    assert stats["partitions_touched"], stats
+    return _month_rollup(spark, path)
 
 
 @register(
@@ -312,30 +313,22 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Multi-table ATOMIC publish (the reference's P-SF transaction "
     "semantics, O10 closed): a dim + fact pair commits twice as "
-    "versioned sets through one manifest + pointer flip, a third "
-    "publish is crash-injected mid-set (one table written, no "
-    "manifest), and the readback proves (a) the latest pointer serves "
-    "the COMPLETE second set untorn by the debris, (b) version 1 stays "
-    "pinned-readable for reproducible audits. Row counts and integer "
-    "checksums of both snapshots against the DuckDB oracle.",
+    "delta-log sets, each through one coordinator commit, a third "
+    "publish is crash-injected mid-set (one table committed, no "
+    "coordinator commit), and the readback proves (a) the latest set "
+    "serves the COMPLETE second set untorn by the orphan version, (b) "
+    "the first set stays pinned-readable for reproducible audits. Row "
+    "counts and integer checksums of both snapshots against the DuckDB "
+    "oracle.",
 )
 def publish_set_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: publish_set's own cost is one parquet write per table (no
-    extra shuffle — the commit is a manifest write plus one pointer
-    rename, O(1) driver metadata regardless of table size), so the
-    transaction discipline is free at 100 TB. Readers pay nothing: one
-    pointer read pins every table to the same version. POSIX scope
-    documented on the operator; on object stores the same layout rides
-    a table-format snapshot commit.
+    """Scale: the set publish costs one Delta write per table (no extra
+    shuffle — the set commit is one coordinator log entry, O(1) driver
+    metadata regardless of table size), so the transaction discipline
+    is free at 100 TB. Readers pay one coordinator read that pins every
+    table to the same version.
     """
-    import shutil
-
     from pyspark.sql import Row
-
-    from etl_loading_scripts_spark.operators.publish import (
-        publish_set,
-        read_published_set,
-    )
 
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
@@ -351,24 +344,25 @@ def publish_set_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).agg(F.count(F.lit(1)).alias("n_orders"))
         return [("dim_customer_nation", dim), ("fact_orders_month", fact)]
 
-    base = _warehouse("pubset", sf_dir)
+    base = _fixture_dir(sf_dir, tag="pubset")
     shutil.rmtree(base, ignore_errors=True)
-    v1 = publish_set(tables(customer, orders), base)
-    v2 = publish_set(
+    v1 = publish_set_deltalog(tables(customer, orders), base)
+    v2 = publish_set_deltalog(
         tables(
             customer.filter(F.col("c_custkey") % 2 == 0),
             orders.filter(F.col("o_orderkey") % 2 == 0),
         ),
         base,
     )
-    assert (v1, v2) == (1, 2)
-    # crash injection: a third publish dies after its first table, before
-    # the manifest — readers must never see it
-    tables(customer, orders)[0][1].write.parquet(f"{base}/v=3/dim_customer_nation")
+    assert v2 == v1 + 1
+    # crash injection: a third publish dies after committing its first
+    # table, before the coordinator commit — readers must never see it
+    name, dim = tables(customer, orders)[0]
+    write_delta_table(dim, f"{base}/{name}", mode="overwrite")
 
     out = []
-    for snapshot, version in (("latest", None), ("pinned_v1", 1)):
-        for tbl, df in sorted(read_published_set(spark, base, version).items()):
+    for snapshot, version in (("latest", None), ("pinned_v1", v1)):
+        for tbl, df in read_published_set_deltalog(spark, base, version).items():
             row = df.agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum(

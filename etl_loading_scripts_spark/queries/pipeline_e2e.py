@@ -736,7 +736,6 @@ def delta_fact_keyed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from etl_loading_scripts_spark.catalog import load_table
-    from etl_loading_scripts_spark.operators.cow import _with_month
     from etl_loading_scripts_spark.operators.deltalog import (
         _all_versions,
         _fixture_dir,
@@ -745,6 +744,7 @@ def delta_fact_keyed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_delta_table,
         write_delta_table,
     )
+    from etl_loading_scripts_spark.sources.io import with_month
 
     root = _fixture_dir(sf_dir, tag="factkeyed")
     d = os.path.join(root, "fact")
@@ -766,7 +766,7 @@ def delta_fact_keyed_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("datekey") / 100).cast("int").alias("m")
             ).distinct().orderBy("m").limit(2).collect()
         ]
-        base = _with_month(
+        base = with_month(
             orders.filter(
                 ((F.col("datekey") / 100).cast("int")).isin(months)
             ),

@@ -8,6 +8,15 @@ from pyspark.sql.types import StructType
 
 FORMATS = ("parquet", "orc", "csv", "json")
 
+#: The fact's partition column: the ``yyyyMM`` month of its datekey.
+MONTH_COL = "month"
+
+
+def with_month(df: DataFrame, datekey_col: str = "datekey") -> DataFrame:
+    """``df`` plus :data:`MONTH_COL` derived from a ``yyyyMMdd`` datekey —
+    the one month derivation every month-partitioned writer shares."""
+    return df.withColumn(MONTH_COL, (F.col(datekey_col) / 100).cast("int"))
+
 
 def read_table(
     spark: SparkSession,
@@ -74,10 +83,10 @@ def write_fact_partitioned(
     single task are the bucketed layout's job (``write_bucketed``), or
     repartition on (month, salt).
     """
-    with_month = fact.withColumn("month", (F.col(datekey_col) / 100).cast("int"))
+    out = with_month(fact, datekey_col)
     if compact:
-        with_month = with_month.repartition(F.col("month"))
-    write_table(with_month, path, partition_by=["month"])
+        out = out.repartition(F.col(MONTH_COL))
+    write_table(out, path, partition_by=[MONTH_COL])
 
 
 def read_fact_month(
@@ -87,7 +96,7 @@ def read_fact_month(
     the datekey filter prunes row groups within the month."""
     return (
         spark.read.parquet(path)
-        .filter(F.col("month").between(lo_datekey // 100, hi_datekey // 100))
+        .filter(F.col(MONTH_COL).between(lo_datekey // 100, hi_datekey // 100))
         .filter(F.col("datekey").between(lo_datekey, hi_datekey))
     )
 
@@ -156,11 +165,11 @@ def overwrite_fact_month(fact_month: DataFrame, path: str, datekey_col: str = "d
     reruns) becomes a bounded write. Static mode (the default) would drop
     ALL partitions first; the option is set on the writer so the session
     default stays safe."""
-    with_month = fact_month.withColumn("month", (F.col(datekey_col) / 100).cast("int"))
     (
-        with_month.write.mode("overwrite")
+        with_month(fact_month, datekey_col)
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("month")
+        .partitionBy(MONTH_COL)
         .parquet(path)
     )
 
@@ -252,10 +261,10 @@ def compact_small_files(
     as a maintenance job (OPTIMIZE in lakehouse formats); here it is an
     explicit operator over plain directories.
 
-    Rewrite is staged through a sibling temp dir + atomic rename (same
-    crash discipline as operators/publish.py: readers never observe a
-    half-compacted directory on a POSIX filesystem; object stores need a
-    manifest swap instead)."""
+    Rewrite is staged through a sibling temp dir + atomic rename: readers
+    never observe a half-compacted directory on a POSIX filesystem;
+    object stores need a manifest swap instead (``optimize_delta`` is
+    that swap for a Delta table)."""
     import math
     import shutil
     import uuid as _uuid

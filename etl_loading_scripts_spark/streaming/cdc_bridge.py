@@ -1,12 +1,12 @@
-"""Streaming changelog → copy-on-write partitioned table (the CDC bridge).
+"""Streaming changelog → month-partitioned Delta table (the CDC bridge).
 
 The missing piece between the streaming surface (§2.10 extensions) and the
 warehouse mutations (O4): a change stream applied transactionally to the
-month-partitioned fact via ``foreachBatch`` + ``merge_cow_partitioned``.
+month-partitioned fact via ``foreachBatch`` + ``merge_cow_deltalog``.
 This is the Structured-Streaming idiom for "stream into a lakehouse
 table" — Delta's ``foreachBatch`` merge recipe — executed against this
-engine's own file-level-rewrite merge (``operators/cow.py``) since the
-lakehouse packages are absent here (BASELINE.md blocker note).
+engine's own delta log (``operators/deltalog.py``): each micro-batch is
+one month-scoped copy-on-write MERGE committed as one Delta version.
 
 Scale notes: each micro-batch is deduped per key (rank-1 by event time —
 the reference's own discipline, ``S4:23,30``), then merged with partition
@@ -20,7 +20,7 @@ batch can never strand a stale row in another month.
 
 from __future__ import annotations
 
-import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,9 +32,14 @@ from etl_loading_scripts_spark.catalog import (
     stream_source_schema,
     table_path,
 )
-from etl_loading_scripts_spark.operators.cow import merge_cow_partitioned
+from etl_loading_scripts_spark.operators.deltalog import (
+    _fixture_dir,
+    merge_cow_deltalog,
+    read_delta_table,
+    write_delta_table,
+)
 from etl_loading_scripts_spark.registry import register
-from etl_loading_scripts_spark.sources.io import write_fact_partitioned
+from etl_loading_scripts_spark.sources.io import MONTH_COL, with_month
 from etl_loading_scripts_spark.streaming.source_util import stream_source_dir
 
 
@@ -54,8 +59,9 @@ def apply_changelog_batch(
     spark: SparkSession, target_path: str, batch: DataFrame
 ) -> dict:
     """One micro-batch of the CDC apply: rank-1 dedup per key (latest
-    ``ts`` wins, ``event_id`` breaks exact ties) then COW merge into the
-    batch's month partitions. Exposed as a plain function so the batch
+    ``ts`` wins, ``event_id`` breaks exact ties) then a month-scoped COW
+    merge of the batch's months into the Delta table at ``target_path``,
+    committed as one version. Exposed as a plain function so the batch
     semantics are unit-testable without a streaming query around them."""
     w = Window.partitionBy("event_id").orderBy(F.desc("ts"))
     latest = (
@@ -63,7 +69,7 @@ def apply_changelog_batch(
         .filter(F.col("__rn__") == 1)
         .drop("__rn__")
     )
-    return merge_cow_partitioned(
+    return merge_cow_deltalog(
         spark,
         target_path,
         _event_changelog(latest),
@@ -91,9 +97,9 @@ def stream_cdc_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stream-into-lakehouse idiom with the table as the only state:
     outputMode is irrelevant (foreachBatch), watermarks unnecessary (the
     merge is idempotent per key — a replayed batch re-asserts the same
-    values), and exactly-once lands on batch idempotence + the COW
-    commit, which is how every production Delta/Iceberg CDC sink
-    actually achieves it."""
+    values), and exactly-once lands on batch idempotence + the one-version
+    Delta commit per batch, which is how every production Delta/Iceberg
+    CDC sink actually achieves it."""
     src = table_path(sf_dir, "events")
     stream_dir = stream_source_dir(src, prefix="events_cdc")
     raw_schema, nanos_cols = stream_source_schema(spark, src)
@@ -102,10 +108,9 @@ def stream_cdc_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = _event_changelog(events).filter(
         F.col("event_id") % 3 != 0
     ).withColumn("value", F.lit(0).cast("decimal(18,6)"))
-    from etl_loading_scripts_spark.operators.deltalog import _fixture_dir
-
     target = _fixture_dir(sf_dir, tag="cow_cdc")
-    write_fact_partitioned(seed, target)
+    shutil.rmtree(target, ignore_errors=True)
+    write_delta_table(with_month(seed), target, partition_by=[MONTH_COL])
 
     stream = _normalize_nanos(
         spark.readStream.schema(raw_schema).parquet(stream_dir), nanos_cols
@@ -128,7 +133,7 @@ def stream_cdc_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
 
     return (
-        spark.read.parquet(target)
+        read_delta_table(spark, target)
         .groupBy("datekey")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -68,12 +68,12 @@ def _tail_fixture(spark: SparkSession, sf_dir: str) -> str:
     landing cadence a downstream tail consumes."""
     import shutil
 
-    from etl_loading_scripts_spark.operators.cow import _with_month
     from etl_loading_scripts_spark.operators.deltalog import (
         _all_versions,
         _fixture_dir,
         write_delta_table,
     )
+    from etl_loading_scripts_spark.sources.io import with_month
 
     root = _fixture_dir(sf_dir, tag="pstream_tail")
     d = os.path.join(root, "fact")
@@ -83,7 +83,7 @@ def _tail_fixture(spark: SparkSession, sf_dir: str) -> str:
         shutil.rmtree(root)
     fact = _orders_fact(spark, sf_dir)
     months = _first_months(fact, _TAIL_MONTHS)
-    frame = _with_month(fact, "datekey")
+    frame = with_month(fact, "datekey")
     write_delta_table(
         frame.filter(F.col("month") == months[0]), d, partition_by=["month"]
     )
@@ -97,13 +97,13 @@ def _cdc_fixture(spark: SparkSession, sf_dir: str) -> str:
     MERGE updating every k%3==0 row of the FIRST month (+1000) — v1."""
     import shutil
 
-    from etl_loading_scripts_spark.operators.cow import _with_month
     from etl_loading_scripts_spark.operators.deltalog import (
         _all_versions,
         _fixture_dir,
         merge_cow_deltalog,
         write_delta_table,
     )
+    from etl_loading_scripts_spark.sources.io import with_month
 
     root = _fixture_dir(sf_dir, tag="pstream_cdc")
     d = os.path.join(root, "fact")
@@ -116,7 +116,7 @@ def _cdc_fixture(spark: SparkSession, sf_dir: str) -> str:
     base = fact.filter(
         ((F.col("datekey") / 100).cast("int")).isin([m1, m2])
     )
-    write_delta_table(_with_month(base, "datekey"), d, partition_by=["month"])
+    write_delta_table(with_month(base, "datekey"), d, partition_by=["month"])
     src = base.filter(
         ((F.col("datekey") / 100).cast("int") == m1) & (F.col("k") % 3 == 0)
     ).withColumn("amount", F.col("amount") + 1000)

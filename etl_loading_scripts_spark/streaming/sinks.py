@@ -1,26 +1,26 @@
-"""Streaming sinks: merge each micro-batch into a persisted table.
+"""Streaming sinks: merge each micro-batch into a Delta table.
 
 The reference's dimension-maintenance MERGE (O4) lifted to Structured
 Streaming: ``foreachBatch`` hands every micro-batch to the same join-based
-``merge_upsert`` used in batch, and the result is republished atomically.
-This is the standard "streaming upsert" topology (Kafka → dim table) that
-Delta's ``MERGE INTO`` serves natively — ``merge_upsert_delta`` slots in
-unchanged when delta-spark is present.
+``merge_upsert`` used in batch, executed against the delta log
+(``operators/deltalog.merge_upsert_deltalog``), so each micro-batch
+commits as ONE Delta version. This is the standard "streaming upsert"
+topology (Kafka → dim table) that Delta's ``MERGE INTO`` serves natively.
 
-Exactly-once: the parquet fallback is at-least-once across restarts (a
-batch can re-merge after a crash between publish and checkpoint commit) —
-but ``merge_upsert`` is idempotent on its keys, so replays converge.
-Delta's txn log upgrades this to exactly-once.
+Replay: a batch re-run after a crash between its Delta commit and the
+stream's checkpoint commit merges again as a new version — the merge is
+idempotent on its keys, so the table converges to the same rows.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_loading_scripts_spark.operators.mutations import merge_upsert
-from etl_loading_scripts_spark.operators.publish import publish_table
+from etl_loading_scripts_spark.operators.deltalog import (
+    _all_versions,
+    merge_upsert_deltalog,
+    write_delta_table,
+)
 
 
 def foreach_batch_upsert(
@@ -30,7 +30,7 @@ def foreach_batch_upsert(
     transform=None,
 ):
     """Build a ``foreachBatch`` callback that merges each micro-batch into
-    the parquet table at ``target_path``.
+    the Delta table at ``target_path`` (created by the first batch).
 
     ``transform`` (optional) pre-aggregates the raw batch — e.g. per-key
     totals — before the merge; it must emit one row per key (merge_upsert's
@@ -43,14 +43,9 @@ def foreach_batch_upsert(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch = transform(batch_df) if transform is not None else batch_df
-        if os.path.exists(target_path):
-            target = spark.read.parquet(target_path)
-            merged = merge_upsert(target, batch, on=on)
+        if _all_versions(target_path):
+            merge_upsert_deltalog(spark, target_path, batch, on=on)
         else:
-            merged = batch
-        # the merge plan lazily reads target_path; materialize via the
-        # atomic publish (write tmp → swap) so we never overwrite an input
-        # we are still reading
-        publish_table(merged, target_path)
+            write_delta_table(batch, target_path)
 
     return _apply

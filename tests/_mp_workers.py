@@ -67,25 +67,6 @@ def publish_deltalog_race(base: str, writer: int) -> None:
         )
 
 
-def publish_set_race(base: str, writer: int) -> None:
-    """Two manifest-layout set publishes (operators/publish.publish_set);
-    the atomic mkdir version claim must serialize racing publishers."""
-    from etl_loading_scripts_spark.operators.publish import publish_set
-
-    spark = _spark(writer)
-    for i in range(2):
-        tag = writer * 10 + i
-        publish_set(
-            {
-                "fact": spark.createDataFrame(
-                    [(1, tag), (2, tag)], "k long, run long"
-                ),
-                "dim": spark.createDataFrame([(9, tag)], "d long, run long"),
-            },
-            base,
-        )
-
-
 def cow_disjoint_race(table: str, writer: int) -> None:
     """Two writers merge DISJOINT months of one partitioned table,
     sync-started so their commits race: the disjoint-commit OCC

@@ -1,18 +1,22 @@
 """Small-file compaction: physical-layout proofs the hash oracle can't see.
 
-Contract (operators/compaction.py): bin-pack fragmented partitions to
-~target-size files, change zero rows, skip partitions already laid out
-well (byte-identical), split whale partitions instead of producing one
-giant file, and commit through the COW two-phase sweep.
+Contract (``operators/deltalog.optimize_delta``): bin-pack fragmented
+partitions of a Delta table into few files in one ``dataChange=false``
+version, change zero rows, skip partitions already laid out well
+(byte-identical), and split whale partitions by a row target instead of
+producing one giant file.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from test_cow import _month_files, _rows  # pytest rootdir import
 
-from etl_loading_scripts_spark.operators.compaction import compact_partition_files
-from etl_loading_scripts_spark.operators.cow import list_partition_files
-from etl_loading_scripts_spark.sources.io import write_fact_partitioned
+from etl_loading_scripts_spark.operators.deltalog import (
+    optimize_delta,
+    read_delta_table,
+    write_delta_table,
+)
+from etl_loading_scripts_spark.sources.io import MONTH_COL, with_month
 
 
 def _seed_fragmented(spark, path: str, rows_per_month: int = 300):
@@ -23,72 +27,65 @@ def _seed_fragmented(spark, path: str, rows_per_month: int = 300):
     ]
     df = spark.createDataFrame(rows, "k BIGINT, datekey INT, amount DOUBLE")
     # 8 writer tasks per month -> 8 files per partition
-    write_fact_partitioned(df.repartition(8, "k"), path, compact=False)
+    write_delta_table(
+        with_month(df.repartition(8, "k")), path, partition_by=[MONTH_COL]
+    )
     return df
 
 
 def test_compaction_merges_files_and_preserves_rows(spark, tmp_path):
     path = str(tmp_path / "fact")
-    df = _seed_fragmented(spark, path)
-    before = list_partition_files(spark, path)
+    _seed_fragmented(spark, path)
+    before = _month_files(path)
     assert all(len(files) == 8 for files in before.values())
-    rows_before = {
-        (r.k, r.datekey, r.amount) for r in spark.read.parquet(path).collect()
-    }
+    rows_before = _rows(spark, path)
 
-    stats = compact_partition_files(spark, path)
-    assert sorted(stats["months_compacted"]) == [202401, 202402, 202403]
-    assert stats["files_before"] == 24
-    after = list_partition_files(spark, path)
+    stats = optimize_delta(spark, path)
+    assert stats["partitions_touched"] == 3
+    assert stats["files_removed"] == 24
+    after = _month_files(path)
+    assert sorted(after) == [202401, 202402, 202403]
     assert all(len(files) == 1 for files in after.values())
-    assert stats["files_after"] == 3
-    rows_after = {
-        (r.k, r.datekey, r.amount) for r in spark.read.parquet(path).collect()
-    }
-    assert rows_after == rows_before  # zero rows changed
+    assert stats["files_added"] == 3
+    assert _rows(spark, path) == rows_before  # zero rows changed
 
 
 def test_compaction_skips_already_compact_months(spark, tmp_path):
-    """Second run: everything is at target layout -> all skipped, every
-    file byte-identical (compaction must not churn good layout)."""
+    """Second run: everything is at target layout -> nothing to do, no
+    commit, every file byte-identical (compaction must not churn good
+    layout)."""
     path = str(tmp_path / "fact")
     _seed_fragmented(spark, path)
-    compact_partition_files(spark, path)
-    before = list_partition_files(spark, path)
+    optimize_delta(spark, path)
+    before = _month_files(path)
 
-    stats = compact_partition_files(spark, path)
-    assert stats["months_compacted"] == []
-    assert sorted(stats["months_skipped"]) == [202401, 202402, 202403]
-    assert list_partition_files(spark, path) == before
+    stats = optimize_delta(spark, path)
+    assert stats["version"] is None
+    assert stats["partitions_touched"] == 0
+    assert _month_files(path) == before
 
 
 def test_compaction_scoped_months_leave_others_untouched(spark, tmp_path):
     path = str(tmp_path / "fact")
     _seed_fragmented(spark, path)
-    before = list_partition_files(spark, path)
+    before = _month_files(path)
 
-    stats = compact_partition_files(spark, path, months=[202402])
-    assert stats["months_compacted"] == [202402]
-    after = list_partition_files(spark, path)
+    stats = optimize_delta(spark, path, partition_filter={MONTH_COL: 202402})
+    assert stats["partitions_touched"] == 1
+    after = _month_files(path)
     assert after[202401] == before[202401]
     assert after[202403] == before[202403]
     assert len(after[202402]) == 1
 
 
 def test_compaction_splits_whale_months(spark, tmp_path):
-    """A tiny target_bytes forces a month to SPLIT into several
-    target-size files rather than one giant file."""
+    """A row target below a month's size forces the month to SPLIT into
+    several files rather than one giant file."""
     path = str(tmp_path / "fact")
     _seed_fragmented(spark, path, rows_per_month=2000)
-    total = sum(
-        sz for files in list_partition_files(spark, path).values()
-        for (_, sz, _) in files
-    )
-    target = total // 12  # aim for ~4 files per month
-    stats = compact_partition_files(spark, path, target_bytes=target)
-    after = list_partition_files(spark, path)
-    assert stats["months_compacted"], stats
-    for m in stats["months_compacted"]:
+    stats = optimize_delta(spark, path, target_file_rows=500)  # ~4 per month
+    after = _month_files(path)
+    assert stats["partitions_touched"] == 3
+    for m in (202401, 202402, 202403):
         assert 2 <= len(after[m]) <= 8
-    n = spark.read.parquet(path).count()
-    assert n == 6000
+    assert read_delta_table(spark, path).count() == 6000

@@ -1,25 +1,40 @@
-"""Copy-on-write partition mutations: file-level rewrite proofs.
+"""Month-grain copy-on-write mutations through the delta log.
 
-The contract under test is the one Delta/Iceberg would give us natively
-(environment blocker, BASELINE.md): a MERGE/DELETE against the
-month-partitioned fact touches ONLY the affected months' files — every
-other partition stays byte-identical (same file names, sizes, mtimes) —
-and semantics match the join-based ``merge_upsert`` (VERDICT r2 item 4's
-"own-oracle" strategy, reference shape ``P-SF:95-202``).
+The contract under test: a MERGE/DELETE against the month-partitioned
+Delta fact commits ONE version that touches ONLY the affected months'
+files — every other month's files stay referenced and byte-identical
+(same names, sizes, mtimes) — with semantics equal to the join-based
+``merge_upsert`` (the "own-oracle" strategy, reference shape
+``P-SF:95-202``). Also here: the CDC bridge and the multi-table set
+publish built on the same log, and the registry entries that exercise
+them, hash-compared with their DuckDB oracles.
 """
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from etl_loading_scripts_spark.operators.cow import (
-    delete_cow_partitioned,
-    list_partition_files,
-    merge_cow_partitioned,
+from etl_loading_scripts_spark.operators.deltalog import (
+    _all_versions,
+    _snapshot_state,
+    delete_delta,
+    merge_cow_deltalog,
+    publish_set_deltalog,
+    read_delta_table,
+    read_published_set_deltalog,
+    vacuum_delta,
+    vacuum_published_set,
+    write_delta_table,
 )
 from etl_loading_scripts_spark.operators.mutations import merge_upsert
-from etl_loading_scripts_spark.sources.io import write_fact_partitioned
+from etl_loading_scripts_spark.sources.io import MONTH_COL, with_month
+
+
+def _write_fact(df, path: str) -> None:
+    write_delta_table(with_month(df), path, partition_by=[MONTH_COL])
 
 
 def _seed_table(spark, path: str):
@@ -32,31 +47,49 @@ def _seed_table(spark, path: str):
         for k in (1, 2, 3)
     ]
     df = spark.createDataFrame(rows, "k BIGINT, datekey INT, amount DOUBLE")
-    write_fact_partitioned(df, path)
+    _write_fact(df, path)
     return df
 
 
-def _rows(spark, path):
+def _rows(spark, path, version=None):
     return {
         (r.k, r.datekey, r.amount)
-        for r in spark.read.parquet(path).select("k", "datekey", "amount").collect()
+        for r in read_delta_table(spark, path, version=version)
+        .select("k", "datekey", "amount")
+        .collect()
     }
+
+
+def _month_files(path: str) -> dict[int, list[tuple[str, int, int]]]:
+    """{month: [(file, size bytes, mtime ns), …]} of the latest snapshot
+    — the byte-level audit trail proving untouched months kept their
+    files."""
+    active, _, _ = _snapshot_state(path, None)
+    out: dict[int, list[tuple[str, int, int]]] = {}
+    for p, a in active.items():
+        st = os.stat(os.path.join(path, p))
+        out.setdefault(int(a["partitionValues"][MONTH_COL]), []).append(
+            (p, st.st_size, st.st_mtime_ns)
+        )
+    return {m: sorted(v) for m, v in out.items()}
 
 
 def test_merge_cow_rewrites_only_source_months(spark, tmp_path):
     path = str(tmp_path / "fact")
     _seed_table(spark, path)
-    before = list_partition_files(spark, path)
+    before = _month_files(path)
 
     # source touches ONLY month 202402: update k=1, insert k=9
     src = spark.createDataFrame(
         [(1, 20240215, 999.0), (9, 20240216, 555.0)],
         "k BIGINT, datekey INT, amount DOUBLE",
     )
-    stats = merge_cow_partitioned(spark, path, src, on=["k"])
-    assert stats == {"months_rewritten": [202402], "months_emptied": []}
+    stats = merge_cow_deltalog(spark, path, src, on=["k"])
+    assert stats["version"] == 1
+    assert stats["months_rewritten"] == [202402]
+    assert stats["months_emptied"] == []
 
-    after = list_partition_files(spark, path)
+    after = _month_files(path)
     # untouched months: byte-identical file listings (names, sizes, mtimes)
     assert after[202401] == before[202401]
     assert after[202403] == before[202403]
@@ -84,9 +117,7 @@ def test_merge_cow_month_scoped_sync_matches_merge_upsert(spark, tmp_path):
     src = spark.createDataFrame(
         [(2, 20240212, 777.0)], "k BIGINT, datekey INT, amount DOUBLE"
     )
-    merge_cow_partitioned(
-        spark, path, src, on=["k"], delete_unmatched_source=True
-    )
+    merge_cow_deltalog(spark, path, src, on=["k"], delete_unmatched_source=True)
 
     month2 = seed.filter((F.col("datekey") / 100).cast("int") == 202402)
     expect2 = {
@@ -107,18 +138,16 @@ def test_delete_cow_removes_emptied_partition(spark, tmp_path):
     _seed_table(spark, path)
 
     # purge: all of month 202401, plus k=3 everywhere (a GDPR-style sweep)
-    stats = delete_cow_partitioned(
+    stats = delete_delta(
         spark,
         path,
         ((F.col("datekey") / 100).cast("int") == 202401) | (F.col("k") == 3),
     )
-    assert stats["months_scanned"] == [202401, 202402, 202403]
-    assert stats["months_emptied"] == [202401]
-    assert sorted(stats["months_rewritten"]) == [202402, 202403]
+    assert stats["version"] == 1
     assert stats["rows_deleted"] == 5
 
-    after = list_partition_files(spark, path)
-    assert 202401 not in after
+    # the emptied month keeps no active file in the new version
+    assert sorted(_month_files(path)) == [202402, 202403]
     got = _rows(spark, path)
     assert got == {
         (1, 20240211, 201.0), (2, 20240212, 202.0),
@@ -129,13 +158,13 @@ def test_delete_cow_removes_emptied_partition(spark, tmp_path):
 def test_delete_cow_month_scoped_leaves_other_months_untouched(spark, tmp_path):
     path = str(tmp_path / "fact")
     _seed_table(spark, path)
-    before = list_partition_files(spark, path)
+    before = _month_files(path)
 
-    stats = delete_cow_partitioned(
-        spark, path, F.col("k") == 1, months=[202402]
+    stats = delete_delta(
+        spark, path, (F.col("k") == 1) & (F.col(MONTH_COL) == 202402)
     )
     assert stats["rows_deleted"] == 1
-    after = list_partition_files(spark, path)
+    after = _month_files(path)
     assert after[202401] == before[202401]
     assert after[202403] == before[202403]
     # k=1 survives in the months outside the window
@@ -146,11 +175,22 @@ def test_delete_cow_month_scoped_leaves_other_months_untouched(spark, tmp_path):
 def test_merge_cow_empty_source_is_noop(spark, tmp_path):
     path = str(tmp_path / "fact")
     _seed_table(spark, path)
-    before = list_partition_files(spark, path)
+    before = _month_files(path)
     src = spark.createDataFrame([], "k BIGINT, datekey INT, amount DOUBLE")
-    stats = merge_cow_partitioned(spark, path, src, on=["k"])
-    assert stats == {"months_rewritten": [], "months_emptied": []}
-    assert list_partition_files(spark, path) == before
+    stats = merge_cow_deltalog(spark, path, src, on=["k"])
+    assert stats["version"] is None
+    assert stats["months_rewritten"] == [] and stats["months_emptied"] == []
+    assert _all_versions(path) == [0]  # no commit at all
+    assert _month_files(path) == before
+
+
+def _changelog_state(spark, path):
+    return {
+        (r.event_id, r.datekey, str(r.value))
+        for r in read_delta_table(spark, path)
+        .select("event_id", "datekey", "value")
+        .collect()
+    }
 
 
 def test_cdc_batch_split_invariance(spark, tmp_path, sf_dir):
@@ -158,7 +198,6 @@ def test_cdc_batch_split_invariance(spark, tmp_path, sf_dir):
     reaches the identical table — the exactly-once story of the CDC
     bridge rests on per-key idempotence, not on batch boundaries."""
     from etl_loading_scripts_spark.catalog import load_table
-    from etl_loading_scripts_spark.sources.io import write_fact_partitioned
     from etl_loading_scripts_spark.streaming.cdc_bridge import (
         _event_changelog,
         apply_changelog_batch,
@@ -173,23 +212,18 @@ def test_cdc_batch_split_invariance(spark, tmp_path, sf_dir):
 
     paths = [str(tmp_path / "one"), str(tmp_path / "two")]
     for p in paths:
-        write_fact_partitioned(seed, p)
+        _write_fact(seed, p)
 
     apply_changelog_batch(spark, paths[0], events)
     apply_changelog_batch(spark, paths[1], events.filter(F.col("event_id") % 2 == 0))
     apply_changelog_batch(spark, paths[1], events.filter(F.col("event_id") % 2 != 0))
 
-    def state(p):
-        return {
-            (r.event_id, r.datekey, str(r.value))
-            for r in spark.read.parquet(p)
-            .select("event_id", "datekey", "value")
-            .collect()
-        }
-
-    s1, s2 = state(paths[0]), state(paths[1])
+    s1, s2 = _changelog_state(spark, paths[0]), _changelog_state(spark, paths[1])
     assert s1 == s2
     assert len(s1) == 300  # every event healed or inserted exactly once
+    # each batch is one Delta version on top of the seed
+    assert _all_versions(paths[0]) == [0, 1]
+    assert _all_versions(paths[1]) == [0, 1, 2]
 
 
 def test_merge_cow_multi_month_source_matches_per_month(spark, tmp_path):
@@ -204,7 +238,7 @@ def test_merge_cow_multi_month_source_matches_per_month(spark, tmp_path):
         [(1, 20240111, 111.0), (1, 20240211, 222.0)],
         "k BIGINT, datekey INT, amount DOUBLE",
     )
-    stats = merge_cow_partitioned(spark, path, src, on=["k"])
+    stats = merge_cow_deltalog(spark, path, src, on=["k"])
     assert stats["months_rewritten"] == [202401, 202402]
 
     got = _rows(spark, path)
@@ -225,7 +259,7 @@ def test_merge_cow_source_schema_drift(spark, tmp_path):
         [(1, 20240215, "noise"), (9, 20240216, "noise")],
         "k BIGINT, datekey INT, junk STRING",
     )
-    merge_cow_partitioned(
+    merge_cow_deltalog(
         spark,
         path,
         src,
@@ -246,7 +280,6 @@ def test_cdc_stream_multi_batch_real_streaming(spark, tmp_path, sf_dir):
     micro-batches through foreachBatch, and the healed table equals the
     single-batch application."""
     from etl_loading_scripts_spark.catalog import load_table
-    from etl_loading_scripts_spark.sources.io import write_fact_partitioned
     from etl_loading_scripts_spark.streaming.cdc_bridge import (
         _event_changelog,
         apply_changelog_batch,
@@ -268,7 +301,7 @@ def test_cdc_stream_multi_batch_real_streaming(spark, tmp_path, sf_dir):
     streamed = str(tmp_path / "streamed")
     reference = str(tmp_path / "reference")
     for p in (streamed, reference):
-        write_fact_partitioned(seed, p)
+        _write_fact(seed, p)
 
     n_batches = []
     stream = spark.readStream.schema(events.schema).option(
@@ -289,199 +322,140 @@ def test_cdc_stream_multi_batch_real_streaming(spark, tmp_path, sf_dir):
 
     apply_changelog_batch(spark, reference, events)
 
-    def state(p):
-        return {
-            (r.event_id, r.datekey, str(r.value))
-            for r in spark.read.parquet(p)
-            .select("event_id", "datekey", "value")
-            .collect()
-        }
-
-    assert state(streamed) == state(reference)
-    assert len(state(streamed)) == 300
+    assert _changelog_state(spark, streamed) == _changelog_state(spark, reference)
+    assert len(_changelog_state(spark, streamed)) == 300
+    events.unpersist()
 
 
 def test_merge_cow_recovers_from_stale_staging(spark, tmp_path):
-    """A crashed prior run leaves .cow_staging behind; the next merge
-    must clear it, commit cleanly, and leave no staging residue."""
-    import os
+    """A crashed prior run leaves staged-but-uncommitted files behind (a
+    ``.staging-*`` dir and an orphan data file inside a month dir): the
+    next merge ignores them and commits cleanly, readers never see the
+    orphan, and vacuum_delta sweeps the debris."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     path = str(tmp_path / "fact")
     _seed_table(spark, path)
-    stale = os.path.join(path, ".cow_staging", "month=202402")
+    stale = os.path.join(path, ".staging-dead", f"{MONTH_COL}=202402")
     os.makedirs(stale)
     with open(os.path.join(stale, "junk.parquet"), "w") as fh:
         fh.write("not parquet")
+    orphan = os.path.join(path, f"{MONTH_COL}=202402", "part-orphan.parquet")
+    pq.write_table(
+        pa.table({
+            "k": pa.array([7], pa.int64()),
+            "datekey": pa.array([20240217], pa.int32()),
+            "amount": pa.array([777.0], pa.float64()),
+        }),
+        orphan,
+    )
 
     src = spark.createDataFrame(
         [(1, 20240215, 999.0)], "k BIGINT, datekey INT, amount DOUBLE"
     )
-    stats = merge_cow_partitioned(spark, path, src, on=["k"])
+    stats = merge_cow_deltalog(spark, path, src, on=["k"])
     assert stats["months_rewritten"] == [202402]
-    assert not os.path.exists(os.path.join(path, ".cow_staging"))
+    got = {t for t in _rows(spark, path) if t[1] // 100 == 202402}
+    assert got == {(1, 20240215, 999.0), (2, 20240212, 202.0), (3, 20240213, 203.0)}
+
+    removed = vacuum_delta(path, staging_retention_sec=0)
+    assert not os.path.exists(orphan)
+    assert not os.path.exists(os.path.join(path, ".staging-dead"))
+    assert any("part-orphan.parquet" in r for r in removed)
+    assert _rows(spark, path) == _rows(spark, path, version=stats["version"])
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash():
+    raise _Crash("writer died before its commit")
+
+
+def test_crash_with_incomplete_staging_rolls_back(spark, tmp_path):
+    """The writer dies while staging (a half-written staging dir holding
+    the new month, no commit): no version references it, so a reader
+    sees the complete OLD month — the crash rolls back by construction;
+    a retry of the merge then re-does the mutation as the next version."""
+    path = str(tmp_path / "fact")
+    _seed_table(spark, path)
+    old = _rows(spark, path)
+    src = spark.createDataFrame(
+        [(1, 20240215, 999.0)], "k BIGINT, datekey INT, amount DOUBLE"
+    )
+    with_month(src).write.partitionBy(MONTH_COL).parquet(
+        os.path.join(path, ".staging-crashed")
+    )
+    os.remove(os.path.join(path, ".staging-crashed", "_SUCCESS"))
+    assert _all_versions(path) == [0]
+    assert _rows(spark, path) == old
+
+    stats = merge_cow_deltalog(spark, path, src, on=["k"])
+    assert stats["version"] == 1
     got = {t for t in _rows(spark, path) if t[1] // 100 == 202402}
     assert got == {(1, 20240215, 999.0), (2, 20240212, 202.0), (3, 20240213, 203.0)}
 
 
-def _park_old_month(path: str, month: int) -> None:
-    """Simulate the commit crashing right after phase 1: the live month
-    dir has been renamed aside into .cow_old and nothing else ran."""
-    import os
-
-    os.makedirs(os.path.join(path, ".cow_old"), exist_ok=True)
-    os.rename(
-        os.path.join(path, f"month={month}"),
-        os.path.join(path, ".cow_old", f"month={month}"),
-    )
-
-
-def _stage_month(spark, path: str, rows, complete: bool = True) -> None:
-    """Write a staged month the way merge_cow_partitioned does (real
-    parquet + root _SUCCESS); complete=False simulates a staging write
-    that itself died (no _SUCCESS marker)."""
-    import os
-
-    df = spark.createDataFrame(rows, "k BIGINT, datekey INT, amount DOUBLE")
-    df.withColumn("month", (F.col("datekey") / 100).cast("int")).repartition(
-        1
-    ).write.partitionBy("month").parquet(os.path.join(path, ".cow_staging"))
-    if not complete:
-        os.remove(os.path.join(path, ".cow_staging", "_SUCCESS"))
-
-
-def test_crash_between_renames_rolls_forward(spark, tmp_path):
-    """Crash in the narrowest window — old parked, staged complete, new
-    not yet renamed in — must roll FORWARD: the reader sees the NEW
-    month, and the month is never absent (VERDICT r3 item 1)."""
-    import os
-
-    from etl_loading_scripts_spark.operators.cow import recover_cow_commit
-
-    path = str(tmp_path / "fact")
-    _seed_table(spark, path)
-    _stage_month(spark, path, [(1, 20240215, 999.0)])
-    _park_old_month(path, 202402)
-    assert not os.path.exists(os.path.join(path, "month=202402"))  # the r3 hole
-
-    stats = recover_cow_commit(spark, path)
-    assert stats == {"rolled_forward": [202402], "rolled_back": []}
-    assert os.path.exists(os.path.join(path, "month=202402"))
-    assert not os.path.exists(os.path.join(path, ".cow_old"))
-    assert not os.path.exists(os.path.join(path, ".cow_staging"))
-    got = {t for t in _rows(spark, path) if t[1] // 100 == 202402}
-    assert got == {(1, 20240215, 999.0)}  # complete new contents
-
-
-def test_crash_with_incomplete_staging_rolls_back(spark, tmp_path):
-    """Old parked but the staged copy never finished (no _SUCCESS): roll
-    BACK — the reader sees the complete OLD month; a retry of the merge
-    re-does the mutation."""
-    import os
-
-    from etl_loading_scripts_spark.operators.cow import recover_cow_commit
-
-    path = str(tmp_path / "fact")
-    _seed_table(spark, path)
-    _stage_month(spark, path, [(1, 20240215, 999.0)], complete=False)
-    _park_old_month(path, 202402)
-
-    stats = recover_cow_commit(spark, path)
-    assert stats == {"rolled_forward": [], "rolled_back": [202402]}
-    got = {t for t in _rows(spark, path) if t[1] // 100 == 202402}
-    assert got == {
-        (1, 20240211, 201.0), (2, 20240212, 202.0), (3, 20240213, 203.0),
-    }  # complete old contents
-    assert not os.path.exists(os.path.join(path, ".cow_old"))
-    assert not os.path.exists(os.path.join(path, ".cow_staging"))
-
-
 def test_crash_after_commit_before_cleanup_drops_parked_old(spark, tmp_path):
-    """Crash between phase 2 and phase 3: new month already live, old
-    copy still parked — recovery just finishes the cleanup and the NEW
-    data stays."""
-    import os
-    import shutil
-
-    from etl_loading_scripts_spark.operators.cow import recover_cow_commit
-
+    """Once the commit lands the new month is live even if the writer
+    dies right after: the old month's files are only PARKED (removed
+    from the snapshot, still on disk for time travel), and vacuum_delta
+    drops them once they fall out of the keep window."""
     path = str(tmp_path / "fact")
     _seed_table(spark, path)
-    _stage_month(spark, path, [(1, 20240215, 999.0)])
-    _park_old_month(path, 202402)
-    # phase 2 ran: staged month renamed into place
-    os.rename(
-        os.path.join(path, ".cow_staging", "month=202402"),
-        os.path.join(path, "month=202402"),
+    old_files = [p for p, _, _ in _month_files(path)[202402]]
+    src = spark.createDataFrame(
+        [(1, 20240215, 999.0)], "k BIGINT, datekey INT, amount DOUBLE"
     )
-    shutil.rmtree(os.path.join(path, ".cow_staging"))
-
-    stats = recover_cow_commit(spark, path)
-    assert stats == {"rolled_forward": [202402], "rolled_back": []}
+    merge_cow_deltalog(spark, path, src, on=["k"])
+    assert all(os.path.exists(os.path.join(path, p)) for p in old_files)
     got = {t for t in _rows(spark, path) if t[1] // 100 == 202402}
-    assert got == {(1, 20240215, 999.0)}
-    assert not os.path.exists(os.path.join(path, ".cow_old"))
+    assert (1, 20240215, 999.0) in got and (1, 20240211, 201.0) not in got
+    assert (1, 20240211, 201.0) in _rows(spark, path, version=0)
+
+    live = _rows(spark, path)
+    vacuum_delta(path, keep_versions=1, staging_retention_sec=0)
+    assert not any(os.path.exists(os.path.join(path, p)) for p in old_files)
+    assert _rows(spark, path) == live
 
 
 def test_next_merge_auto_recovers_crash_state(spark, tmp_path):
-    """A merge issued AFTER a crash (old parked, staging complete) first
-    rolls the dangling commit forward, then applies its own source — no
-    manual recovery step, no lost month."""
+    """A merge issued AFTER a crashed one (staged files, no commit) needs
+    no recovery step: it merges from the last committed version, and the
+    dead merge's staged rows never surface."""
     path = str(tmp_path / "fact")
     _seed_table(spark, path)
-    _stage_month(spark, path, [(1, 20240215, 999.0)])
-    _park_old_month(path, 202402)
+    dead = spark.createDataFrame(
+        [(1, 20240215, 999.0)], "k BIGINT, datekey INT, amount DOUBLE"
+    )
+    with pytest.raises(_Crash):
+        merge_cow_deltalog(spark, path, dead, on=["k"], _pre_commit_hook=_crash)
 
     src = spark.createDataFrame(
         [(9, 20240216, 555.0)], "k BIGINT, datekey INT, amount DOUBLE"
     )
-    stats = merge_cow_partitioned(spark, path, src, on=["k"])
+    stats = merge_cow_deltalog(spark, path, src, on=["k"])
+    assert stats["version"] == 1
     assert stats["months_rewritten"] == [202402]
     got = {t for t in _rows(spark, path) if t[1] // 100 == 202402}
-    # rolled-forward crash state (k=1 updated, k=2/3 gone with the old
-    # month replaced by the staged copy) + this merge's insert
-    assert got == {(1, 20240215, 999.0), (9, 20240216, 555.0)}
-
-
-def test_vacuum_versions_survives_consecutive_crash_debris(spark, tmp_path):
-    """ADVICE r3 (medium): >= keep_last consecutive crashed publishes
-    must NOT let vacuum destroy every complete version; the _LATEST
-    target always survives."""
-    import os
-
-    from etl_loading_scripts_spark.operators.publish import (
-        publish_versioned,
-        read_versioned,
-        vacuum_versions,
-    )
-
-    base = str(tmp_path / "vtab")
-    df = spark.createDataFrame([(1, "a")], "id INT, v STRING")
-    publish_versioned(df, base)  # v=1, _LATEST -> 1
-    # three consecutive crashed publishes: partial dirs without _SUCCESS
-    for v in (2, 3, 4):
-        os.makedirs(os.path.join(base, f"v={v}"))
-        with open(os.path.join(base, f"v={v}", "part-junk.parquet"), "w") as fh:
-            fh.write("partial")
-
-    removed = vacuum_versions(base, keep_last=3)
-    # debris v=2, v=3 removed (v=4 is newest, kept as in-flight);
-    # v=1 — the only complete version and the _LATEST target — survives
-    assert removed == [2, 3]
-    assert os.path.isdir(os.path.join(base, "v=1"))
-    assert read_versioned(spark, base).count() == 1
+    assert got == {
+        (1, 20240211, 201.0), (2, 20240212, 202.0), (3, 20240213, 203.0),
+        (9, 20240216, 555.0),
+    }
 
 
 def test_merge_cow_quarter_rewrites_only_three_months(spark, tmp_path, sf_dir):
-    """VERDICT r3 item 7: a quarterly restatement over the real orders
-    fact (80 month partitions at this sf) rewrites EXACTLY the quarter's
-    3 partitions — all others byte-identical (names, sizes, mtimes)."""
+    """A quarterly restatement over the real orders fact (80 month
+    partitions at this sf) rewrites EXACTLY the quarter's 3 partitions
+    — all others byte-identical (names, sizes, mtimes)."""
     from etl_loading_scripts_spark.queries.cow_queries import _order_fact
-    from etl_loading_scripts_spark.sources.io import write_fact_partitioned
 
     path = str(tmp_path / "fact")
     base = _order_fact(spark, sf_dir)
-    write_fact_partitioned(base, path)
-    before = list_partition_files(spark, path)
+    _write_fact(base, path)
+    before = _month_files(path)
     assert len(before) >= 12  # plenty of untouched months in the fixture
 
     yq = (
@@ -497,9 +471,9 @@ def test_merge_cow_quarter_rewrites_only_three_months(spark, tmp_path, sf_dir):
     src = base.filter(yq == busiest_q).filter(F.col("k") % 3 == 0).withColumn(
         "price", (F.col("price") * 3).cast("decimal(18,4)")
     )
-    stats = merge_cow_partitioned(spark, path, src, on=["k"])
+    stats = merge_cow_deltalog(spark, path, src, on=["k"])
 
-    after = list_partition_files(spark, path)
+    after = _month_files(path)
     assert len(stats["months_rewritten"]) == 3
     assert stats["months_emptied"] == []
     untouched = [m for m in before if m not in stats["months_rewritten"]]
@@ -508,100 +482,6 @@ def test_merge_cow_quarter_rewrites_only_three_months(spark, tmp_path, sf_dir):
         assert after[m] == before[m], f"month {m} should be byte-identical"
     for m in stats["months_rewritten"]:
         assert after[m] != before[m]
-
-
-def test_missing_months_backfill_plan(spark, tmp_path):
-    from etl_loading_scripts_spark.operators.cow import missing_months
-
-    path = str(tmp_path / "fact")
-    _seed_table(spark, path)  # months 202401..202403
-    delete_cow_partitioned(
-        spark, path, F.lit(True), months=[202402]
-    )  # hole in the middle
-    assert missing_months(spark, path, 202311, 202404) == [
-        202311, 202312, 202402, 202404,
-    ]
-
-
-def test_recovery_invariant_over_random_crash_states(spark, tmp_path):
-    """Property: for EVERY combination of per-month crash phase (parked
-    with complete staging / parked with incomplete staging / committed
-    but old not cleaned), recovery leaves every month present with its
-    complete old or complete new contents — never absent, never mixed.
-
-    Phases are enumerated exhaustively over 3 months (27 states is
-    cheaper and stronger than sampling)."""
-    import itertools
-    import os
-    import shutil
-
-    from etl_loading_scripts_spark.operators.cow import recover_cow_commit
-
-    OLD = {
-        m: {(k, 20240000 + (m % 100) * 100 + 10 + k, float(m + k)) for k in (1, 2)}
-        for m in (202401, 202402, 202403)
-    }
-    NEW = {m: {(9, 20240000 + (m % 100) * 100 + 15, 999.0 + m)} for m in OLD}
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def write_month(root, m, rows, sub=""):
-        # direct pyarrow write: 27 crash states x several months each is
-        # far too many tiny Spark write jobs; Spark reads these fine
-        d = os.path.join(root, sub, f"month={m}") if sub else os.path.join(root, f"month={m}")
-        os.makedirs(d, exist_ok=True)
-        srt = sorted(rows)
-        tbl = pa.table(
-            {
-                "k": pa.array([r[0] for r in srt], pa.int64()),
-                "datekey": pa.array([r[1] for r in srt], pa.int32()),
-                "amount": pa.array([r[2] for r in srt], pa.float64()),
-            }
-        )
-        pq.write_table(tbl, os.path.join(d, "part-0.parquet"))
-
-    # phase meanings: 0 = parked + complete staging (roll FORWARD to new)
-    #                 1 = parked + staging incomplete (roll BACK to old)
-    #                 2 = committed, old copy still parked (keep new)
-    case_no = 0
-    for phases in itertools.product((0, 1, 2), repeat=3):
-        case_no += 1
-        path = str(tmp_path / f"fact_{case_no}")
-        staging = os.path.join(path, ".cow_staging")
-        old_root = os.path.join(path, ".cow_old")
-        os.makedirs(old_root)
-        any_incomplete_staging = 1 in phases
-        for m, ph in zip(sorted(OLD), phases):
-            # old month parked (phases 0/1) or cleanup-pending (phase 2)
-            write_month(path, m, OLD[m], sub=".cow_old")
-            if ph == 0:
-                write_month(path, m, NEW[m], sub=".cow_staging")
-            elif ph == 2:
-                write_month(path, m, NEW[m])
-        os.makedirs(staging, exist_ok=True)
-        if not any_incomplete_staging:
-            with open(os.path.join(staging, "_SUCCESS"), "w"):
-                pass
-
-        recover_cow_commit(spark, path)
-
-        assert not os.path.exists(old_root)
-        assert not os.path.exists(staging)
-        got_all = {
-            (r.k, r.datekey, r.amount)
-            for r in spark.read.parquet(path).collect()
-        }
-        for m, ph in zip(sorted(OLD), phases):
-            month_rows = {t for t in got_all if t[1] // 100 % 100 == m % 100}
-            # with an incomplete staging root, phase-0 months roll BACK
-            expect = (
-                NEW[m]
-                if (ph == 2 or (ph == 0 and not any_incomplete_staging))
-                else OLD[m]
-            )
-            assert month_rows == expect, (phases, m)
-        shutil.rmtree(path)
 
 
 # ---------------------------------------------------------------------------
@@ -619,185 +499,160 @@ def _two_tables(spark, tag: int):
     return {"dim": dim, "fact": fact}
 
 
-def _set_snapshot(spark, base):
-    from etl_loading_scripts_spark.operators.publish import read_published_set
-
-    tables = read_published_set(spark, base)
+def _set_snapshot(spark, base, version=None):
+    tables = read_published_set_deltalog(spark, base, version)
     return {
         name: {tuple(r) for r in df.collect()} for name, df in tables.items()
     }
 
 
 def test_publish_set_roundtrip_and_pinning(spark, tmp_path):
-    import pytest
-
-    from etl_loading_scripts_spark.operators.publish import (
-        publish_set,
-        read_published_set,
-    )
-
     base = str(tmp_path / "set")
-    v1 = publish_set(_two_tables(spark, 1), base)
-    v2 = publish_set(_two_tables(spark, 2), base)
-    assert (v1, v2) == (1, 2)
-    latest = read_published_set(spark, base)
+    v1 = publish_set_deltalog(_two_tables(spark, 1), base)
+    v2 = publish_set_deltalog(_two_tables(spark, 2), base)
+    assert (v1, v2) == (0, 1)
+    latest = read_published_set_deltalog(spark, base)
     assert {r.v for r in latest["fact"].collect()} == {200 + k for k in range(20)}
-    pinned = read_published_set(spark, base, version=1)
+    pinned = read_published_set_deltalog(spark, base, version=v1)
     assert {r.v for r in pinned["fact"].collect()} == {100 + k for k in range(20)}
-    with pytest.raises(FileNotFoundError):
-        read_published_set(spark, base, version=9)
-
-
-@pytest.mark.soak
-def test_multiprocess_publish_set_serializability(spark, tmp_path):
-    """Two OS PROCESSES (own JVMs) each run two publish_set calls
-    against one base dir: the atomic mkdir version CLAIM serializes
-    them — four distinct complete versions, each internally consistent
-    (fact and dim carry the same publish tag; pre-claim code let both
-    racers write into the same v=N and interleave part files), and
-    _LATEST lands on a complete version."""
-    import os
-
-    from etl_loading_scripts_spark.operators.publish import (
-        _set_versions,
-        read_published_set,
-    )
-    from test_deltalog import _run_workers  # pytest rootdir import
-
-    base = str(tmp_path / "mp_set")
-    _run_workers("publish_set_race", base)
-    vs = _set_versions(base)
-    assert vs == [1, 2, 3, 4]
-    tags = []
-    for v in vs:
-        t = read_published_set(spark, base, version=v)
-        fact_tags = {r.run for r in t["fact"].collect()}
-        dim_tags = {r.run for r in t["dim"].collect()}
-        assert len(fact_tags) == 1 and fact_tags == dim_tags, v  # never torn
-        tags.append(fact_tags.pop())
-    assert sorted(tags) == [0, 1, 10, 11]
-    with open(os.path.join(base, "_LATEST")) as fh:
-        assert int(fh.read().strip()) in vs
-    # latest read resolves without error (the pointer target is complete)
-    assert set(read_published_set(spark, base)) == {"fact", "dim"}
+    with pytest.raises(ValueError, match="set version 9"):
+        read_published_set_deltalog(spark, base, version=9)
 
 
 def test_publish_set_crash_never_tears_cross_table(spark, tmp_path):
     """The O10 guarantee: a crash at ANY point of publish N+1 leaves a
-    reader seeing version N for EVERY table — never a mixed set."""
-    import json
-    import os
-
-    from etl_loading_scripts_spark.operators.publish import publish_set
-
+    reader seeing set N for EVERY table — never a mixed set."""
     base = str(tmp_path / "set")
-    publish_set(_two_tables(spark, 1), base)
+    publish_set_deltalog(_two_tables(spark, 1), base)
     want = _set_snapshot(spark, base)
 
     t2 = _two_tables(spark, 2)
-    # crash A: first table of v2 written, second never started, no manifest
-    t2["dim"].write.parquet(os.path.join(base, "v=2", "dim"))
+    # crash A: first table of set 2 committed, second never started
+    write_delta_table(t2["dim"], os.path.join(base, "dim"))
     assert _set_snapshot(spark, base) == want
-    # crash B: all tables written, manifest written, pointer NOT flipped
-    t2["fact"].write.parquet(os.path.join(base, "v=2", "fact"))
-    with open(os.path.join(base, "v=2", "_SET_MANIFEST"), "w") as f:
-        json.dump({"version": 2, "tables": ["dim", "fact"]}, f)
+    # crash B: every table committed, coordinator commit never made
+    write_delta_table(t2["fact"], os.path.join(base, "fact"))
     assert _set_snapshot(spark, base) == want
-    # a retry after either crash skips past the debris and commits whole
-    v3 = publish_set(_two_tables(spark, 3), base)
-    assert v3 == 3
+    # a retry after either crash commits the whole next set
+    v = publish_set_deltalog(_two_tables(spark, 3), base)
+    assert v == 1
     got = _set_snapshot(spark, base)
     assert {r[1] for r in got["fact"]} == {300 + k for k in range(20)}
     assert all(name.startswith("dim3_") for _, name in got["dim"])
 
 
 def test_publish_set_incomplete_table_write_is_refused(spark, tmp_path):
-    """A manifest whose table lost its _SUCCESS marker (tampering /
+    """A set whose table lost the commit the set pins (tampering /
     partial restore) must refuse, not serve a torn table."""
-    import os
-
-    import pytest
-
-    from etl_loading_scripts_spark.operators.publish import (
-        publish_set,
-        read_published_set,
-    )
-
     base = str(tmp_path / "set")
-    publish_set(_two_tables(spark, 1), base)
-    os.remove(os.path.join(base, "v=1", "fact", "_SUCCESS"))
-    with pytest.raises(FileNotFoundError, match="incomplete"):
-        read_published_set(spark, base)
+    publish_set_deltalog(_two_tables(spark, 1), base)
+    os.remove(os.path.join(base, "fact", "_delta_log", f"{0:020d}.json"))
+    with pytest.raises(FileNotFoundError, match="no log"):
+        read_published_set_deltalog(spark, base)
 
 
 def test_vacuum_set_versions_pins_pointer_and_sweeps_debris(spark, tmp_path):
-    import os
-
-    from etl_loading_scripts_spark.operators.publish import (
-        publish_set,
-        read_published_set,
-        vacuum_set_versions,
-    )
-
+    """Set retention keeps the newest sets readable and retires older
+    ones; an orphan table version from a crashed publish (newer than
+    any set) survives, and the latest set still serves."""
     base = str(tmp_path / "set")
     for tag in (1, 2, 3, 4):
-        publish_set(_two_tables(spark, tag), base)
-    # debris: v5 half-written (one table, no manifest)
-    _two_tables(spark, 5)["dim"].write.parquet(os.path.join(base, "v=5", "dim"))
-    removed = vacuum_set_versions(base, keep_last=2)
-    # v1, v2 aged out; v5 debris survives only because it's newest
-    assert removed == [1, 2]
-    assert _set_snapshot(spark, base)  # latest (v4) still serves
-    # pin the pointer at v3 and vacuum hard: the target must survive
-    with open(os.path.join(base, "_LATEST"), "w") as f:
-        f.write("3")
-    removed = vacuum_set_versions(base, keep_last=1)
-    assert 3 not in removed
-    assert read_published_set(spark, base, version=3) is not None
+        publish_set_deltalog(_two_tables(spark, tag), base)
+    # debris: set 5 crashed after committing its dim table
+    write_delta_table(_two_tables(spark, 5)["dim"], os.path.join(base, "dim"))
+    rep = vacuum_published_set(base, keep_sets=2, staging_retention_sec=0)
+    assert rep["sets_retired"] == [0, 1]
+    latest = _set_snapshot(spark, base)
+    assert all(name.startswith("dim4_") for _, name in latest["dim"])
+    kept = _set_snapshot(spark, base, version=2)
+    assert {r[1] for r in kept["fact"]} == {300 + k for k in range(20)}
+    orphan = read_delta_table(spark, os.path.join(base, "dim"))
+    assert {r.name for r in orphan.collect()} == {f"dim5_{k}" for k in range(5)}
 
 
 @pytest.mark.soak
-def test_publish_monthly_set_commits_all_outputs_atomically(spark, sf_dir):
+def test_publish_monthly_set_commits_all_outputs_atomically(spark, sf_dir, tmp_path):
     """End-to-end: the monthly load's five outputs commit as one set and
     read back transactionally consistent (RI holds within the set)."""
-    import tempfile
-    import shutil as _sh
-
-    from etl_loading_scripts_spark.operators.publish import (
-        read_published_set,
+    from etl_loading_scripts_spark.operators.quality import (
         referential_integrity_check,
     )
     from etl_loading_scripts_spark.pipeline.domain import build_domain
     from etl_loading_scripts_spark.pipeline.monthly_load import (
         full_window,
-        publish_monthly_set,
         run_monthly_load,
     )
 
     dom = build_domain(spark, sf_dir)
     out, _metrics = run_monthly_load(spark, dom, full_window(dom))
-    base = tempfile.mkdtemp(prefix="pubset_")
-    try:
-        v = publish_monthly_set(out, base)
-        tables = read_published_set(spark, base)
-        assert set(tables) == {
-            "fact_transaction",
-            "dim_patron",
-            "dim_restaurant",
-            "dim_billing_group",
-            "pos_fingerprints",
-        }
-        assert v == 1
-        assert (
-            referential_integrity_check(
-                tables["fact_transaction"].filter(
-                    F.col("unique_patron_id").isNotNull()
-                ),
-                tables["dim_patron"],
-                "unique_patron_id",
-                "patron_id",
-            )
-            == 0
+    base = str(tmp_path / "pubset")
+    v = publish_set_deltalog(
+        [
+            ("fact_transaction", out.fact_transaction),
+            ("dim_patron", out.dim_patron),
+            ("dim_restaurant", out.dim_restaurant),
+            ("dim_billing_group", out.dim_billing_group),
+            ("pos_fingerprints", out.pos_fingerprints),
+        ],
+        base,
+    )
+    tables = read_published_set_deltalog(spark, base)
+    assert set(tables) == {
+        "fact_transaction",
+        "dim_patron",
+        "dim_restaurant",
+        "dim_billing_group",
+        "pos_fingerprints",
+    }
+    assert v == 0
+    assert (
+        referential_integrity_check(
+            tables["fact_transaction"].filter(
+                F.col("unique_patron_id").isNotNull()
+            ),
+            tables["dim_patron"],
+            "unique_patron_id",
+            "patron_id",
         )
-    finally:
-        _sh.rmtree(base, ignore_errors=True)
+        == 0
+    )
+
+
+# ---------------------------------------------------------------------------
+# The registry entries that commit through the delta log, against DuckDB
+# ---------------------------------------------------------------------------
+
+_DELTA_LOG_ENTRIES = [
+    "merge_cow_month",
+    "merge_cow_quarter",
+    "delete_cow_purge",
+    "compact_small_files",
+    "publish_set_atomic",
+    "stream_cdc_merge_cow",
+]
+
+
+@pytest.fixture(scope="module")
+def oracle(sf_dir):
+    import duckdb
+
+    from etl_loading_scripts_spark.catalog import TABLES, table_path
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
+        )
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", _DELTA_LOG_ENTRIES)
+def test_delta_log_entry_matches_oracle(spark, sf_dir, oracle, name):
+    """Row count, column names and order-insensitive value hash of the
+    entry equal its DuckDB oracle's (the sweep's comparison)."""
+    from etl_loading_scripts_spark.queries import REGISTRY
+    from tools.check_correctness import _canon
+
+    q = REGISTRY[name]
+    assert _canon(q.spark(spark, sf_dir)) == _canon(oracle.execute(q.oracle).fetchdf())

@@ -412,8 +412,8 @@ def test_stats_based_file_skipping(spark, tmp_path):
 
 
 def test_merge_cow_deltalog_rewrites_only_affected_months(spark, tmp_path):
-    """Month-grain COW through the log (the cow.py composition,
-    executed): a one-month source rewrites only that month's files in
+    """Month-grain COW through the log: a one-month source rewrites
+    only that month's files in
     ONE atomic version; untouched months' files stay REFERENCED and
     byte-identical; the pre-merge version time-travels."""
     from etl_loading_scripts_spark.operators import deltalog as dl
@@ -2689,7 +2689,7 @@ def test_publish_crashed_bootstrap_rebootstraps(spark, tmp_path):
     base = str(tmp_path / "pub")
     os.makedirs(base, exist_ok=True)
     fpath = os.path.join(base, "fact")
-    from etl_loading_scripts_spark.operators.cow import _with_month
+    from etl_loading_scripts_spark.sources.io import with_month
 
     # crash-sim: the bootstrap table write committed (poisoned amounts),
     # but no set commit ever happened
@@ -2697,7 +2697,7 @@ def test_publish_crashed_bootstrap_rebootstraps(spark, tmp_path):
         "amount", F.col("amount") + 5000
     )
     dl.write_delta_table(
-        _with_month(crashed, "datekey"), fpath, mode="overwrite",
+        with_month(crashed, "datekey"), fpath, mode="overwrite",
         partition_by=["month"],
     )
     fact = _incr_fact(spark, months=2, salt=3)
@@ -3258,7 +3258,7 @@ def test_publish_crashed_bootstrap_established_warehouse(spark, tmp_path):
     re-bootstrapped by the retry — the crashed overwrite's
     out-of-window months must NOT leak into the retry's merged set."""
     from etl_loading_scripts_spark.operators import deltalog as dl
-    from etl_loading_scripts_spark.operators.cow import _with_month
+    from etl_loading_scripts_spark.sources.io import with_month
 
     base = str(tmp_path / "pub")
     # the warehouse is ESTABLISHED by an unrelated table's set commit
@@ -3271,7 +3271,7 @@ def test_publish_crashed_bootstrap_established_warehouse(spark, tmp_path):
         "amount", F.col("amount") + 5000
     )
     dl.write_delta_table(
-        _with_month(crashed, "datekey"), fpath, mode="overwrite",
+        with_month(crashed, "datekey"), fpath, mode="overwrite",
         partition_by=["month"],
         operation_parameters={"publishSet": "true"},
     )
@@ -3294,7 +3294,7 @@ def test_publish_unstamped_foreign_table_never_overwritten(spark, tmp_path):
     table at the publish path (user-created) merges on top, keeping
     its out-of-window months."""
     from etl_loading_scripts_spark.operators import deltalog as dl
-    from etl_loading_scripts_spark.operators.cow import _with_month
+    from etl_loading_scripts_spark.sources.io import with_month
 
     base = str(tmp_path / "pub")
     dl.publish_set_deltalog(
@@ -3305,7 +3305,7 @@ def test_publish_unstamped_foreign_table_never_overwritten(spark, tmp_path):
         "amount", F.col("amount") + 5000
     )
     dl.write_delta_table(  # NOT stamped: a user-created table
-        _with_month(foreign, "datekey"), fpath, mode="overwrite",
+        with_month(foreign, "datekey"), fpath, mode="overwrite",
         partition_by=["month"],
     )
     fact = _incr_fact(spark, months=2, salt=3)
@@ -4307,10 +4307,10 @@ def test_stream_cdc_partitioned_month_cow(spark, tmp_path):
         [(i, 19900101 + (i % 2) * 100, i * 10) for i in range(10)],
         "txn_id long, datekey int, amount long",
     )
-    from etl_loading_scripts_spark.operators.cow import _with_month
+    from etl_loading_scripts_spark.sources.io import with_month
 
     dl.write_delta_table(
-        _with_month(fact, "datekey"), d, partition_by=["month"]
+        with_month(fact, "datekey"), d, partition_by=["month"]
     )
     dl.register_delta_stream_source(spark)
     # v1: month-scoped COW merge (update 2 rows in month 199001)

@@ -404,42 +404,6 @@ def test_merge_aggregates_equals_recompute(spark):
         )
 
 
-def test_vacuum_versions_keeps_recent_and_drops_debris(spark, tmp_path):
-    import os
-
-    from etl_loading_scripts_spark.operators.publish import (
-        publish_versioned,
-        read_versioned,
-        vacuum_versions,
-    )
-
-    base = str(tmp_path / "versions")
-    for i in range(5):
-        publish_versioned(spark.range(i + 1).toDF("n"), base)
-    # crash debris: an older partial version dir without _SUCCESS, plus a
-    # numerically-newest partial one (possibly in-flight — must survive)
-    os.makedirs(os.path.join(base, "v=3a", ""), exist_ok=True)  # ignored: not an int
-    os.makedirs(os.path.join(base, "v=99"))
-    removed = vacuum_versions(base, keep_last=2)
-    # keep window over COMPLETE versions only (ADVICE r3): {4, 5} — the
-    # incomplete v=99 cannot crowd readable history out of the window;
-    # 99 itself is protected as the numerically-newest (possibly
-    # in-flight) dir
-    assert removed == [1, 2, 3]
-    assert read_versioned(spark, base).count() == 5  # latest pointer intact
-    assert read_versioned(spark, base, version=4).count() == 4  # in window
-    assert os.path.isdir(os.path.join(base, "v=99"))  # in-flight untouched
-    try:
-        read_versioned(spark, base, version=2)
-        raise AssertionError("expected vacuumed version to be gone")
-    except FileNotFoundError:
-        pass
-    # a second pass after v=99 is abandoned (still no _SUCCESS, no longer
-    # newest once v=100 publishes) clears it plus the aged-out v=4
-    publish_versioned(spark.range(6).toDF("n"), base)
-    assert vacuum_versions(base, keep_last=2) == [4, 99]
-
-
 def test_merge_upsert_schema_evolution(spark):
     """evolve_schema=True widens the target with source-only columns
     (NULL for untouched rows); default drops them (strict governance)."""

@@ -104,22 +104,28 @@ def test_unmapped_restaurants_match_seeded_gap(spark, loaded):
 
 
 def test_publish_round_trip(spark, tmp_path, loaded):
-    """Stage-all-then-publish to disk, read back, re-publish over the live
-    table (the monthly rerun), and assert FK integrity on the read-back
-    state — the full production write path, not just in-memory frames."""
-    from etl_loading_scripts_spark.operators.publish import (
-        publish_table,
+    """Publish the load's fact and patron dim as one delta-log set, read
+    back, re-publish over the live set (the monthly rerun), and assert FK
+    integrity on the read-back state — the full production write path,
+    not just in-memory frames."""
+    import os
+
+    from etl_loading_scripts_spark.operators.deltalog import (
+        publish_set_deltalog,
+        read_published_set_deltalog,
+    )
+    from etl_loading_scripts_spark.operators.quality import (
         referential_integrity_check,
     )
 
     _, out, _, _ = loaded
-    fact_path = str(tmp_path / "fact_transaction")
-    dim_path = str(tmp_path / "dim_patron")
-    publish_table(out.fact_transaction, fact_path)
-    publish_table(out.dim_patron, dim_path)
-
-    fact_back = spark.read.parquet(fact_path)
-    dim_back = spark.read.parquet(dim_path)
+    base = str(tmp_path / "warehouse")
+    v1 = publish_set_deltalog(
+        {"fact_transaction": out.fact_transaction, "dim_patron": out.dim_patron},
+        base,
+    )
+    back = read_published_set_deltalog(spark, base)
+    fact_back, dim_back = back["fact_transaction"], back["dim_patron"]
     assert fact_back.count() == out.fact_transaction.count()
     assert fact_back.schema == out.fact_transaction.schema
 
@@ -127,11 +133,19 @@ def test_publish_round_trip(spark, tmp_path, loaded):
     # maps everything; sentinel ids were replaced by real keys)
     assert referential_integrity_check(fact_back, dim_back, "patron_id", "patron_id") == 0
 
-    # the monthly rerun: publish over the live table — readers see old or
-    # new, never a partial write, and no .__tmp__/.__old__ residue remains
-    publish_table(out.dim_patron.limit(10), dim_path)
-    assert spark.read.parquet(dim_path).count() == 10
-    residue = [p.name for p in tmp_path.iterdir() if "__tmp__" in p.name or "__old__" in p.name]
+    # the monthly rerun: publish over the live set — readers see the old
+    # or the new set, never a partial write, and no staging residue remains
+    publish_set_deltalog(
+        {"fact_transaction": out.fact_transaction, "dim_patron": out.dim_patron.limit(10)},
+        base,
+    )
+    assert read_published_set_deltalog(spark, base)["dim_patron"].count() == 10
+    pinned = read_published_set_deltalog(spark, base, version=v1)
+    assert pinned["dim_patron"].count() == out.dim_patron.count()
+    residue = [
+        d for _root, dirs, _files in os.walk(base) for d in dirs
+        if d.startswith(".staging-")
+    ]
     assert residue == []
 
 

@@ -103,11 +103,16 @@ _COW_MONTHS = (202401, 202402, 202403)
 @pytest.mark.soak
 def test_cow_merge_equals_per_month_merge_upsert(spark, tmp_path_factory, tgt, src, full_sync):
     """For arbitrary (key, month) targets and sources, the COW-merged
-    table equals: per source month, merge_upsert of that month's slice
-    with that month's source rows; months the source skips unchanged."""
-    from etl_loading_scripts_spark.operators.cow import merge_cow_partitioned
+    Delta table equals: per source month, merge_upsert of that month's
+    slice with that month's source rows; months the source skips
+    unchanged."""
+    from etl_loading_scripts_spark.operators.deltalog import (
+        merge_cow_deltalog,
+        read_delta_table,
+        write_delta_table,
+    )
     from etl_loading_scripts_spark.operators.mutations import merge_upsert
-    from etl_loading_scripts_spark.sources.io import write_fact_partitioned
+    from etl_loading_scripts_spark.sources.io import MONTH_COL, with_month
 
     path = str(tmp_path_factory.mktemp("cowprop") / "fact")
     tgt_rows = [(k, m * 100 + 10 + k, float(k)) for (k, m) in sorted(tgt)]
@@ -115,14 +120,16 @@ def test_cow_merge_equals_per_month_merge_upsert(spark, tmp_path_factory, tgt, s
     schema = "k BIGINT, datekey INT, amount DOUBLE"
     target = spark.createDataFrame(tgt_rows, schema) if tgt_rows else spark.createDataFrame([], schema)
     source = spark.createDataFrame(src_rows, schema)
-    write_fact_partitioned(target, path)
+    write_delta_table(with_month(target), path, partition_by=[MONTH_COL])
 
-    merge_cow_partitioned(
+    merge_cow_deltalog(
         spark, path, source, on=["k"], delete_unmatched_source=full_sync
     )
     got = {
         (r.k, r.datekey, r.amount)
-        for r in spark.read.parquet(path).select("k", "datekey", "amount").collect()
+        for r in read_delta_table(spark, path)
+        .select("k", "datekey", "amount")
+        .collect()
     }
 
     expect = set()

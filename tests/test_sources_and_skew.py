@@ -323,37 +323,33 @@ def test_range_sorted_write_has_disjoint_file_ranges(spark, sf_dir, tmp_path):
 
 
 def test_versioned_publish_time_travel(spark, sf_dir, tmp_path):
-    """publish_versioned appends immutable versions; read_versioned
-    pins old versions while latest follows the pointer."""
-    from etl_loading_scripts_spark.operators.publish import (
-        publish_versioned,
-        read_versioned,
+    """Each Delta overwrite publishes an immutable version; a pinned
+    read keeps the old version (old schema included) while the latest
+    read follows the log. A write that crashed before its commit is
+    invisible: both versions still serve."""
+    from etl_loading_scripts_spark.operators.deltalog import (
+        read_delta_table,
+        write_delta_table,
     )
 
     base = str(tmp_path / "dim_versions")
     nation = load_table(spark, sf_dir, "nation")
-    v1 = publish_versioned(nation, base)
-    v2 = publish_versioned(nation.withColumn("extra", F.lit(1)), base)
-    assert (v1, v2) == (1, 2)
-    latest = read_versioned(spark, base)
-    pinned = read_versioned(spark, base, version=1)
+    v1 = write_delta_table(nation, base)
+    v2 = write_delta_table(nation.withColumn("extra", F.lit(1)), base)
+    assert (v1, v2) == (0, 1)
+    latest = read_delta_table(spark, base)
+    pinned = read_delta_table(spark, base, version=v1)
     assert "extra" in latest.columns
     assert "extra" not in pinned.columns
     assert pinned.count() == nation.count() == latest.count()
-    import pytest as _pytest
+    with pytest.raises(Exception, match="99"):
+        read_delta_table(spark, base, version=99).count()
 
-    with _pytest.raises(FileNotFoundError):
-        read_versioned(spark, base, version=99)
-
-    # a version dir missing its _SUCCESS marker (writer crashed mid-write)
-    # must be refused, not served as a partial table (ADVICE r2)
-    import os
-
-    os.remove(os.path.join(base, "v=2", "_SUCCESS"))
-    with _pytest.raises(FileNotFoundError, match="incomplete"):
-        read_versioned(spark, base, version=2)
-    # the pinned COMPLETE version still serves
-    assert read_versioned(spark, base, version=1).count() == nation.count()
+    # a writer that died after staging its files, before the commit,
+    # leaves only unreferenced files: no reader ever serves them
+    nation.limit(3).write.parquet(os.path.join(base, ".staging-crashed"))
+    assert read_delta_table(spark, base).count() == nation.count()
+    assert read_delta_table(spark, base, version=v1).count() == nation.count()
 
 
 def test_read_csv_robust_quarantines_bad_lines(spark, tmp_path):

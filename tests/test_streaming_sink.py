@@ -1,4 +1,4 @@
-"""foreachBatch streaming-upsert sink: stream → merge into parquet dim."""
+"""foreachBatch streaming-upsert sink: stream → merge into a Delta dim."""
 
 from __future__ import annotations
 
@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_loading_scripts_spark.catalog import load_table
+from etl_loading_scripts_spark.operators.deltalog import _all_versions, read_delta_table
 from etl_loading_scripts_spark.streaming.sinks import foreach_batch_upsert
 
 
@@ -35,7 +36,7 @@ def test_stream_merges_into_dimension(spark, sf_dir, tmp_path):
     )
     q.awaitTermination(120)
 
-    got = spark.read.parquet(target)
+    got = read_delta_table(spark, target)
     expected = _totals(events.filter(F.col("user_id") % 2 == 0))
     assert got.count() == expected.count()
     assert got.exceptAll(expected).count() == 0
@@ -47,7 +48,7 @@ def test_stream_merges_into_dimension(spark, sf_dir, tmp_path):
     batch2 = events.filter((F.col("user_id") % 2 == 1) | (F.col("user_id") == 0))
     callback(batch2, 1)
 
-    final = spark.read.parquet(target)
+    final = read_delta_table(spark, target)
     odd_expected = _totals(batch2)
     # odd users + user 0 now reflect batch2; other even users still batch1
     assert final.filter(F.col("user_id") % 2 == 1).exceptAll(
@@ -57,7 +58,8 @@ def test_stream_merges_into_dimension(spark, sf_dir, tmp_path):
     assert final.join(evens_before.select("user_id"), "user_id").exceptAll(
         evens_before
     ).count() == 0
-    assert not os.path.exists(target + ".__old__")
+    # the first batch created the table, the second committed one merge
+    assert _all_versions(target) == [0, 1]
 
 
 def test_checkpoint_restart_processes_only_new_files(spark, sf_dir, tmp_path):
@@ -65,7 +67,7 @@ def test_checkpoint_restart_processes_only_new_files(spark, sf_dir, tmp_path):
     pick up ONLY files that arrived while it was down — the recovery
     semantics every production ingest depends on. Totals stay correct
     because each micro-batch merges once (checkpoint tracks progress;
-    the merge itself is idempotent on replay after a crash mid-publish)."""
+    the merge itself is idempotent on replay after a crash mid-commit)."""
     events = load_table(spark, sf_dir, "events").select("user_id", "value", "ts")
     in_dir = tmp_path / "landing"
     in_dir.mkdir()
@@ -88,14 +90,17 @@ def test_checkpoint_restart_processes_only_new_files(spark, sf_dir, tmp_path):
         q.awaitTermination(120)
 
     run_once()
-    after1 = {r["user_id"]: r["n_events"] for r in spark.read.parquet(target).collect()}
+    after1 = {
+        r["user_id"]: r["n_events"] for r in read_delta_table(spark, target).collect()
+    }
+    n_versions = len(_all_versions(target))
 
     # new data lands while the stream is DOWN
     batch2 = events.filter(F.col("user_id") % 3 == 1)
     batch2.coalesce(1).write.parquet(str(in_dir / "f2"))
     run_once()
 
-    final = spark.read.parquet(target)
+    final = read_delta_table(spark, target)
     expected = _totals(events.filter(F.col("user_id") % 3 != 2))
     assert final.count() == expected.count()
     assert final.exceptAll(expected).count() == 0
@@ -103,6 +108,8 @@ def test_checkpoint_restart_processes_only_new_files(spark, sf_dir, tmp_path):
     after2 = {r["user_id"]: r["n_events"] for r in final.collect()}
     for uid, n in after1.items():
         assert after2[uid] == n
+    # the restart committed only its own micro-batch
+    assert len(_all_versions(target)) == n_versions + 1
 
 
 @pytest.mark.soak
