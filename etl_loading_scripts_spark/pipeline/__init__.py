@@ -6,9 +6,11 @@
                     dirty billing-group names, missing fingerprints).
 ``stages``        — stage 1-5 of the monthly load as pure transforms built
                     on the engine's mutation primitives.
-``monthly_load``  — the orchestrator (entry point A of the reference).
+``staged``        — the orchestrator (entry point A of the reference): the
+                    five stages with parquet barriers between them and one
+                    delta-log set publish per close.
 """
 
-from etl_loading_scripts_spark.pipeline.monthly_load import run_monthly_load
+from etl_loading_scripts_spark.pipeline.staged import run_monthly_load_staged
 
-__all__ = ["run_monthly_load"]
+__all__ = ["run_monthly_load_staged"]

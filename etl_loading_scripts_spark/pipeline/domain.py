@@ -203,3 +203,12 @@ def build_domain(spark: SparkSession, sf_dir: str) -> Domain:
         pos_fingerprints=pos_fingerprints,
         dim_billing_group=dim_billing_group,
     )
+
+
+def full_window(dom: Domain) -> tuple[int, int]:
+    """(min, max) datekey of the fact — 'process everything' window for
+    tests; production passes the previous-calendar-month pair."""
+    row = dom.fact_transaction.agg(
+        F.min("datekey").alias("lo"), F.max("datekey").alias("hi")
+    ).collect()[0]
+    return row["lo"], row["hi"]

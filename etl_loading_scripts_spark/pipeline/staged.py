@@ -1,15 +1,11 @@
-"""Staged monthly load — per-stage materialization barriers + metrics.
+"""Staged monthly load — the monthly-load orchestrator (entry point A).
 
 The reference's five scripts run as discrete statements against staging
 and warehouse tables, so each stage's cost is separately visible in its
-run logs (S3:45-68 pastes per-statement counts). ``run_monthly_load``
-composes the stages lazily — ideal for plan fusion, but opaque for
-attribution: one fused job answers "how much did the LOAD shuffle",
-never "which STAGE shuffles grows superlinearly at 10× the fact".
-
-This module runs the same five stages with parquet checkpoint BARRIERS
-between them (the staging-table discipline the reference itself uses,
-``S1:46`` stages ``#map`` for S3 to read), recording per stage:
+run logs (S3:45-68 pastes per-statement counts). This module runs the
+five stages with parquet checkpoint BARRIERS between them (the
+staging-table discipline the reference itself uses, ``S1:46`` stages
+``#map`` for S3 to read), recording per stage:
 
 - wall seconds (stage transform + validation counts + checkpoint write),
 - cumulative shuffle bytes/records delta (when a ``snapshot`` callable
@@ -27,7 +23,6 @@ linear, partition-parallel, and the price of restartability.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import time
@@ -39,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_loading_scripts_spark.pipeline.domain import Domain
-from etl_loading_scripts_spark.sources import write_bucketed
 from etl_loading_scripts_spark.pipeline.stages import (
     stage1_fingerprint_map,
     stage2_patron_dims,
@@ -52,63 +46,6 @@ from etl_loading_scripts_spark.pipeline.stages import (
     validate_stage4,
     validate_stage5,
 )
-
-
-#: table property marking a bucketed barrier table's write as COMPLETE
-#: — the saveAsTable analogue of the parquet ``_SUCCESS`` gate. Bare
-#: ``tableExists`` is NOT a barrier: an interrupted overwrite of a
-#: table that already existed from an earlier run can leave torn
-#: contents behind a live catalog entry (round-9 ADVICE), so resume
-#: trusts only tables carrying this marker, set strictly AFTER the
-#: write commits.
-_BUCKET_DONE_PROP = "etl_loading_scripts_spark.barrier_complete"
-
-
-def _bucket_barrier_complete(spark: SparkSession, tbl: str) -> bool:
-    """True iff ``tbl`` exists AND carries the completion marker."""
-    if not spark.catalog.tableExists(tbl):
-        return False
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {tbl}").collect()
-    }
-    return props.get(_BUCKET_DONE_PROP) == "true"
-
-
-def _write_bucketed_barrier(
-    df: DataFrame, tbl: str, keys: list[str], n_buckets: int
-) -> None:
-    """``write_bucketed`` + the completion marker, in that order — a
-    crash between the two leaves an unmarked (hence recomputed) table,
-    never a torn one resumed as complete."""
-    write_bucketed(df, tbl, keys, n_buckets=n_buckets)
-    df.sparkSession.sql(
-        f"ALTER TABLE {tbl} SET TBLPROPERTIES ('{_BUCKET_DONE_PROP}'='true')"
-    )
-
-
-def bucket_table_prefix(stage_dir: str) -> str:
-    """The managed-table name prefix a ``bucketed=True`` run derives
-    from its ``stage_dir`` — bucketed barrier tables live in the shared
-    warehouse (saveAsTable), OUTSIDE the stage_dir cleanup contract, so
-    callers that delete ``stage_dir`` after a bucketed run must also
-    call :func:`drop_bucketed_stage_tables`."""
-    return "stg_" + hashlib.md5(stage_dir.encode()).hexdigest()[:8]
-
-
-def drop_bucketed_stage_tables(spark: SparkSession, stage_dir: str) -> int:
-    """Drop the bucketed managed tables a ``bucketed=True`` run of
-    ``stage_dir`` created (scoped by the run's own prefix — never
-    another concurrent run's tables). Returns the number dropped. The
-    runner itself cannot drop them: the Domain frames it returns read
-    from these tables."""
-    prefix = bucket_table_prefix(stage_dir)
-    n = 0
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-            n += 1
-    return n
 
 
 def shuffle_snapshot(spark: SparkSession) -> dict | None:
@@ -142,16 +79,15 @@ def run_monthly_load_staged(
     snapshot: Callable[[], dict | None] | None = None,
     publish: bool = True,
     resume: bool = False,
-    month_close: bool = True,
-    bucketed: bool = False,
 ) -> tuple[Domain, dict, list[dict]]:
     """Execute stages 1-5 with checkpoint barriers under ``stage_dir``.
 
-    Returns ``(domain_out, metrics, stage_report)`` where ``metrics``
-    matches :func:`run_monthly_load`'s validation dict (same stages,
-    same guards — asserted equal in ``tests/test_pipeline.py``) and
-    ``stage_report`` has one entry per barrier with wall seconds plus
-    whatever ``snapshot``/``instrument`` recorded.
+    Returns ``(domain_out, metrics, stage_report)`` where ``metrics`` is
+    the stages' validation dict and ``stage_report`` has one entry per
+    barrier with wall seconds plus whatever ``snapshot``/``instrument``
+    recorded. ``publish=True`` ends the close with one delta-log set
+    commit of the five outputs under ``stage_dir/publish``, its fact
+    OPTIMIZEd and Z-ORDERed before the set commit.
 
     ``resume=True`` is the RESTART path the barriers exist for: any
     barrier whose parquet output is already committed (``_SUCCESS``
@@ -165,43 +101,8 @@ def run_monthly_load_staged(
     report: list[dict] = []
     metrics: dict[str, int] = {}
 
-    # ``bucketed=True`` (round 9, SCALING.md r8's named s2 target):
-    # barrier outputs on the REPEATED join keys persist as BUCKETED
-    # managed tables instead of plain parquet — the fact meets every
-    # stage's mapping on txn_id and the patron-dim states are
-    # probed/anti-joined on proxy_id, so with co-located buckets only
-    # the (smaller, derived) mapping side exchanges; the big side
-    # reads its buckets. At 1× the dims ride broadcasts and bucketing
-    # buys nothing; past the broadcast threshold (the 100× step the
-    # r8 measurement found) it removes the fact-side exchange from
-    # s2/s3/s4. Measured with tools/bench_scale100.py --bucketed.
-    # NOTE: these live in the shared warehouse, not stage_dir — a
-    # caller that deletes stage_dir after a bucketed run must also
-    # call drop_bucketed_stage_tables(spark, stage_dir)
-    bucket_keys = {"fact": ["txn_id"], "dim_patron": ["proxy_id"]}
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tbl_prefix = bucket_table_prefix(stage_dir)
-
-    def _bucket_table(name: str, key: str) -> str:
-        return f"{tbl_prefix}_{name}_{key}"
-
     def _resumable(path: str) -> bool:
         return resume and os.path.exists(os.path.join(path, "_SUCCESS"))
-
-    def _persist(name: str, key: str, df: DataFrame, resumed: list) -> DataFrame:
-        if bucketed and key in bucket_keys:
-            tbl = _bucket_table(name, key)
-            if resume and _bucket_barrier_complete(spark, tbl):
-                resumed.append(key)
-            else:
-                _write_bucketed_barrier(df, tbl, bucket_keys[key], n_buckets)
-            return spark.table(tbl)
-        path = os.path.join(stage_dir, f"{name}_{key}")
-        if _resumable(path):
-            resumed.append(key)
-        else:
-            df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
 
     def barrier(name: str, dfs: dict[str, DataFrame], stage_metrics: dict):
         t0 = time.time()
@@ -209,23 +110,14 @@ def run_monthly_load_staged(
         ckpt = {}
         resumed: list = []
         for key, df in dfs.items():
-            if instrument is not None and not (
-                resume
-                and (
-                    os.path.exists(
-                        os.path.join(stage_dir, f"{name}_{key}", "_SUCCESS")
-                    )
-                    or (
-                        bucketed
-                        and key in bucket_keys
-                        and _bucket_barrier_complete(
-                            spark, _bucket_table(name, key)
-                        )
-                    )
-                )
-            ):
-                profs[key] = instrument(df)
-            ckpt[key] = _persist(name, key, df, resumed)
+            path = os.path.join(stage_dir, f"{name}_{key}")
+            if _resumable(path):
+                resumed.append(key)
+            else:
+                if instrument is not None:
+                    profs[key] = instrument(df)
+                df.write.mode("overwrite").parquet(path)
+            ckpt[key] = spark.read.parquet(path)
         rec: dict = {
             "stage": name,
             "wall_sec": round(time.time() - t0 + stage_metrics.pop("_wall", 0.0), 3),
@@ -255,16 +147,6 @@ def run_monthly_load_staged(
         17x-vs-10x shuffle slope at 10x fact (SCALING.md r6)."""
 
         def bar(df: DataFrame, name: str) -> DataFrame:
-            if bucketed and (
-                name.startswith("dim_patron") or name == "proxy_grain"
-            ):
-                # wave states (and the round-10 shared proxy-grain
-                # aggregate) are what waves 2+ anti-join/probe on
-                # proxy_id — co-locate them like the barrier dims
-                tbl = _bucket_table(stage, name)
-                if not (resume and _bucket_barrier_complete(spark, tbl)):
-                    _write_bucketed_barrier(df, tbl, ["proxy_id"], n_buckets)
-                return spark.table(tbl)
             path = os.path.join(stage_dir, f"{stage}_{name}")
             if not _resumable(path):
                 df.write.mode("overwrite").parquet(path)
@@ -376,11 +258,7 @@ def run_monthly_load_staged(
         # range over (S5's date-window-by-restaurant aggregations) —
         # the publish debris never becomes the steady-state layout.
         # Measured read-pruning delta recorded in SCALING.md r9.
-        opt = (
-            {"fact_transaction": {"zorder_by": ["datekey", "restaurant_key"]}}
-            if month_close
-            else None
-        )
+        opt = {"fact_transaction": {"zorder_by": ["datekey", "restaurant_key"]}}
         # INCREMENTAL fact publish (round 10 — the r9 VERDICT's one
         # `weak`): every stage's fact update is guarded by BOTH the
         # month window and the unmapped sentinel (stages.py's two-guard
@@ -393,8 +271,7 @@ def run_monthly_load_staged(
         # affected months) and the month-close OPTIMIZE is auto-scoped
         # to those months. Publish cost: O(month), not O(history) —
         # untouched months' files stay referenced and byte-identical
-        # across set versions (oracle: staged_publish_incremental_files;
-        # 100x wall: tools/bench_month_close.py's month-2 leg).
+        # across set versions (oracle: staged_publish_incremental_files).
         # INCREMENTAL dim publish (round 11 — the r10 VERDICT's top
         # item): dims are entity-KEYED merges (grain "dim",
         # merge_dim_deltalog) — the reference's own insert-if-absent
@@ -441,7 +318,6 @@ def run_monthly_load_staged(
             "stage": "s6_publish_deltalog",
             "wall_sec": round(time.time() - t0, 3),
             "set_version": set_version,
-            "month_close_optimize": bool(month_close),
         }
         if snapshot is not None:
             snap = snapshot()
@@ -453,3 +329,24 @@ def run_monthly_load_staged(
         report.append(rec)
 
     return out, metrics, report
+
+
+def write_run_metrics(
+    spark: SparkSession,
+    metrics: dict,
+    path: str,
+    run_id: str,
+    window: tuple[int, int],
+) -> None:
+    """Append one row per metric for this run to the metrics table —
+    the operational record behind the reference's in-comment run logs
+    (S3:45-68 pastes counts into the script; a table is the auditable
+    form). Long format (run_id, lo/hi datekey, metric, value) so new
+    stage metrics never need a schema migration."""
+    rows = [
+        (run_id, window[0], window[1], k, int(v)) for k, v in sorted(metrics.items())
+    ]
+    df = spark.createDataFrame(
+        rows, "run_id string, lo_datekey int, hi_datekey int, metric string, value long"
+    )
+    df.coalesce(1).write.mode("append").parquet(path)

@@ -1,5 +1,10 @@
 """The full monthly load as a driver-visible query.
 
+Every entry here drives the one monthly-load orchestrator,
+``pipeline/staged.run_monthly_load_staged``, in a stage dir under
+``/tmp``: the single-run entries wipe theirs on every call, the
+two-window fixture plants once and is reused while complete.
+
 The oracle does NOT replicate the five stages — it derives the post-load
 end state from first principles: a full-window run maps every patron and
 billing group (the zero-unmapped invariant, tests/test_pipeline.py), fact
@@ -12,6 +17,8 @@ corrupts amounts), the hash diverges.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,13 +27,21 @@ from etl_loading_scripts_spark.constants import (
     UNMAPPED_PATRON_ID,
     UNMAPPED_RESTAURANT_KEY,
 )
-from etl_loading_scripts_spark.pipeline.domain import build_domain
-from etl_loading_scripts_spark.pipeline.monthly_load import (
-    full_window,
-    run_monthly_load,
-    run_monthly_load_partitioned,
+from etl_loading_scripts_spark.operators.deltalog import (
+    _fixture_dir,
+    read_published_set_deltalog,
 )
+from etl_loading_scripts_spark.pipeline.domain import build_domain, full_window
+from etl_loading_scripts_spark.pipeline.staged import run_monthly_load_staged
 from etl_loading_scripts_spark.registry import register
+
+
+def _fresh_stage_dir(sf_dir: str, tag: str) -> str:
+    """A fixed per-tag stage dir for one staged load, wiped of whatever
+    an earlier run left there."""
+    path = _fixture_dir(sf_dir, tag=tag)
+    shutil.rmtree(path, ignore_errors=True)
+    return path
 
 
 def _fact_month_rollup(fact: DataFrame) -> DataFrame:
@@ -71,7 +86,10 @@ def _fact_month_rollup(fact: DataFrame) -> DataFrame:
 )
 def monthly_load_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dom = build_domain(spark, sf_dir)
-    out, _metrics = run_monthly_load(spark, dom, full_window(dom))
+    out, _metrics, _report = run_monthly_load_staged(
+        spark, dom, full_window(dom), _fresh_stage_dir(sf_dir, "load_e2e"),
+        publish=False,
+    )
     return _fact_month_rollup(out.fact_transaction)
 
 
@@ -97,28 +115,28 @@ def monthly_load_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="The monthly load run INCREMENTALLY against the month-partitioned "
     "fact layout (SURVEY §4's single most important physical design "
-    "choice): fact staged hive-partitioned by month, ONE month window "
-    "loaded (partition-pruned scan, plan-asserted in tests), published "
-    "back via dynamic partition overwrite, full table rolled up. Oracle: "
-    "the loaded month reaches full patron/billing mapping with the "
-    "seeded restaurant-registry gap; every other month's partition is "
-    "byte-untouched at its seeded unmapped state.",
+    "choice): ONE month window loaded by the staged runner and published "
+    "through the delta log (the fact merged month-scoped into its "
+    "month-partitioned table), the published set's full fact rolled up. "
+    "Oracle: the loaded month reaches full patron/billing mapping with "
+    "the seeded restaurant-registry gap; every other month stays at its "
+    "seeded unmapped state.",
 )
 def monthly_load_partitioned_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: each run writes only the window's partition (dynamic
-    overwrite) and its update waves scan only that partition's files —
-    the 'rerun last month' remediation (BASELINE scale facts) as a
-    bounded write. The full-layout staging write here is test-harness
-    setup; a deployed warehouse is already stored in this layout."""
+    """Scale: the publish merges only the window's month partition and
+    leaves every other month's files referenced as they were — the
+    'rerun last month' remediation (BASELINE scale facts) as a bounded
+    write. The first publish of the stage dir bootstraps the whole fact;
+    that write is test-harness setup — a deployed warehouse is already
+    stored in this layout."""
     dom = build_domain(spark, sf_dir)
     lo_dk = dom.fact_transaction.agg(F.min("datekey")).first()[0]
     month = lo_dk // 100
     window = (month * 100 + 1, month * 100 + 31)
-    from etl_loading_scripts_spark.operators.deltalog import _fixture_dir
-
-    warehouse = _fixture_dir(sf_dir, tag="fact_wh")
-    out, _metrics = run_monthly_load_partitioned(spark, dom, window, warehouse)
-    return _fact_month_rollup(out.fact_transaction)
+    stage_dir = _fresh_stage_dir(sf_dir, "fact_wh")
+    run_monthly_load_staged(spark, dom, window, stage_dir)
+    published = read_published_set_deltalog(spark, f"{stage_dir}/publish")
+    return _fact_month_rollup(published["fact_transaction"])
 
 
 def _staged_two_window_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -136,15 +154,10 @@ def _staged_two_window_fixture(spark: SparkSession, sf_dir: str) -> str:
     from etl_loading_scripts_spark.operators.deltalog import (
         published_set_versions,
     )
-    from etl_loading_scripts_spark.pipeline.staged import (
-        run_monthly_load_staged,
-    )
 
     # "tt2": cache key bumped in round 10 when the publish went
     # incremental; since r11 the key also carries deltalog's
     # _ONDISK_FORMAT_REV so writer-format bumps invalidate it
-    from etl_loading_scripts_spark.operators.deltalog import _fixture_dir
-
     root = _fixture_dir(sf_dir, tag="staged_tt2")
     pub = os.path.join(root, "publish")
     if len(published_set_versions(pub)) >= 2:
@@ -225,10 +238,6 @@ def staged_publish_delta_timetravel(spark: SparkSession, sf_dir: str) -> DataFra
     sets stay readable at zero ongoing cost until vacuumed. The
     fixture's two staged runs are test-harness setup — a deployed
     warehouse runs one per month."""
-    from etl_loading_scripts_spark.operators.deltalog import (
-        read_published_set_deltalog,
-    )
-
     root = _staged_two_window_fixture(spark, sf_dir)
     pub = f"{root}/publish"
     out = None

@@ -2,15 +2,15 @@
 
 The reference reads only SQL Server tables; a Spark-native engine needs the
 file-format surface: parquet (default), ORC, CSV, JSON, with explicit
-schemas (never inferSchema in production paths), plus the month-partitioned
-fact layout that makes the reference's incremental windows prune at 100 TB.
+schemas (never inferSchema in production paths), plus bucketed and
+range-sorted layouts. The month-partitioned fact lives in the delta log
+(``operators/deltalog.py``), keyed by ``io.MONTH_COL``.
 """
 
 from etl_loading_scripts_spark.sources.io import (
     ingest_jsonl_quarantined,
     read_table,
     write_bucketed,
-    write_fact_partitioned,
     write_table,
 )
 
@@ -18,6 +18,5 @@ __all__ = [
     "ingest_jsonl_quarantined",
     "read_table",
     "write_bucketed",
-    "write_fact_partitioned",
     "write_table",
 ]

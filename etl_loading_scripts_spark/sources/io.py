@@ -1,4 +1,4 @@
-"""Readers/writers for parquet, ORC, CSV, JSON + the partitioned fact layout."""
+"""Readers/writers for parquet, ORC, CSV, JSON + the fact's month column."""
 
 from __future__ import annotations
 
@@ -58,49 +58,6 @@ def write_table(
     getattr(writer, fmt)(path)
 
 
-def write_fact_partitioned(
-    fact: DataFrame,
-    path: str,
-    datekey_col: str = "datekey",
-    compact: bool = True,
-) -> None:
-    """The 100 TB fact layout: hive-partitioned by month (``yyyyMM`` int
-    derived from the datekey), so the reference's ``DateKey BETWEEN``
-    monthly windows prune to ~1/100th of the table at the file-listing
-    level (SURVEY §4: 'the single most important physical design choice').
-
-    Readers filter on ``month`` (or on ``datekey`` after
-    ``month = datekey div 100`` is derived) and Catalyst turns it into
-    PartitionFilters — zero data files outside the window are opened.
-
-    ``compact=True`` (default) repartitions on the month column before
-    the write so each month directory gets O(1) files instead of one per
-    upstream task — without it, N upstream partitions x M months writes
-    N*M small files, the classic partitioned-write mistake that makes
-    every later listing pass pay for the layout. Disable only when the
-    upstream is already month-clustered (e.g. a single-month increment),
-    where the extra shuffle buys nothing. Whale months that outgrow a
-    single task are the bucketed layout's job (``write_bucketed``), or
-    repartition on (month, salt).
-    """
-    out = with_month(fact, datekey_col)
-    if compact:
-        out = out.repartition(F.col(MONTH_COL))
-    write_table(out, path, partition_by=[MONTH_COL])
-
-
-def read_fact_month(
-    spark: SparkSession, path: str, lo_datekey: int, hi_datekey: int
-) -> DataFrame:
-    """Monthly incremental read: the month partition filter prunes files,
-    the datekey filter prunes row groups within the month."""
-    return (
-        spark.read.parquet(path)
-        .filter(F.col(MONTH_COL).between(lo_datekey // 100, hi_datekey // 100))
-        .filter(F.col("datekey").between(lo_datekey, hi_datekey))
-    )
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
@@ -152,25 +109,6 @@ def write_range_sorted(
         .write.mode(mode)
         .format(fmt)
         .save(path)
-    )
-
-
-def overwrite_fact_month(fact_month: DataFrame, path: str, datekey_col: str = "datekey") -> None:
-    """Monthly incremental publish: replace ONLY the month partitions
-    present in ``fact_month``, leaving every other month's files untouched.
-
-    ``partitionOverwriteMode=dynamic`` is the difference between rewriting
-    ~1/100th of a 100 TB fact and rewriting all of it — the reference's
-    'rerun last month' remediation (BASELINE: 746→0 unmapped over three
-    reruns) becomes a bounded write. Static mode (the default) would drop
-    ALL partitions first; the option is set on the writer so the session
-    default stays safe."""
-    (
-        with_month(fact_month, datekey_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(MONTH_COL)
-        .parquet(path)
     )
 
 
@@ -243,44 +181,6 @@ def ingest_jsonl_quarantined(
     stamped = bad.select(F.lit(run_id).alias("run_id"), "raw_line")
     stamped.write.mode("append").parquet(quarantine_path)
     return good, {"jsonl_quarantined": bad.count()}
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int,
-    fmt: str = "parquet",
-) -> int:
-    """Small-file compaction: rewrite a directory of many tiny files into
-    ceil(n_rows / target) right-sized ones. Returns the new file count.
-
-    The 100 TB operational reality behind it: streaming sinks and
-    per-task writers leave thousands of KB-sized files per partition;
-    every downstream scan then pays one task + one open per file and the
-    NameNode/object-store pays the listing. Production systems run this
-    as a maintenance job (OPTIMIZE in lakehouse formats); here it is an
-    explicit operator over plain directories.
-
-    Rewrite is staged through a sibling temp dir + atomic rename: readers
-    never observe a half-compacted directory on a POSIX filesystem;
-    object stores need a manifest swap instead (``optimize_delta`` is
-    that swap for a Delta table)."""
-    import math
-    import shutil
-    import uuid as _uuid
-
-    df = read_table(spark, path, fmt)
-    n_rows = df.count()
-    n_files = max(1, math.ceil(n_rows / max(1, target_rows_per_file)))
-    staged = f"{path.rstrip('/')}__compact_{_uuid.uuid4().hex[:8]}"
-    # repartition (round-robin) balances rows exactly across output files;
-    # coalesce would merely glue existing splits and can stay skewed
-    df.repartition(n_files).write.mode("overwrite").format(fmt).save(staged)
-    old = f"{path.rstrip('/')}__old_{_uuid.uuid4().hex[:8]}"
-    shutil.move(path, old)
-    shutil.move(staged, path)
-    shutil.rmtree(old)
-    return n_files
 
 
 def read_with_schema_evolution(

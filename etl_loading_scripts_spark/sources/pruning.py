@@ -1,5 +1,5 @@
 """Dynamic partition pruning + runtime join filters — the two RUNTIME
-pruning levers the static layout work (``sources/io.py``,
+pruning levers the static layout work (the month-partitioned delta-log fact,
 ``tools/bench_pruning.py``) doesn't cover.
 
 Static pruning needs the partition predicate IN the query (``month =
@@ -48,8 +48,7 @@ def _fixture_dir(sf_dir: str) -> str:
 def plant_partitioned_fact(spark: SparkSession, sf_dir: str) -> str:
     """Month-partitioned (hive ``month=yyyyMM/``) fact derived from
     orders: (txn_id, month, amount). Built once per sf fixture; the
-    layout is what ``write_fact_partitioned`` produces for the real
-    pipeline."""
+    same month layout the published delta-log fact is partitioned by."""
     d = _fixture_dir(sf_dir)
     marker = os.path.join(d, "_SUCCESS")
     if not os.path.exists(marker):

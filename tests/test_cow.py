@@ -577,26 +577,15 @@ def test_publish_monthly_set_commits_all_outputs_atomically(spark, sf_dir, tmp_p
     from etl_loading_scripts_spark.operators.quality import (
         referential_integrity_check,
     )
-    from etl_loading_scripts_spark.pipeline.domain import build_domain
-    from etl_loading_scripts_spark.pipeline.monthly_load import (
-        full_window,
-        run_monthly_load,
-    )
+    from etl_loading_scripts_spark.pipeline.domain import build_domain, full_window
+    from etl_loading_scripts_spark.pipeline.staged import run_monthly_load_staged
 
     dom = build_domain(spark, sf_dir)
-    out, _metrics = run_monthly_load(spark, dom, full_window(dom))
-    base = str(tmp_path / "pubset")
-    v = publish_set_deltalog(
-        [
-            ("fact_transaction", out.fact_transaction),
-            ("dim_patron", out.dim_patron),
-            ("dim_restaurant", out.dim_restaurant),
-            ("dim_billing_group", out.dim_billing_group),
-            ("pos_fingerprints", out.pos_fingerprints),
-        ],
-        base,
+    stage_dir = str(tmp_path / "stage")
+    _out, _metrics, report = run_monthly_load_staged(
+        spark, dom, full_window(dom), stage_dir
     )
-    tables = read_published_set_deltalog(spark, base)
+    tables = read_published_set_deltalog(spark, os.path.join(stage_dir, "publish"))
     assert set(tables) == {
         "fact_transaction",
         "dim_patron",
@@ -604,7 +593,7 @@ def test_publish_monthly_set_commits_all_outputs_atomically(spark, sf_dir, tmp_p
         "dim_billing_group",
         "pos_fingerprints",
     }
-    assert v == 0
+    assert report[-1]["set_version"] == 0
     assert (
         referential_integrity_check(
             tables["fact_transaction"].filter(
@@ -629,6 +618,8 @@ _DELTA_LOG_ENTRIES = [
     "compact_small_files",
     "publish_set_atomic",
     "stream_cdc_merge_cow",
+    "monthly_load_e2e",
+    "monthly_load_partitioned_e2e",
 ]
 
 

@@ -15,16 +15,19 @@ from etl_loading_scripts_spark.constants import (
     UNMAPPED_PATRON_ID,
     UNMAPPED_RESTAURANT_KEY,
 )
-from etl_loading_scripts_spark.pipeline.domain import build_domain
-from etl_loading_scripts_spark.pipeline.monthly_load import full_window, run_monthly_load
+from etl_loading_scripts_spark.pipeline.domain import build_domain, full_window
+from etl_loading_scripts_spark.pipeline.staged import run_monthly_load_staged
 from etl_loading_scripts_spark.pipeline.stages import stage2_patron_dims
 
 
 @pytest.fixture(scope="module")
-def loaded(spark, sf_dir):
+def loaded(spark, sf_dir, tmp_path_factory):
     dom = build_domain(spark, sf_dir)
     window = full_window(dom)
-    out, metrics = run_monthly_load(spark, dom, window)
+    out, metrics, _ = run_monthly_load_staged(
+        spark, dom, window, str(tmp_path_factory.mktemp("loaded")),
+        publish=False,
+    )
     return dom, out, metrics, window
 
 
@@ -150,14 +153,13 @@ def test_publish_round_trip(spark, tmp_path, loaded):
 
 
 @pytest.mark.soak
-def test_multi_month_incremental(spark, sf_dir):
-    """Run month N, then month N+1 on the updated state: each run maps only
-    its own window, leaves other months' sentinels untouched, and the
-    second run builds on the first's dimension inserts (the reference's
-    actual operating cadence, BASELINE 'monthly batch')."""
-    from etl_loading_scripts_spark.pipeline.domain import build_domain
-    from etl_loading_scripts_spark.pipeline.monthly_load import run_monthly_load
-
+def test_multi_month_incremental(spark, sf_dir, tmp_path):
+    """Run month N, then month N+1 on the updated state in the same stage
+    dir: each run maps only its own window, leaves other months'
+    sentinels untouched, and the second run builds on the first's
+    dimension inserts (the reference's actual operating cadence,
+    BASELINE 'monthly batch'). Month-1 frames are read before run 2,
+    which overwrites their barrier files in place."""
     dom = build_domain(spark, sf_dir)
     months = sorted(
         r["m"]
@@ -167,17 +169,20 @@ def test_multi_month_incremental(spark, sf_dir):
     )
     m1, m2 = months[0], months[1]
     w1, w2 = (m1 * 100 + 1, m1 * 100 + 31), (m2 * 100 + 1, m2 * 100 + 31)
+    stage_dir = str(tmp_path / "warehouse")
 
-    out1, metrics1 = run_monthly_load(spark, dom, w1)
+    out1, metrics1, _ = run_monthly_load_staged(spark, dom, w1, stage_dir)
     assert metrics1["stage2_unmapped_after"] == 0
     # month-2 rows untouched by the month-1 run
     still_unmapped = out1.fact_transaction.filter(
         F.col("datekey").between(*w2) & (F.col("patron_id") == UNMAPPED_PATRON_ID)
     ).count()
     assert still_unmapped > 0
+    n1 = out1.dim_patron.count()
 
-    out2, metrics2 = run_monthly_load(spark, out1, w2)
+    out2, metrics2, report2 = run_monthly_load_staged(spark, out1, w2, stage_dir)
     assert metrics2["stage2_unmapped_after"] == 0
+    assert report2[-1]["set_version"] == 1
     assert (
         out2.fact_transaction.filter(
             F.col("datekey").between(*w2) & (F.col("patron_id") == UNMAPPED_PATRON_ID)
@@ -193,7 +198,7 @@ def test_multi_month_incremental(spark, sf_dir):
     )
     # dimension state accumulated, never shrank, and stayed key-unique
     n2 = out2.dim_patron.count()
-    assert n2 >= out1.dim_patron.count()
+    assert n2 >= n1
     assert out2.dim_patron.select("patron_id").distinct().count() == n2
     assert out2.fact_transaction.count() == dom.fact_transaction.count()
 
@@ -223,7 +228,7 @@ def test_restaurant_rankings_stub(spark, loaded):
 
 
 def test_run_metrics_append(spark, tmp_path, loaded):
-    from etl_loading_scripts_spark.pipeline.monthly_load import write_run_metrics
+    from etl_loading_scripts_spark.pipeline.staged import write_run_metrics
 
     _, _, metrics, window = loaded
     path = str(tmp_path / "run_metrics")
@@ -240,88 +245,6 @@ def test_run_metrics_append(spark, tmp_path, loaded):
         for r in back.filter(F.col("run_id") == "run1").collect()
     }
     assert got == {k: int(v) for k, v in metrics.items()}
-
-
-def test_rebucketed_warehouse_joins_without_fact_shuffle(spark, sf_dir):
-    """After rebucket_warehouse, the stage-shaped fact⋈mapping join on
-    txn_id must exchange ONLY the mapping side — the bucketed fact scan
-    feeds the sort-merge join directly."""
-    import pyspark.sql.functions as F
-    from etl_loading_scripts_spark.pipeline.domain import build_domain
-    from etl_loading_scripts_spark.pipeline.monthly_load import rebucket_warehouse
-
-    dom = build_domain(spark, sf_dir)
-    try:
-        bucketed = rebucket_warehouse(spark, dom, prefix="t_wh", n_buckets=8)
-        mapping = dom.raw_transactions.select("txn_id", F.lit(7).alias("mapped"))
-        joined = bucketed.fact_transaction.hint("merge").join(mapping, "txn_id")
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        # exactly one SHUFFLE exchange (the mapping side); broadcasts inside
-        # the mapping build are fine — the bucketed fact side must have none
-        import re
-
-        assert len(re.findall(r"\+- Exchange \(", plan)) == 1, plan
-        assert joined.count() == dom.raw_transactions.count()
-        # patron dim co-location: bucketed dim ⋈ bucketed dim on proxy_id
-        # (the insert-if-absent probe shape) is exchange-free entirely
-        d = bucketed.dim_patron
-        self_probe = d.hint("merge").join(
-            d.select("proxy_id", F.col("patron_id").alias("p2")), "proxy_id"
-        )
-        plan2 = self_probe._sc._jvm.PythonSQLUtils.explainString(
-            self_probe._jdf.queryExecution(), "formatted"
-        )
-        assert "Exchange" not in plan2, plan2
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_wh_fact_transaction")
-        spark.sql("DROP TABLE IF EXISTS t_wh_dim_patron")
-
-
-def test_monthly_load_partitioned_prunes_update_waves(spark, sf_dir, tmp_path):
-    """VERDICT r2 item 6: the stage update waves of the partitioned
-    monthly load must scan ONLY the window month's partition — the month
-    filter reaches the parquet file listing as a PartitionFilter, so the
-    plan never opens other months' files."""
-    from etl_loading_scripts_spark.pipeline.domain import build_domain
-    from etl_loading_scripts_spark.pipeline.monthly_load import (
-        run_monthly_load_partitioned,
-    )
-
-    dom = build_domain(spark, sf_dir)
-    lo_dk = dom.fact_transaction.agg(F.min("datekey")).first()[0]
-    month = lo_dk // 100
-    window = (month * 100 + 1, month * 100 + 31)
-    wh = str(tmp_path / "fact_wh")
-
-    out, metrics = run_monthly_load_partitioned(
-        spark, dom, window, wh, publish=False
-    )
-    # pre-publish fact keeps lineage: its scan of the staged layout must
-    # carry the month PartitionFilters (file-level pruning, not row filter)
-    plan = out.fact_transaction._sc._jvm.PythonSQLUtils.explainString(
-        out.fact_transaction._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan, plan
-    pf = plan.split("PartitionFilters", 1)[1][:250]
-    assert "month" in pf, pf
-    assert str(month) in pf, pf  # bounds are the window's month literals
-    # and the month-only load maps every in-window row (stage invariant)
-    n_month = out.fact_transaction.count()
-    assert n_month == dom.fact_transaction.filter(
-        F.col("datekey").between(*window)
-    ).count()
-
-    # published run: only the window partition is rewritten, other months
-    # keep the seeded unmapped sentinels
-    from etl_loading_scripts_spark.constants import UNMAPPED_PATRON_ID
-
-    out2, _ = run_monthly_load_partitioned(spark, dom, window, wh, publish=True)
-    outside = out2.fact_transaction.filter(~F.col("datekey").between(*window))
-    assert outside.filter(F.col("patron_id") != UNMAPPED_PATRON_ID).count() == 0
-    inside = out2.fact_transaction.filter(F.col("datekey").between(*window))
-    assert inside.filter(F.col("patron_id") == UNMAPPED_PATRON_ID).count() == 0
 
 
 def test_split_sql_statements_quotes_and_comments():
@@ -358,14 +281,16 @@ def test_run_sql_script_returns_last_statement(spark):
 
 @pytest.mark.soak
 def test_staged_load_matches_unstaged(spark, tmp_path, loaded):
-    """The staged runner (checkpoint barriers between stages + wave
-    barriers inside them, post-checkpoint validation) is the SAME load:
-    identical validation metrics and identical published fact as the
-    fused `run_monthly_load` — the barriers change execution shape, not
-    semantics."""
-    from etl_loading_scripts_spark.pipeline.staged import run_monthly_load_staged
+    """A publishing run of the staged runner reports every barrier plus
+    the publish, repeats the fixture run's validation metrics, and
+    commits the five outputs as set version 0 of a fresh warehouse,
+    whose fact equals the returned fact on the columns the stages
+    update."""
+    from etl_loading_scripts_spark.operators.deltalog import (
+        read_published_set_deltalog,
+    )
 
-    dom, out_ref, metrics_ref, window = loaded
+    dom, _, metrics_ref, window = loaded
     out, metrics, report = run_monthly_load_staged(
         spark, dom, window, str(tmp_path / "staged")
     )
@@ -376,24 +301,16 @@ def test_staged_load_matches_unstaged(spark, tmp_path, loaded):
         "s6_publish_deltalog",
     ]
     assert report[-1]["set_version"] == 0  # first run of this warehouse
-    # fact content identical (sorted compare on the update targets)
-    cols = ["txn_id", "patron_id", "restaurant_key", "fingerprint_id",
-            "billing_group_key"]
-    a = sorted(map(tuple, out.fact_transaction.select(cols).collect()))
-    b = sorted(map(tuple, out_ref.fact_transaction.select(cols).collect()))
-    assert a == b
-    # the publish committed a readable, transactionally-consistent set
-    # through the Delta log (the pipeline's commit layer since round 7)
-    from etl_loading_scripts_spark.operators.deltalog import (
-        read_published_set_deltalog,
-    )
-
     pub = read_published_set_deltalog(spark, str(tmp_path / "staged" / "publish"))
     assert set(pub) == {
         "fact_transaction", "dim_patron", "dim_restaurant",
         "dim_billing_group", "pos_fingerprints",
     }
-    assert pub["fact_transaction"].count() == out_ref.fact_transaction.count()
+    cols = ["txn_id", "patron_id", "restaurant_key", "fingerprint_id",
+            "billing_group_key"]
+    a = sorted(map(tuple, pub["fact_transaction"].select(cols).collect()))
+    b = sorted(map(tuple, out.fact_transaction.select(cols).collect()))
+    assert a == b
 
 
 @pytest.mark.soak
@@ -406,8 +323,6 @@ def test_staged_load_resumes_from_last_barrier(spark, tmp_path, loaded):
     run."""
     import os
     import shutil
-
-    from etl_loading_scripts_spark.pipeline.staged import run_monthly_load_staged
 
     dom, _, metrics_ref, window = loaded
     d = str(tmp_path / "resume")
@@ -438,86 +353,3 @@ def test_staged_load_resumes_from_last_barrier(spark, tmp_path, loaded):
     assert "resumed" in by_stage["s3_restaurant_map"]
     assert "resumed" not in by_stage["s4_billing_groups"]
     assert "resumed" not in by_stage["s5_bi_reporting"]
-
-
-def test_staged_bucketed_layout_matches_and_colocates(spark, tmp_path, loaded):
-    """Round-9 VERDICT item 5: the bucketed staged runner — fact
-    barriers bucketed on txn_id, patron-dim states on proxy_id — is
-    the SAME load (identical validations + fact content), and its fact
-    side of a txn_id join reads co-located buckets with NO fact-side
-    Exchange (the s2/s3/s4 shuffle step the 100x run measured)."""
-    from pyspark.sql import functions as F
-
-    from etl_loading_scripts_spark.pipeline.staged import run_monthly_load_staged
-
-    dom, out_ref, metrics_ref, window = loaded
-    out, metrics, _ = run_monthly_load_staged(
-        spark, dom, window, str(tmp_path / "bk"), publish=False,
-        bucketed=True,
-    )
-    assert metrics == metrics_ref
-    cols = ["txn_id", "patron_id", "restaurant_key", "fingerprint_id",
-            "billing_group_key"]
-    a = sorted(map(tuple, out.fact_transaction.select(cols).collect()))
-    b = sorted(map(tuple, out_ref.fact_transaction.select(cols).collect()))
-    assert a == b
-    # co-location: joining the bucketed fact to a derived mapping on
-    # txn_id exchanges ONLY the mapping side
-    mapping = spark.range(50).select(
-        F.col("id").alias("txn_id"), F.lit(1).alias("m")
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = out.fact_transaction.hint("merge").join(mapping, "txn_id")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert plan.count("Exchange") == 1, plan
-    # the bucketed tables live in the shared warehouse; the scoped
-    # cleanup drops exactly this run's tables
-    from etl_loading_scripts_spark.pipeline.staged import (
-        bucket_table_prefix,
-        drop_bucketed_stage_tables,
-    )
-
-    prefix = bucket_table_prefix(str(tmp_path / "bk"))
-    assert any(
-        t.name.startswith(prefix) for t in spark.catalog.listTables()
-    )
-    assert drop_bucketed_stage_tables(spark, str(tmp_path / "bk")) > 0
-    assert not any(
-        t.name.startswith(prefix) for t in spark.catalog.listTables()
-    )
-
-
-def test_bucketed_barrier_resume_requires_completion_marker(spark):
-    """Round-10 ADVICE: bare tableExists is not a resume barrier — an
-    interrupted overwrite of a pre-existing bucketed table leaves a
-    live catalog entry with torn contents. Resume trusts only tables
-    carrying the completion property, set strictly AFTER the write."""
-    from pyspark.sql import functions as F
-
-    from etl_loading_scripts_spark.pipeline.staged import (
-        _bucket_barrier_complete,
-        _write_bucketed_barrier,
-    )
-    from etl_loading_scripts_spark.sources import write_bucketed
-
-    df = spark.range(10).select(F.col("id").alias("txn_id"))
-    tbl = "t_barrier_marker_probe"
-    try:
-        # a plain write_bucketed (the "torn"/interrupted shape: table
-        # exists, marker never set) is NOT resumable
-        write_bucketed(df, tbl, ["txn_id"], n_buckets=4)
-        assert spark.catalog.tableExists(tbl)
-        assert not _bucket_barrier_complete(spark, tbl)
-        # the barrier writer marks completion — now resumable
-        _write_bucketed_barrier(df, tbl, ["txn_id"], 4)
-        assert _bucket_barrier_complete(spark, tbl)
-        # an overwrite resets the catalog entry: re-running the barrier
-        # writer over a marked table still ends marked (idempotent)
-        _write_bucketed_barrier(df, tbl, ["txn_id"], 4)
-        assert _bucket_barrier_complete(spark, tbl)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")

@@ -520,8 +520,7 @@ def test_pipeline_stage_shuffles_stay_bounded(spark, sf_dir, tmp_path):
     bench read. Dim outputs and the stage-1 map must shuffle ~nothing
     (broadcast-built); fact updates may shuffle a small multiple of
     the fact (the update join's mapping side)."""
-    from etl_loading_scripts_spark.pipeline.domain import build_domain
-    from etl_loading_scripts_spark.pipeline.monthly_load import full_window
+    from etl_loading_scripts_spark.pipeline.domain import build_domain, full_window
     from etl_loading_scripts_spark.pipeline.staged import run_monthly_load_staged
 
     dom = build_domain(spark, sf_dir)

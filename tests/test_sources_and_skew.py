@@ -1,4 +1,4 @@
-"""Tests: format round-trips, month-partitioned fact layout, salted join."""
+"""Tests: format round-trips, bucketed and range-sorted layouts, salted join."""
 
 from __future__ import annotations
 
@@ -8,14 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_loading_scripts_spark.catalog import load_table
-from etl_loading_scripts_spark.functions import tsql
 from etl_loading_scripts_spark.operators.skew import salted_join
-from etl_loading_scripts_spark.sources import (
-    read_table,
-    write_fact_partitioned,
-    write_table,
-)
-from etl_loading_scripts_spark.sources.io import read_fact_month
+from etl_loading_scripts_spark.sources import read_table, write_table
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "orc", "csv", "json"])
@@ -33,28 +27,6 @@ def test_format_roundtrip(spark, sf_dir, tmp_path, fmt):
 def test_csv_without_schema_rejected(spark, tmp_path):
     with pytest.raises(ValueError, match="explicit schema"):
         read_table(spark, str(tmp_path), fmt="csv")
-
-
-def test_partitioned_fact_prunes_month(spark, sf_dir, tmp_path):
-    orders = load_table(spark, sf_dir, "orders")
-    fact = orders.select(
-        F.col("o_orderkey").alias("txn_id"),
-        tsql.datekey("o_orderdate").alias("datekey"),
-        F.col("o_totalprice").alias("amount"),
-    )
-    path = str(tmp_path / "fact")
-    write_fact_partitioned(fact, path)
-
-    month_df = read_fact_month(spark, path, 20000601, 20000630)
-    expected = fact.filter(F.col("datekey").between(20000601, 20000630)).count()
-    assert month_df.count() == expected
-
-    # the month filter must reach the file listing as a partition filter
-    plan = month_df._sc._jvm.PythonSQLUtils.explainString(
-        month_df._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan
-    assert "month" in plan.split("PartitionFilters", 1)[1][:200]
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
@@ -117,41 +89,6 @@ def test_delta_merge_falls_back_informatively(spark, sf_dir):
         pass
     with pytest.raises(NotImplementedError, match="merge_upsert"):
         merge_upsert_delta(spark, "/tmp/nonexistent", nation, ["n_nationkey"])
-
-
-def test_dynamic_month_overwrite_preserves_other_months(spark, sf_dir, tmp_path):
-    from etl_loading_scripts_spark.sources.io import overwrite_fact_month
-
-    orders = load_table(spark, sf_dir, "orders")
-    fact = orders.select(
-        F.col("o_orderkey").alias("txn_id"),
-        tsql.datekey("o_orderdate").alias("datekey"),
-        F.col("o_totalprice").alias("amount"),
-    )
-    path = str(tmp_path / "fact")
-    write_fact_partitioned(fact, path)
-
-    months = sorted(r["m"] for r in fact.select((F.col("datekey") / 100).cast("int").alias("m")).distinct().collect())
-    target = months[0]
-    # the monthly rerun: same month, amounts doubled
-    rerun = fact.filter((F.col("datekey") / 100).cast("int") == target).withColumn(
-        "amount", F.col("amount") * 2
-    )
-    overwrite_fact_month(rerun, path)
-
-    back = spark.read.parquet(path)
-    # target month fully replaced...
-    t = back.filter(F.col("month") == target)
-    assert t.count() == rerun.count()
-    orig_sum = fact.filter((F.col("datekey") / 100).cast("int") == target).agg(
-        F.sum("amount")
-    ).collect()[0][0]
-    assert abs(t.agg(F.sum("amount")).collect()[0][0] - 2 * orig_sum) < 1e-6
-    # ...every other month byte-identical (same rows)
-    others = back.filter(F.col("month") != target).drop("month")
-    expected_others = fact.filter((F.col("datekey") / 100).cast("int") != target)
-    assert others.count() == expected_others.count()
-    assert others.exceptAll(expected_others).count() == 0
 
 
 def test_aqe_splits_skewed_join_partition(spark):
@@ -244,26 +181,6 @@ def test_jsonl_quarantine_sink_accumulates_by_run(spark, tmp_path):
     q = spark.read.parquet(qdir)
     assert q.count() == 4
     assert sorted(r.run_id for r in q.select("run_id").distinct().collect()) == ["r1", "r2"]
-
-
-def test_compact_small_files_preserves_rows_and_bounds_files(spark, tmp_path):
-    """Compaction must keep content identical and hit the file-count
-    target computed from rows/target."""
-    import glob
-
-    from etl_loading_scripts_spark.sources.io import compact_small_files
-
-    path = str(tmp_path / "shards")
-    df = spark.range(1000).selectExpr("id", "id % 7 AS k")
-    df.repartition(50).write.parquet(path)  # 50 tiny files
-    assert len(glob.glob(f"{path}/part-*")) == 50
-    before = sorted(r["id"] for r in spark.read.parquet(path).collect())
-
-    n_files = compact_small_files(spark, path, target_rows_per_file=250)
-    assert n_files == 4
-    assert len(glob.glob(f"{path}/part-*")) == 4
-    after = sorted(r["id"] for r in spark.read.parquet(path).collect())
-    assert after == before
 
 
 def test_schema_evolution_merge_nulls_missing_columns(spark, tmp_path):

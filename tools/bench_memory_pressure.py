@@ -102,8 +102,7 @@ def main() -> None:
     # reuse if present, amplify otherwise)
     from bench_pipeline import DST, amplify
 
-    from etl_loading_scripts_spark.pipeline.domain import build_domain
-    from etl_loading_scripts_spark.pipeline.monthly_load import full_window
+    from etl_loading_scripts_spark.pipeline.domain import build_domain, full_window
     from etl_loading_scripts_spark.pipeline.staged import run_monthly_load_staged
 
     if not os.path.isdir(DST):

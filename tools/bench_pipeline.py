@@ -34,8 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from etl_loading_scripts_spark.pipeline.domain import build_domain
-from etl_loading_scripts_spark.pipeline.monthly_load import full_window
+from etl_loading_scripts_spark.pipeline.domain import build_domain, full_window
 from etl_loading_scripts_spark.pipeline.staged import (
     run_monthly_load_staged,
     shuffle_snapshot,

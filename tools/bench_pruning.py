@@ -2,9 +2,9 @@
 """Measured partition-pruning win (SCALING.md companion).
 
 The monthly pipeline's physical design bet (SURVEY §4: month-partitioned
-fact + dynamic partition overwrite) is plan-asserted in
-``test_partitioned_fact_prunes_month``; this measures what the pruned
-scan is worth in wall time. The amplified fact (~4.8M rows, 24 months)
+fact) is plan-asserted on the delta-log fact in
+``test_deltalog::test_partitioned_table_prunes_and_time_travels``; this
+measures what the pruned scan is worth in wall time. The amplified fact (~4.8M rows, 24 months)
 is written twice:
 
   flat        — one directory, month is just a column (many files, no
@@ -82,9 +82,9 @@ def main() -> None:
     part_dir = f"{base}/partitioned"
     try:
         fact.write.mode("overwrite").parquet(flat_dir)
-        # the engine's partitioned-write discipline: cluster on the
-        # partition column first so each month gets O(1) files, not one
-        # per upstream task (write_fact_partitioned's compact mode)
+        # the partitioned-write discipline: cluster on the partition
+        # column first so each month gets O(1) files, not one per
+        # upstream task
         fact.repartition(F.col("month")).write.mode("overwrite").partitionBy(
             "month"
         ).parquet(part_dir)

@@ -33,8 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from etl_loading_scripts_spark.pipeline.domain import build_domain
-from etl_loading_scripts_spark.pipeline.monthly_load import full_window
+from etl_loading_scripts_spark.pipeline.domain import build_domain, full_window
 from etl_loading_scripts_spark.pipeline.staged import (
     run_monthly_load_staged,
     shuffle_snapshot,
@@ -133,7 +132,7 @@ def run_query(spark, sf_dir: str, name: str, repeats: int) -> float:
     return round(best, 3)
 
 
-def staged_run(spark, sf_dir: str, bucketed: bool = False) -> dict:
+def staged_run(spark, sf_dir: str) -> dict:
     dom = build_domain(spark, sf_dir)
     window = full_window(dom)
     stage_dir = tempfile.mkdtemp(prefix="pipe100_")
@@ -142,17 +141,10 @@ def staged_run(spark, sf_dir: str, bucketed: bool = False) -> dict:
         _, metrics, report = run_monthly_load_staged(
             spark, dom, window, stage_dir,
             snapshot=lambda: shuffle_snapshot(spark),
-            bucketed=bucketed,
         )
         total = round(time.time() - t0, 3)
     finally:
         shutil.rmtree(stage_dir, ignore_errors=True)
-        if bucketed:  # drop THIS run's bucketed managed tables (scoped)
-            from etl_loading_scripts_spark.pipeline.staged import (
-                drop_bucketed_stage_tables,
-            )
-
-            drop_bucketed_stage_tables(spark, stage_dir)
     return {
         "total_wall": total,
         "metrics": metrics,
@@ -164,48 +156,6 @@ def staged_run(spark, sf_dir: str, bucketed: bool = False) -> dict:
             for r in report
         },
     }
-
-
-def main_bucketed() -> None:
-    """--bucketed: the VERDICT-r8 item-5 measurement — the 100x staged
-    load PLAIN vs BUCKETED (fact barriers co-located on txn_id, patron
-    dim states on proxy_id), per-stage wall + shuffle deltas, identical
-    validations asserted. Prints ONE JSON line."""
-    spark = get_spark(
-        app_name="bench_scale100_bucketed",
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4098"},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    assert shuffle_snapshot(spark) is not None, "UI needed for REST metrics"
-    t0 = time.time()
-    amplify(spark)
-    print(f"# amplified {COPIES}x in {time.time() - t0:.1f}s", file=sys.stderr)
-    plain = staged_run(spark, DST)
-    print(f"# plain: {plain['total_wall']}s", file=sys.stderr, flush=True)
-    buck = staged_run(spark, DST, bucketed=True)
-    print(f"# bucketed: {buck['total_wall']}s", file=sys.stderr, flush=True)
-    assert plain["metrics"] == buck["metrics"], (
-        plain["metrics"], buck["metrics"],
-    )
-    stages = []
-    for stage in plain["stages"]:
-        a = plain["stages"][stage]
-        b = buck["stages"].get(stage, {})
-        stages.append({
-            "stage": stage,
-            "wall_plain": a["wall"], "wall_bucketed": b.get("wall"),
-            "shuffle_mb_plain": round(a.get("shuffle_bytes", 0) / 1e6, 1),
-            "shuffle_mb_bucketed": round(b.get("shuffle_bytes", 0) / 1e6, 1),
-        })
-        print(f"# {stages[-1]}", file=sys.stderr, flush=True)
-    print(json.dumps({
-        "metric": "scale100_bucketed_vs_plain",
-        "copies": COPIES,
-        "total_wall_plain": plain["total_wall"],
-        "total_wall_bucketed": buck["total_wall"],
-        "validations_equal": True,
-        "stages": stages,
-    }))
 
 
 def main() -> None:
@@ -261,7 +211,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if "--bucketed" in sys.argv:
-        main_bucketed()
-    else:
-        main()
+    main()
