@@ -7,7 +7,9 @@ five stages with parquet checkpoint BARRIERS between them (the
 staging-table discipline the reference itself uses, ``S1:46`` stages
 ``#map`` for S3 to read), recording per stage:
 
-- wall seconds (stage transform + validation counts + checkpoint write),
+- wall seconds (stage transform + checkpoint write; the stage's
+  validation probes are observed on that write, not run as separate
+  counts),
 - cumulative shuffle bytes/records delta (when a ``snapshot`` callable
   is supplied — e.g. :func:`shuffle_snapshot` over the Spark REST API),
 - an optional per-output plan profile (``instrument`` hook — the test
@@ -18,7 +20,12 @@ anyway: each stage writes its staging output durably, so a failed stage
 restarts from the last barrier instead of replaying the whole load, and
 the per-stage shuffle table in SCALING.md is measured against exactly
 this shape. The barriers add one write+read of each stage's outputs —
-linear, partition-parallel, and the price of restartability.
+linear, partition-parallel, and the price of restartability. Both sides
+of a barrier are kept to the one job that moves the data: the read-back
+is pinned to the written frame's schema (no schema-inference job), and
+the reference's "must return 0 rows" checks (``validate_stage1..5``)
+ride on the write as ``DataFrame.observe`` metrics instead of one
+``count()`` job each over the checkpoint.
 """
 
 from __future__ import annotations
@@ -30,11 +37,12 @@ import urllib.request
 from dataclasses import replace
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_loading_scripts_spark.pipeline.domain import Domain
 from etl_loading_scripts_spark.pipeline.stages import (
+    evaluate,
     stage1_fingerprint_map,
     stage2_patron_dims,
     stage3_restaurant_map,
@@ -53,7 +61,7 @@ def shuffle_snapshot(spark: SparkSession) -> dict | None:
     REST API (needs ``spark.ui.enabled=true``; returns None when the UI
     is off — the engine's default session disables it). Monotone, so a
     before/after delta isolates one stage's shuffle volume including
-    its validation counts and checkpoint writes — metrics the per-query
+    its checkpoint writes — metrics the per-query
     executed-plan walk can't see across multiple actions."""
     url = spark.sparkContext.uiWebUrl
     if not url:
@@ -83,8 +91,10 @@ def run_monthly_load_staged(
     """Execute stages 1-5 with checkpoint barriers under ``stage_dir``.
 
     Returns ``(domain_out, metrics, stage_report)`` where ``metrics`` is
-    the stages' validation dict and ``stage_report`` has one entry per
-    barrier with wall seconds plus whatever ``snapshot``/``instrument``
+    the stages' validation dict, observed on the barrier writes (one
+    aggregate over the read-back for a resumed barrier), and
+    ``stage_report`` has one entry per barrier with wall seconds (stage
+    transform + checkpoint write) plus whatever ``snapshot``/``instrument``
     recorded. ``publish=True`` ends the close with one delta-log set
     commit of the five outputs under ``stage_dir/publish``, its fact
     OPTIMIZEd and Z-ORDERed before the set commit.
@@ -104,7 +114,32 @@ def run_monthly_load_staged(
     def _resumable(path: str) -> bool:
         return resume and os.path.exists(os.path.join(path, "_SUCCESS"))
 
-    def barrier(name: str, dfs: dict[str, DataFrame], stage_metrics: dict):
+    def checkpoint(df: DataFrame, path: str, checks: dict | None = None) -> DataFrame:
+        """Write ``df`` to ``path`` (unless a resumed checkpoint is already
+        there) and read it back with ``df``'s schema, so the read needs no
+        schema-inference job. ``checks`` (``{metric: aggregate Column}``)
+        are observed on the write itself; a resumed checkpoint has no
+        write, so they run as one aggregate over the read-back."""
+        if _resumable(path):
+            back = spark.read.schema(df.schema).parquet(path)
+            if checks:
+                metrics.update(evaluate(back, checks))
+            return back
+        if checks:
+            obs = Observation()
+            observed = df.observe(obs, *(c.alias(k) for k, c in checks.items()))
+            observed.write.mode("overwrite").parquet(path)
+            metrics.update(obs.get)
+        else:
+            df.write.mode("overwrite").parquet(path)
+        return spark.read.schema(df.schema).parquet(path)
+
+    def barrier(
+        name: str,
+        dfs: dict[str, DataFrame],
+        wall: float = 0.0,
+        checks: dict[str, dict] | None = None,
+    ):
         t0 = time.time()
         profs = {}
         ckpt = {}
@@ -113,14 +148,12 @@ def run_monthly_load_staged(
             path = os.path.join(stage_dir, f"{name}_{key}")
             if _resumable(path):
                 resumed.append(key)
-            else:
-                if instrument is not None:
-                    profs[key] = instrument(df)
-                df.write.mode("overwrite").parquet(path)
-            ckpt[key] = spark.read.parquet(path)
+            elif instrument is not None:
+                profs[key] = instrument(df)
+            ckpt[key] = checkpoint(df, path, (checks or {}).get(key))
         rec: dict = {
             "stage": name,
-            "wall_sec": round(time.time() - t0 + stage_metrics.pop("_wall", 0.0), 3),
+            "wall_sec": round(time.time() - t0 + wall, 3),
         }
         if resumed:
             rec["resumed"] = resumed
@@ -132,7 +165,6 @@ def run_monthly_load_staged(
                 barrier.last = snap
         if profs:
             rec["profiles"] = profs
-        metrics.update(stage_metrics)
         report.append(rec)
         return ckpt
 
@@ -147,10 +179,7 @@ def run_monthly_load_staged(
         17x-vs-10x shuffle slope at 10x fact (SCALING.md r6)."""
 
         def bar(df: DataFrame, name: str) -> DataFrame:
-            path = os.path.join(stage_dir, f"{stage}_{name}")
-            if not _resumable(path):
-                df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
+            return checkpoint(df, os.path.join(stage_dir, f"{stage}_{name}"))
 
         return bar
 
@@ -165,7 +194,6 @@ def run_monthly_load_staged(
             "pos_fingerprints": dom.pos_fingerprints,
             "dim_billing_group": dom.dim_billing_group,
         },
-        {},
     )
     raw = d0["raw"]
 
@@ -177,9 +205,9 @@ def run_monthly_load_staged(
     s1 = barrier(
         "s1_fingerprint_map",
         {"staging_map": staging_map, "registry": registry},
-        {"_wall": time.time() - t0},
+        time.time() - t0,
+        {"staging_map": validate_stage1()},
     )
-    metrics.update(validate_stage1(s1["staging_map"]))
 
     t0 = time.time()
     fact, dim_patron, _ = stage2_patron_dims(
@@ -189,9 +217,9 @@ def run_monthly_load_staged(
     s2 = barrier(
         "s2_patron_dims",
         {"fact": fact, "dim_patron": dim_patron},
-        {"_wall": time.time() - t0},
+        time.time() - t0,
+        {"fact": validate_stage2(window)},
     )
-    metrics.update(validate_stage2(s2["fact"], window))
 
     t0 = time.time()
     fact, dim_restaurant, _ = stage3_restaurant_map(
@@ -201,9 +229,9 @@ def run_monthly_load_staged(
     s3 = barrier(
         "s3_restaurant_map",
         {"fact": fact, "dim_restaurant": dim_restaurant},
-        {"_wall": time.time() - t0},
+        time.time() - t0,
+        {"fact": validate_stage3(window)},
     )
-    metrics.update(validate_stage3(s3["fact"], window))
 
     t0 = time.time()
     fact, dim_billing_group, _ = stage4_billing_groups(
@@ -213,9 +241,9 @@ def run_monthly_load_staged(
     s4 = barrier(
         "s4_billing_groups",
         {"fact": fact, "dim_billing_group": dim_billing_group},
-        {"_wall": time.time() - t0},
+        time.time() - t0,
+        {"fact": validate_stage4(window)},
     )
-    metrics.update(validate_stage4(s4["fact"], window))
 
     t0 = time.time()
     bi_defs = s1["registry"].filter(F.col("site_id").isNotNull()).select(
@@ -227,9 +255,9 @@ def run_monthly_load_staged(
     s5 = barrier(
         "s5_bi_reporting",
         {"dim_restaurant": dim_restaurant, "bridge": bridge},
-        {"_wall": time.time() - t0},
+        time.time() - t0,
+        {"bridge": validate_stage5()},
     )
-    metrics.update(validate_stage5(s5["bridge"]))
 
     out = replace(
         dom,

@@ -48,63 +48,67 @@ def _identity_barrier(df: DataFrame, name: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Post-hoc validation probes — the reference runs its "must return 0 rows"
-# checks as SEPARATE queries against the loaded tables (S3:91-99), not
-# fused into the load statements. Splitting them out lets the staged
-# runner validate CHECKPOINTED outputs (one parquet scan) instead of
-# re-deriving the whole stage lineage per count — at 10x the fact that
-# recomputation was the difference between a 17x and a 10x shuffle slope
-# (tools/bench_pipeline.py, SCALING.md r6).
+# Validation probes — the reference runs its "must return 0 rows" checks as
+# SEPARATE queries against the loaded tables (S3:91-99). Here each probe is
+# defined once, as ``{metric: aggregate Column}`` over the stage output, and
+# evaluated wherever that output is already being scanned: the staged
+# runner attaches it to the barrier write with ``DataFrame.observe`` (no
+# extra job; one ``agg`` over the read-back checkpoint when a resumed
+# barrier has no write), and a stage called with ``validate=True`` runs it
+# as one aggregate job via :func:`evaluate`.
 # ---------------------------------------------------------------------------
 
 
-def validate_stage1(final_map: DataFrame) -> dict:
+def evaluate(df: DataFrame, checks: dict[str, Column]) -> dict[str, int]:
+    """One aggregate job over ``df`` for every probe in ``checks``."""
+    row = df.agg(*(c.alias(k) for k, c in checks.items())).first()
+    return {k: int(row[k]) for k in checks}
+
+
+def validate_stage1() -> dict[str, Column]:
     """S1:29-41 'problem children': rows that STILL have no fingerprint."""
-    return {
-        "stage1_unmapped_after": final_map.filter(
-            F.col("fingerprint_id").isNull()
-        ).count()
-    }
+    return {"stage1_unmapped_after": F.count_if(F.col("fingerprint_id").isNull())}
 
 
-def validate_stage2(fact: DataFrame, window: tuple[int, int]) -> dict:
+def validate_stage2(window: tuple[int, int]) -> dict[str, Column]:
     """S2:90-94: zero unmapped patrons in the month window."""
     lo, hi = window
     return {
-        "stage2_unmapped_after": fact.filter(
+        "stage2_unmapped_after": F.count_if(
             (F.col("patron_id") == UNMAPPED_PATRON_ID) & month_guard(lo, hi)
-        ).count()
+        )
     }
 
 
-def validate_stage3(fact: DataFrame, window: tuple[int, int]) -> dict:
+def validate_stage3(window: tuple[int, int]) -> dict[str, Column]:
     """S3:91-99 unmapped-restaurant probe (nonzero expected when merchants
     lack a dim row — remediated monthly via the manual fuzzy wave,
     S3:50-64) + the fingerprint twin."""
     lo, hi = window
     return {
-        "stage3_unmapped_restaurants": fact.filter(
+        "stage3_unmapped_restaurants": F.count_if(
             (F.col("restaurant_key") == UNMAPPED_RESTAURANT_KEY) & month_guard(lo, hi)
-        ).count(),
-        "stage3_unmapped_fingerprints": fact.filter(
+        ),
+        "stage3_unmapped_fingerprints": F.count_if(
             (F.col("fingerprint_id") == UNMAPPED_FINGERPRINT_ID) & month_guard(lo, hi)
-        ).count(),
+        ),
     }
 
 
-def validate_stage4(fact: DataFrame, window: tuple[int, int]) -> dict:
+def validate_stage4(window: tuple[int, int]) -> dict[str, Column]:
     """S4:96-99: zero unmapped billing groups in the month window."""
     lo, hi = window
     return {
-        "stage4_unmapped_after": fact.filter(
+        "stage4_unmapped_after": F.count_if(
             (F.col("billing_group_key") == UNMAPPED_BILLING_GROUP_KEY)
             & month_guard(lo, hi)
-        ).count()
+        )
     }
 
 
-def validate_stage5(bridge: DataFrame) -> dict:
-    return {"stage5_bridge_rows": bridge.count()}
+def validate_stage5() -> dict[str, Column]:
+    """S5:54-67: rows of the restaurant↔definition bridge."""
+    return {"stage5_bridge_rows": F.count(F.lit(1))}
 
 
 # ---------------------------------------------------------------------------
@@ -126,9 +130,9 @@ def stage1_fingerprint_map(
     Returns (txn→fingerprint staging map, updated registry, metrics).
     ``barrier`` (df, name) → df lets the staged runner materialize the
     updated registry before the final probe re-reads it (the reference's
-    own staging-table discipline); ``validate=False`` defers the
-    zero-unmapped probe to :func:`validate_stage1` on checkpointed
-    output."""
+    own staging-table discipline); ``validate=False`` leaves the
+    zero-unmapped probe (:func:`validate_stage1`) to the caller, which
+    observes it on the checkpoint write."""
     probe = raw.select(
         "txn_id", *MERCHANT_FP_COLS, merchant_simhash().alias("sim_hash")
     )
@@ -166,7 +170,7 @@ def stage1_fingerprint_map(
     final_map = probe.join(
         F.broadcast(registry.select("sim_hash", "fingerprint_id")), "sim_hash", "left"
     ).select("txn_id", "fingerprint_id", "sim_hash")
-    metrics = validate_stage1(final_map) if validate else {}
+    metrics = evaluate(final_map, validate_stage1()) if validate else {}
     return final_map, registry, metrics
 
 
@@ -276,7 +280,7 @@ def stage2_patron_dims(
         set_cols={"patron_id": "mapped_patron"},
         guard=(F.col("patron_id") == UNMAPPED_PATRON_ID) & month_guard(lo, hi),
     )
-    metrics = validate_stage2(fact_out, window) if validate else {}
+    metrics = evaluate(fact_out, validate_stage2(window)) if validate else {}
     return fact_out, dim2, metrics
 
 
@@ -321,7 +325,7 @@ def stage3_restaurant_map(
         set_cols={"restaurant_key": "rk_new"},
         guard=(F.col("restaurant_key") == UNMAPPED_RESTAURANT_KEY) & month_guard(lo, hi),
     )
-    metrics = validate_stage3(fact2, window) if validate else {}
+    metrics = evaluate(fact2, validate_stage3(window)) if validate else {}
     return fact2, dim_clean, metrics
 
 
@@ -378,7 +382,7 @@ def stage4_billing_groups(
         guard=(F.col("billing_group_key") == UNMAPPED_BILLING_GROUP_KEY)
         & month_guard(lo, hi),
     )
-    metrics = validate_stage4(fact_out, window) if validate else {}
+    metrics = evaluate(fact_out, validate_stage4(window)) if validate else {}
     return fact_out, dim_out, metrics
 
 
@@ -406,7 +410,7 @@ def stage5_bi_reporting(
         .select("bi_reporting_id", "restaurant_key")
         .distinct()
     )
-    return dim_out, bridge, (validate_stage5(bridge) if validate else {})
+    return dim_out, bridge, (evaluate(bridge, validate_stage5()) if validate else {})
 
 
 def update_restaurant_rankings(

@@ -42,6 +42,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE re-plan a cached plan's output partitioning too. With
+        # Spark's default (false) a persisted frame keeps
+        # spark.sql.shuffle.partitions partitions, so every scan of a
+        # small cached diff (merge_dim_deltalog's full-outer join) runs
+        # one task per shuffle partition, most of them empty.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -279,6 +279,138 @@ def test_run_sql_script_returns_last_statement(spark):
     assert (row.n, row.lo) == (3, "0000")
 
 
+#: Spark jobs and tasks one month close (bootstrap through 1999-12, then
+#: close 2000-01 with publish) may run at the test session's config
+#: (``get_spark(shuffle_partitions=8)``). Plan-determined, not load-
+#: dependent: a change that adds a job or a stage to the close must
+#: re-measure and justify raising these. The job count is the same on
+#: every core count; the task count grows with it, because AQE coalesces
+#: shuffles down to the default parallelism (103 tasks on 1 core, 134 on
+#: 2, 153 on 4), and stops growing at the 8 shuffle partitions: the
+#: budget is that ceiling.
+CLOSE_JOB_BUDGET = 98
+CLOSE_TASK_BUDGET = 169
+
+
+def test_month_close_job_and_task_budget(spark, sf_dir, tmp_path):
+    """Job/task ratchet on one month close: the validations ride on the
+    barrier writes (no count job per probe), barrier read-backs infer
+    no schema, and AQE coalesces the dim merges' cached diffs. Jobs are
+    counted by job group with ``statusTracker``; tasks are the completed
+    tasks of those jobs' stages."""
+    import uuid
+
+    from etl_loading_scripts_spark.catalog import load_table
+
+    dom = build_domain(spark, sf_dir)
+    stage_dir = str(tmp_path / "warehouse")
+    dom, _, _ = run_monthly_load_staged(spark, dom, (19950101, 19991231), stage_dir)
+
+    # expected validation dict, from the input tables: every in-window
+    # row maps except those of merchants the restaurant dim lacks
+    n_supp = load_table(spark, sf_dir, "supplier").count()
+    in_month = load_table(spark, sf_dir, "orders").filter(
+        F.date_format("o_orderdate", "yyyyMM") == "200001"
+    )
+    golden = {
+        "stage1_unmapped_after": 0,
+        "stage2_unmapped_after": 0,
+        "stage3_unmapped_restaurants": in_month.filter(
+            F.col("o_orderkey") % n_supp % 4 == 0
+        ).count(),
+        "stage3_unmapped_fingerprints": 0,
+        "stage4_unmapped_after": 0,
+        "stage5_bridge_rows": sum(1 for s in range(n_supp) if s % 4 != 0),
+    }
+
+    sc = spark.sparkContext
+    group = f"close-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "month close budget")
+    try:
+        _, metrics, _ = run_monthly_load_staged(
+            spark, dom, (20000101, 20000131), stage_dir
+        )
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # job and stage records reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    # tasks run: a skipped stage runs none, and the status store may have
+    # evicted it already (it has no completion time, so it goes first)
+    stages = [tracker.getStageInfo(s) for s in stage_ids]
+    tasks = sum(st.numCompletedTasks for st in stages if st is not None)
+
+    assert metrics == golden
+    assert len(jobs) <= CLOSE_JOB_BUDGET, (
+        f"month close ran {len(jobs)} Spark jobs (budget {CLOSE_JOB_BUDGET})"
+    )
+    assert tasks <= CLOSE_TASK_BUDGET, (
+        f"month close ran {tasks} Spark tasks (budget {CLOSE_TASK_BUDGET})"
+    )
+
+
+def test_resumed_barriers_validate_like_observed_writes(spark, tmp_path, loaded):
+    """A resumed barrier has no write to observe its validation on, so
+    the runner aggregates over the read-back checkpoint instead. Resume
+    a load whose stage-4/5 barriers were lost: s1-s3 validate by that
+    fallback, s4-s5 by the observed rewrite, and every value equals both
+    the fresh run's and a direct count over the barrier's parquet."""
+    import os
+    import shutil
+
+    from etl_loading_scripts_spark.constants import (
+        UNMAPPED_BILLING_GROUP_KEY,
+        UNMAPPED_FINGERPRINT_ID,
+    )
+
+    dom, _, _, window = loaded
+    d = str(tmp_path / "resume")
+    _, metrics_fresh, _ = run_monthly_load_staged(
+        spark, dom, window, d, publish=False
+    )
+    for f in os.listdir(d):
+        if f.startswith(("s4_", "s5_")):
+            shutil.rmtree(os.path.join(d, f))
+    _, metrics_resumed, report = run_monthly_load_staged(
+        spark, dom, window, d, publish=False, resume=True
+    )
+    by_stage = {r["stage"]: r for r in report}
+    assert by_stage["s3_restaurant_map"]["resumed"] == ["fact", "dim_restaurant"]
+    assert "resumed" not in by_stage["s4_billing_groups"]
+    assert metrics_resumed == metrics_fresh
+
+    def barrier(name: str):
+        return spark.read.parquet(os.path.join(d, name))
+
+    def unmapped(name: str, col: str, sentinel: int) -> int:
+        return barrier(name).filter(
+            (F.col(col) == sentinel) & F.col("datekey").between(*window)
+        ).count()
+
+    assert metrics_resumed == {
+        "stage1_unmapped_after": barrier("s1_fingerprint_map_staging_map")
+        .filter(F.col("fingerprint_id").isNull())
+        .count(),
+        "stage2_unmapped_after": unmapped(
+            "s2_patron_dims_fact", "patron_id", UNMAPPED_PATRON_ID
+        ),
+        "stage3_unmapped_restaurants": unmapped(
+            "s3_restaurant_map_fact", "restaurant_key", UNMAPPED_RESTAURANT_KEY
+        ),
+        "stage3_unmapped_fingerprints": unmapped(
+            "s3_restaurant_map_fact", "fingerprint_id", UNMAPPED_FINGERPRINT_ID
+        ),
+        "stage4_unmapped_after": unmapped(
+            "s4_billing_groups_fact", "billing_group_key", UNMAPPED_BILLING_GROUP_KEY
+        ),
+        "stage5_bridge_rows": barrier("s5_bi_reporting_bridge").count(),
+    }
+
+
 @pytest.mark.soak
 def test_staged_load_matches_unstaged(spark, tmp_path, loaded):
     """A publishing run of the staged runner reports every barrier plus
