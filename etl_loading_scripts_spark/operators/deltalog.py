@@ -1217,6 +1217,23 @@ def write_delta_table(
     metaData update when it changed. CHECK constraints recorded in the
     table configuration are enforced on the staged rows before the
     commit (see :func:`add_check_constraint`)."""
+    return _write_delta(
+        df, table, mode, partition_by, merge_schema, operation_parameters
+    )[0]
+
+
+def _write_delta(
+    df: DataFrame,
+    table: str,
+    mode: str = "overwrite",
+    partition_by: Sequence[str] | None = None,
+    merge_schema: bool = False,
+    operation_parameters: Mapping[str, object] | None = None,
+    skip_empty: bool = False,
+) -> tuple[int | None, list[dict]]:
+    """:func:`write_delta_table` returning ``(version, add actions)``.
+    ``skip_empty=True`` drops the staged files and commits nothing when
+    they hold no row, returning ``(None, [])``."""
     if mode not in ("overwrite", "append"):
         raise ValueError("mode must be overwrite|append")
     avail = _all_versions(table)
@@ -1307,6 +1324,10 @@ def write_delta_table(
                 ]
             )
     adds = _stage_data_files(df, table, pcols)
+    if skip_empty and not sum(map(_num_records, adds)):
+        for a in adds:
+            os.remove(os.path.join(table, a["add"]["path"]))
+        return None, []
     actions.extend(adds)
     if meta is not None and table_constraints(meta):
         # CHECK constraints verified on the rows as WRITTEN (read back
@@ -1329,7 +1350,12 @@ def write_delta_table(
         0, _commit_info(op, {"mode": mode, **dict(operation_parameters or {})})
     )
     _commit(table, version, actions)
-    return version
+    return version, adds
+
+
+def _num_records(add_action: dict) -> int:
+    """Rows of a staged file, from the footer stats its add carries."""
+    return json.loads(add_action["add"]["stats"])["numRecords"]
 
 
 def _safe_upcast(src, dst) -> bool:
@@ -3400,8 +3426,9 @@ def insert_if_absent_deltalog(
     at a wide 10⁹-row dim that is a fraction of the bytes the diff
     reads) and ONE append commit; existing files are never rewritten,
     and re-running the same source is a no-op (idempotent, SURVEY §5).
-    Returns {"version": int | None, "rows_inserted": n}; version None
-    when every key already exists."""
+    Returns {"version": int | None, "rows_inserted": n}; version None,
+    and no commit, when every key already exists. ``n`` is read from the
+    appended files' footers, so the anti-join runs once."""
     on = list(on)
     avail = _all_versions(table)
     if not avail:
@@ -3462,14 +3489,14 @@ def insert_if_absent_deltalog(
             ]
         )
         aligned = _align_to_schema(aligned, schema, "insert_if_absent_deltalog")
-        n = aligned.count()
-        if n == 0:
-            return {"version": None, "rows_inserted": 0}
-        v = write_delta_table(
+        # the anti-join runs once, inside the append: the inserted rows
+        # are counted from the staged files' footers, and an append that
+        # staged no row commits nothing
+        v, adds = _write_delta(
             aligned, table, mode="append",
-            operation_parameters=operation_parameters,
+            operation_parameters=operation_parameters, skip_empty=True,
         )
-        return {"version": v, "rows_inserted": n}
+        return {"version": v, "rows_inserted": sum(map(_num_records, adds))}
 
     return _occ_retry(_attempt, 3)
 
@@ -4495,9 +4522,10 @@ def _rebootstrap_safe(base_dir: str, name: str, tpath: str) -> bool:
 
 def _publish_orphan_range(table: str, lo: int, hi: int) -> bool:
     """True iff EVERY commit in versions (lo, hi] is provably
-    PUBLISH-ORIGINATED — a publishSet-stamped MERGE or RESTORE (the
-    incremental publish stamps both its merges and its own fence
-    restores, so a double-crashed publish stays fenceable), or
+    PUBLISH-ORIGINATED — a publishSet-stamped MERGE, RESTORE, WRITE or
+    APPEND (the incremental publish stamps its merges, bootstrap
+    overwrites, insert-grain appends and its own fence restores, so a
+    double-crashed publish stays fenceable), or
     row-AND-metadata-preserving maintenance (no metaData/protocol
     action, all add/remove dataChange=false: OPTIMIZE/compaction) —
     and therefore safe for the orphan fence to restore away. Anything
@@ -4519,8 +4547,9 @@ def _publish_orphan_range(table: str, lo: int, hi: int) -> bool:
         # WRITE joined the stamped set in r11: the publish stamps its
         # bootstrap overwrites too, so a racing publisher's orphaned
         # bootstrap is provably debris (two publishers bootstrapping a
-        # fresh warehouse concurrently — the mp race test's shape)
-        if op in ("MERGE", "RESTORE", "WRITE") and "publishSet" in params:
+        # fresh warehouse concurrently — the mp race test's shape);
+        # APPEND is the "insert" grain's stamped insert_if_absent
+        if op in ("MERGE", "RESTORE", "WRITE", "APPEND") and "publishSet" in params:
             continue
         if any("metaData" in a or "protocol" in a for a in acts):
             # ADD/DROP CONSTRAINT, schema evolution, protocol bumps:
@@ -4726,6 +4755,24 @@ def publish_set_deltalog(
     script.sql:23-28``). Same bootstrap/fence/orphan semantics as the
     fact grain, minus the month machinery.
 
+    ``{"grain": "insert"}`` is for a dim the caller only ever grows by
+    insert-if-absent: after the bootstrap, each publish appends the
+    frame's rows whose ``on`` key the table lacks, through
+    :func:`insert_if_absent_deltalog` with the ``publishSet`` stamp, and
+    never rewrites or deletes a row. The published dim is the last
+    published dim plus the new keys; it equals the "dim" grain's
+    full-sync copy whenever the frame extends the last published state,
+    as it does when each close starts from the previous close's output.
+    An optional ``"growth"`` in the spec carries the row count the
+    caller already knows the frame added over that state; ``0`` skips
+    the insert with no Spark job and no commit. Either way a publish
+    that adds nothing pins the table's current version, which is the
+    version the last set pinned once the usual orphan fence has run
+    (only an out-of-band commit past the pin, which the fence keeps,
+    makes them differ). Unlike the full sync, an unfenceable range
+    (orphan insert followed by an out-of-band commit) keeps the
+    orphan's rows.
+
     Concurrency (round 11, ADVICE r10): the bootstrap overwrite is
     publishSet-STAMPED, so a first publish that crashes after its
     overwrite in an established warehouse is provably re-bootstrappable
@@ -4802,12 +4849,22 @@ def publish_set_deltalog(
         tpath = os.path.join(base_dir, name)
         spec = dict(incr[name])
         grain = spec.pop("grain", "fact")
-        if grain not in ("fact", "dim"):
+        if grain not in ("fact", "dim", "insert"):
             raise ValueError(
-                f"incremental grain must be 'fact' or 'dim', got {grain!r}"
+                "incremental grain must be 'fact', 'dim' or 'insert', "
+                f"got {grain!r}"
             )
         on = spec.pop("on")
-        if grain == "dim":
+        keyed_pby = None
+        if grain == "insert":
+            growth = spec.pop("growth", None)
+            if spec:
+                raise ValueError(
+                    f"insert-grain incremental spec for {name} can't carry "
+                    f"{sorted(spec)}"
+                )
+            datekey_col = window = None
+        elif grain == "dim":
             bad_keys = sorted({"datekey_col", "window"} & set(spec))
             if bad_keys:
                 raise ValueError(
@@ -4863,7 +4920,7 @@ def publish_set_deltalog(
             # isn't findable (scan limit, expired set JSONs, any
             # out-of-band commit) still merges on top, unfenced —
             # never overwritten.
-            if grain == "dim":
+            if grain != "fact":
                 return _occ_retry(
                     lambda: write_delta_table(
                         df, tpath, mode="overwrite",
@@ -4966,6 +5023,17 @@ def publish_set_deltalog(
                             delete_unmatched_source=True,
                             operation_parameters={"publishSet": "true"},
                         )
+        if grain == "insert":
+            if growth != 0:
+                res = insert_if_absent_deltalog(
+                    df.sparkSession, tpath, df, on,
+                    operation_parameters={"publishSet": "true"},
+                )
+                if name in opts and res["version"] is not None:
+                    return _maybe_optimize(
+                        name, df.sparkSession, tpath, res["version"]
+                    )
+            return _all_versions(tpath)[-1]  # nothing absent: pin as-is
         if grain == "dim":
             res = merge_dim_deltalog_with_retry(
                 df.sparkSession, tpath, df, on,

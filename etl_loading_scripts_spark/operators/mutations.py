@@ -9,18 +9,22 @@ commit side lives in ``deltalog.py``.
 Scale notes (100 TB): each primitive is a join or window over the target's
 key — Catalyst picks broadcast when the mapping side is small, sort-merge
 otherwise, and AQE handles skew. None of them collect to the driver except
-``allocate_surrogate_keys``'s single MAX scalar (one row). The fact-table
-variants are designed to be run against a *month partition*, not the whole
-table — the reference's own incremental guards (``DateKey BETWEEN`` +
-sentinel keys) mean only ~1/100th of the data is rewritten per run.
+``allocate_surrogate_keys``'s single MAX scalar (one row), and that one is
+read from the parquet footers without a Spark job whenever the existing
+keys are a bare local parquet scan. The fact-table variants are designed
+to be run against a *month partition*, not the whole table — the
+reference's own incremental guards (``DateKey BETWEEN`` + sentinel keys)
+mean only ~1/100th of the data is rewritten per run.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 from pyspark.sql.window import Window
 
 _SRC_PREFIX = "__src__"
@@ -238,6 +242,107 @@ def delete_where(df: DataFrame, cond: Column) -> DataFrame:
 #: early (one extra count + range exchange) is mild.
 SURROGATE_WINDOW_MAX_ROWS = 100_000
 
+#: Unary logical operators whose output has at most as many rows as their
+#: input (a global Aggregate is the one exception: it yields one row from
+#: none). The optimizer has already rewritten Distinct and dropDuplicates
+#: into Aggregates.
+_ROW_BOUNDED = frozenset({"Project", "Filter", "Aggregate", "Sort"})
+_INTEGRAL_TYPES = (ByteType, ShortType, IntegerType, LongType)
+
+
+def _local_parquet_files(node) -> list[str] | None:
+    """The local file paths a logical parquet scan reads, or None when
+    ``node`` is anything else (an in-memory relation, another format,
+    a remote filesystem)."""
+    if node.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = node.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+    ):
+        return None
+    paths = []
+    for uri in rel.location().inputFiles():
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("", "file"):
+            return None
+        paths.append(unquote(parsed.path))
+    return paths
+
+
+def _plan_row_bound(node) -> int | None:
+    """Upper bound on the rows of a logical plan, summed from parquet
+    footers: defined when every leaf is a local parquet scan and every
+    operator above the leaves is row-bounded (see ``_ROW_BOUNDED``),
+    a Union, or a LeftSemi/LeftAnti join (bounded by its left side)."""
+    import pyarrow.parquet as pq
+
+    files = _local_parquet_files(node)
+    if files is not None:
+        return sum(pq.read_metadata(f).num_rows for f in files)
+    kind = node.getClass().getSimpleName()
+    children = node.children()
+    kids = [children.apply(i) for i in range(children.size())]
+    if kind == "Union":
+        bounds = [_plan_row_bound(k) for k in kids]
+        return None if None in bounds else sum(bounds)
+    if kind == "Join":
+        if node.joinType().toString() not in ("LeftSemi", "LeftAnti"):
+            return None
+        return _plan_row_bound(kids[0])
+    if kind not in _ROW_BOUNDED or len(kids) != 1:
+        return None
+    bound = _plan_row_bound(kids[0])
+    if bound is not None and kind == "Aggregate":
+        if node.groupingExpressions().isEmpty():
+            bound = max(bound, 1)
+    return bound
+
+
+def _footer_max(existing: DataFrame, key_col: str) -> tuple[bool, int | None]:
+    """``(True, MAX(key_col))`` read from parquet footer statistics when
+    ``existing`` is a bare local parquet scan of an integral key and every
+    row group carries exact integer min/max statistics for it; ``(False,
+    None)`` otherwise. Empty files have no row groups and add nothing, so
+    an all-empty scan answers ``(True, None)`` like ``MAX`` over no rows."""
+    import pyarrow.parquet as pq
+
+    if not isinstance(existing.schema[key_col].dataType, _INTEGRAL_TYPES):
+        return False, None
+    files = _local_parquet_files(existing._jdf.queryExecution().optimizedPlan())
+    if files is None:
+        return False, None
+    best = None
+    for f in files:
+        md = pq.read_metadata(f)
+        for rg in range(md.num_row_groups):
+            group = md.row_group(rg)
+            col = next(
+                (
+                    group.column(ci)
+                    for ci in range(group.num_columns)
+                    if group.column(ci).path_in_schema == key_col
+                ),
+                None,
+            )
+            if col is None or col.physical_type not in ("INT32", "INT64"):
+                return False, None
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                return False, None
+            best = st.max if best is None else max(best, st.max)
+    return True, best
+
+
+def _max_key(existing: DataFrame, key_col: str) -> int:
+    """``MAX(existing.key_col)``, 0 when there is none: from the parquet
+    footers when they answer it, else one aggregate job."""
+    known, max_key = _footer_max(existing, key_col)
+    if not known:
+        max_key = existing.agg(F.max(key_col)).collect()[0][0]
+    return 0 if max_key is None else max_key
+
 
 def allocate_surrogate_keys(
     new_rows: DataFrame,
@@ -253,22 +358,39 @@ def allocate_surrogate_keys(
     routed to :func:`allocate_surrogate_keys_partitioned`, which assigns
     the IDENTICAL keys (property-tested) without the unpartitioned
     window's single-task sort — a future caller can no longer grab the
-    bottleneck path for a billion-row table by accident. The routing
-    count is one extra action over ``new_rows``; for the dimension-sized
-    inputs the reference allocates for (10⁴–10⁶ rows) it is trivial, and
-    for anything larger it is noise next to the sort it avoids. Pass
-    ``max_window_rows=None`` to pin the window path (only when the caller
-    can PROVE the input is small and the extra count matters).
+    bottleneck path for a billion-row table by accident. Pass
+    ``max_window_rows=None`` to pin the window path.
+
+    No Spark job for what the parquet footers already hold:
+
+    - **Routing** uses an upper bound on ``new_rows``' rows summed from
+      the footers' row counts, when every leaf of its optimized plan is
+      a local parquet scan and no operator above them can add rows
+      (Project, Filter, Aggregate/Distinct, Sort, Union, LeftSemi/LeftAnti
+      join). A bound above ``max_window_rows`` routes to the partitioned
+      path even if fewer rows survive; both paths give the same keys.
+    - **MAX** comes from the footers' exact integer statistics when
+      ``existing`` is a bare local parquet scan (the staged runner's
+      barrier read-backs are).
+
+    Any other shape falls back to a routing ``count()`` and a ``MAX``
+    aggregate: an in-memory or non-parquet leaf, an inner or outer join
+    in ``new_rows``, a filtered ``existing``, a row group with no
+    statistics for the key (e.g. all nulls) or a non-integral key. The
+    keys are identical on every path.
 
     Ordering by the natural key — never ``monotonically_increasing_id`` —
     keeps keys stable across retries.
     """
-    if max_window_rows is not None and new_rows.count() > max_window_rows:
-        return allocate_surrogate_keys_partitioned(
-            new_rows, existing, key_col, order_by
-        )
-    max_key = existing.agg(F.max(key_col)).collect()[0][0]
-    base = 0 if max_key is None else max_key
+    if max_window_rows is not None:
+        rows = _plan_row_bound(new_rows._jdf.queryExecution().optimizedPlan())
+        if rows is None:
+            rows = new_rows.count()
+        if rows > max_window_rows:
+            return allocate_surrogate_keys_partitioned(
+                new_rows, existing, key_col, order_by
+            )
+    base = _max_key(existing, key_col)
     w = Window.orderBy(*[F.col(c) for c in order_by])
     return new_rows.withColumn(key_col, (F.lit(base) + F.row_number().over(w)).cast("long"))
 
@@ -288,7 +410,9 @@ def allocate_surrogate_keys_partitioned(
     Plan: range-repartition on the natural key — range partition *i* holds
     keys strictly below partition *i+1*'s, so per-partition ``row_number``
     plus the cumulative count of earlier partitions IS the global rank.
-    Driver traffic is one long per partition (the counts), not data.
+    Driver traffic is one long per partition (the counts), not data. The
+    MAX comes from the parquet footers when ``existing`` is a bare local
+    parquet scan, as in :func:`allocate_surrogate_keys`.
 
     Keys are retry-deterministic because bucket membership is a *logical*
     comparison against driver-collected boundary literals, never a
@@ -300,8 +424,7 @@ def allocate_surrogate_keys_partitioned(
     """
     from etl_loading_scripts_spark.operators.ranks import global_row_number
 
-    max_key = existing.agg(F.max(key_col)).collect()[0][0]
-    base = 0 if max_key is None else max_key
+    base = _max_key(existing, key_col)
     ranked = global_row_number(
         new_rows, order_by, rank_col="__rank__", num_partitions=num_partitions
     )

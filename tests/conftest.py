@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -21,3 +22,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_TEST_DIR
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)``: the Spark jobs ``fn()`` runs, counted by job group
+    with ``statusTracker``."""
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        group = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        # job records reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -10,7 +10,6 @@ nanosAsLong`` is on. The driver builds its own vanilla SparkSession, so
 from __future__ import annotations
 
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -79,23 +78,6 @@ def test_load_events_sets_conf_at_read_time(vanilla_conf, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def _jobs_of(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted by job group with
-    ``statusTracker``."""
-    sc = spark.sparkContext
-    group = f"catalog-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "catalog job count")
-    try:
-        fn()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    # job records reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_load_table_sees_in_place_part_rewrite(spark, tmp_path):
     """Rewriting a directory table's part file in place leaves the
     directory's mtime as it was; the next load must still see the new
@@ -116,11 +98,11 @@ def test_load_table_sees_in_place_part_rewrite(spark, tmp_path):
     assert sorted(df.toPandas().o_extra) == ["a", "b"]
 
 
-def test_warm_load_table_runs_no_spark_job(spark, sf_dir, tmp_path):
+def test_warm_load_table_runs_no_spark_job(spark, sf_dir, tmp_path, jobs_of):
     """The schema is inferred (one job) on the first load only; a changed
     inference conf re-resolves it."""
-    cold = _jobs_of(spark, lambda: load_table(spark, sf_dir, "orders"))
-    warm = _jobs_of(spark, lambda: load_table(spark, sf_dir, "orders"))
+    cold = jobs_of(lambda: load_table(spark, sf_dir, "orders"))
+    warm = jobs_of(lambda: load_table(spark, sf_dir, "orders"))
     assert cold <= 1
     assert warm == 0
 
@@ -220,7 +202,7 @@ READ_MIX_JOB_BUDGET = {
 
 
 @pytest.mark.parametrize("entry", BI_QUERIES + CORPUS_QUERIES)
-def test_read_mix_entry_job_budget(spark, sf_dir, entry):
+def test_read_mix_entry_job_budget(spark, sf_dir, entry, jobs_of):
     """Job ratchet per registry entry of perfbench's ``bi_reads_4c`` mix:
     the jobs one warm call runs to ``toPandas()`` at the test fixture
     (sf0.001, ``get_spark(shuffle_partitions=8)``), after a warm-up call.
@@ -256,7 +238,7 @@ def test_read_mix_entry_job_budget(spark, sf_dir, entry):
         return REGISTRY[entry].spark(spark, sf_dir).toPandas()
 
     run()
-    jobs = _jobs_of(spark, run)
+    jobs = jobs_of(run)
     assert jobs <= READ_MIX_JOB_BUDGET[entry], (
         f"{entry} ran {jobs} Spark jobs (budget {READ_MIX_JOB_BUDGET[entry]})"
     )

@@ -3917,6 +3917,48 @@ def test_insert_if_absent_deltalog_fast_path(spark, tmp_path):
     assert dl.read_delta_table(spark, d).filter("k = 300").first()["nm"] is None
 
 
+def test_insert_if_absent_counts_from_footers_and_skips_empty(
+    spark, tmp_path, jobs_of
+):
+    """The anti-join runs once: the inserted rows are counted from the
+    appended files' footers (6 jobs; 11 with the former ``count()``
+    before the append), and an insert that finds every key present
+    commits no version and leaves no staged file behind."""
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    d = str(tmp_path / "ifafooter")
+    dl.write_delta_table(
+        spark.range(100).select(
+            F.col("id").alias("k"),
+            F.concat(F.lit("n"), F.col("id")).alias("nm"),
+        ).coalesce(2),
+        d,
+    )
+    src = spark.createDataFrame(
+        [(5, "dupe"), (200, "new-a"), (201, "new-b")], "k long, nm string"
+    )
+    res = {}
+    jobs = jobs_of(lambda: res.update(dl.insert_if_absent_deltalog(spark, d, src, ["k"])))
+    assert res == {"version": 1, "rows_inserted": 2}
+    assert jobs <= 6, f"non-empty insert ran {jobs} Spark jobs (ratchet: 6)"
+
+    def data_files():
+        return sorted(
+            os.path.relpath(os.path.join(root, f), d)
+            for root, _, files in os.walk(d)
+            if "_delta_log" not in root
+            for f in files
+            if f.endswith(".parquet")
+        )
+
+    files_before = data_files()
+    again = dl.insert_if_absent_deltalog(spark, d, src, ["k"])
+    assert again == {"version": None, "rows_inserted": 0}
+    assert dl._all_versions(d) == [0, 1]
+    assert data_files() == files_before
+    assert dl.read_delta_table(spark, d).count() == 102
+
+
 @pytest.mark.soak
 def test_multiprocess_incremental_publishers_converge(spark, tmp_path):
     """TRUE two-OS-process version of the ADVICE-r10 lost-update race:

@@ -469,3 +469,137 @@ def test_top1_per_group_agg_equals_window_and_partially_aggregates(spark):
         [(1, 2, "x")], "g int, o int, `a.b` string"
     )
     assert top1_per_group_agg(ddf, ["g"], "o").collect()[0]["a.b"] == "x"
+
+
+# --------------------------------------------------------------------------
+# surrogate keys from parquet footers: no Spark job for routing or MAX
+# --------------------------------------------------------------------------
+
+
+def _barrier(spark, tmp_path, name, rows, schema, *more_files):
+    """Write ``rows`` (and each of ``more_files``, a row list, as another
+    file) as parquet and read them back pinned to ``schema``, the shape
+    of a staged-runner barrier read-back."""
+    path = str(tmp_path / name)
+    spark.createDataFrame(rows, schema).coalesce(2).write.parquet(path)
+    for more in more_files:
+        spark.createDataFrame(more, schema).write.mode("append").parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _plan_of(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def _keys(df):
+    return sorted((r.nk, r.sk) for r in df.collect())
+
+
+def _expected_keys(names, base):
+    return [(nk, base + i) for i, nk in enumerate(sorted(names), start=1)]
+
+
+def test_allocate_surrogate_keys_from_footers_runs_no_job(spark, tmp_path, jobs_of):
+    """On barrier-shaped inputs the routing bound and the MAX come from
+    the parquet footers: building the allocated frame runs no Spark job,
+    and its keys equal the pinned window path's."""
+    existing = _barrier(
+        spark, tmp_path, "existing",
+        [(i, f"e{i:04d}") for i in range(1, 41)], "sk long, nk string",
+    )
+    new = _barrier(
+        spark, tmp_path, "new",
+        [(None, f"n{i:04d}") for i in range(60)] * 2, "sk long, nk string",
+    )
+    gone = _barrier(spark, tmp_path, "gone", [("n0007",)], "nk string")
+    # every operator the bound walks: Filter, Aggregate, semi/anti join, Union
+    new_rows = (
+        new.filter(F.col("nk") != "n0003")
+        .distinct()
+        .join(gone, "nk", "left_anti")
+        .unionByName(new.filter(F.col("nk") == "n0099"))
+        .join(new.select("nk"), "nk", "left_semi")
+    )
+    built = {}
+    assert jobs_of(
+        lambda: built.update(
+            out=allocate_surrogate_keys(new_rows, existing, "sk", ["nk"])
+        )
+    ) == 0
+    names = {f"n{i:04d}" for i in range(60)} - {"n0003", "n0007"}
+    pinned = allocate_surrogate_keys(
+        new_rows, existing, "sk", ["nk"], max_window_rows=None
+    )
+    assert _keys(built["out"]) == _keys(pinned) == _expected_keys(names, 40)
+
+
+def test_allocate_surrogate_keys_falls_back_where_footers_cannot_answer(
+    spark, tmp_path, jobs_of
+):
+    """Each shape the footers cannot answer keeps its job and the exact
+    keys: a filtered ``existing``, a key column with an all-null row
+    group or a non-integral type, an in-memory leaf, and an inner or
+    left-outer join inside ``new_rows``."""
+    schema = "sk long, nk string"
+    existing = _barrier(
+        spark, tmp_path, "existing", [(i, f"e{i:04d}") for i in range(1, 41)], schema
+    )
+    new = _barrier(
+        spark, tmp_path, "new", [(None, f"n{i:04d}") for i in range(30)], schema
+    )
+    names = {f"n{i:04d}" for i in range(30)}
+    # a file whose row group holds only null keys, next to one with values
+    half_null = _barrier(
+        spark, tmp_path, "half_null", [(None, "x"), (None, "y")], schema,
+        [(149, "z")],
+    )
+    double_key = _barrier(
+        spark, tmp_path, "double_key", [(7.0, "d"), (12.0, "e")],
+        "sk double, nk string",
+    )
+    in_memory = spark.createDataFrame(
+        [(None, nk) for nk in sorted(names)], schema
+    )
+    other = _barrier(spark, tmp_path, "other", [(nk,) for nk in names], "nk string")
+    cases = {
+        "filtered existing": (new, existing.filter(F.col("sk") < 25), 24),
+        "all-null row group": (new, half_null, 149),
+        "non-integral key": (new, double_key, 12),
+        "in-memory leaf": (in_memory, existing, 40),
+        "inner join": (new.join(other, "nk"), existing, 40),
+        "left-outer join": (new.join(other, "nk", "left"), existing, 40),
+    }
+    for case, (new_rows, existing_rows, base) in cases.items():
+        built = {}
+        jobs = jobs_of(
+            lambda: built.update(
+                out=allocate_surrogate_keys(new_rows, existing_rows, "sk", ["nk"])
+            )
+        )
+        assert jobs >= 1, case
+        got = [(nk, int(sk)) for nk, sk in _keys(built["out"])]
+        assert got == _expected_keys(names, base), case
+
+
+def test_allocate_surrogate_keys_routes_on_footer_bound(spark, tmp_path):
+    """The footer bound counts rows before the filter: a bound above
+    ``max_window_rows`` takes the partitioned path even though fewer
+    rows survive, with the same keys."""
+    existing = _barrier(spark, tmp_path, "existing", [(5, "e")], "sk long, nk string")
+    new = _barrier(
+        spark, tmp_path, "new",
+        [(None, f"n{i:04d}") for i in range(40)], "sk long, nk string",
+    )
+    new_rows = new.filter(F.col("nk") < "n0005")  # 5 rows, bound 40
+    routed = allocate_surrogate_keys(
+        new_rows, existing, "sk", ["nk"], max_window_rows=10
+    )
+    pinned = allocate_surrogate_keys(
+        new_rows, existing, "sk", ["nk"], max_window_rows=None
+    )
+    assert "SinglePartition" not in _plan_of(routed)  # partitioned path
+    assert "SinglePartition" in _plan_of(pinned)
+    names = [f"n{i:04d}" for i in range(5)]
+    assert _keys(routed) == _keys(pinned) == _expected_keys(names, 5)

@@ -285,17 +285,19 @@ def test_run_sql_script_returns_last_statement(spark):
 #: dependent: a change that adds a job or a stage to the close must
 #: re-measure and justify raising these. The job count is the same on
 #: every core count; the task count grows with it, because AQE coalesces
-#: shuffles down to the default parallelism (103 tasks on 1 core, 134 on
-#: 2, 153 on 4), and stops growing at the 8 shuffle partitions: the
+#: shuffles down to the default parallelism (76 tasks on 1 core, 97 on
+#: 2, 109 on 4), and stops growing at the 8 shuffle partitions: the
 #: budget is that ceiling.
-CLOSE_JOB_BUDGET = 98
-CLOSE_TASK_BUDGET = 169
+CLOSE_JOB_BUDGET = 71
+CLOSE_TASK_BUDGET = 119
 
 
 def test_month_close_job_and_task_budget(spark, sf_dir, tmp_path):
     """Job/task ratchet on one month close: the validations ride on the
     barrier writes (no count job per probe), barrier read-backs infer
-    no schema, and AQE coalesces the dim merges' cached diffs. Jobs are
+    no schema, AQE coalesces the dim merge's cached diff, surrogate keys
+    route and offset from parquet footers, and dims that did not grow
+    publish without a job. Jobs are
     counted by job group with ``statusTracker``; tasks are the completed
     tasks of those jobs' stages."""
     import uuid
@@ -351,6 +353,143 @@ def test_month_close_job_and_task_budget(spark, sf_dir, tmp_path):
     assert tasks <= CLOSE_TASK_BUDGET, (
         f"month close ran {tasks} Spark tasks (budget {CLOSE_TASK_BUDGET})"
     )
+
+
+#: the dims the stages grow only by insert-if-absent: the close publishes
+#: them through the "insert" grain of publish_set_deltalog
+INSERT_DIMS = ("dim_patron", "pos_fingerprints", "dim_billing_group")
+CLOSE_WINDOW = (20000101, 20000131)
+
+
+@pytest.fixture(scope="module")
+def bootstrapped(spark, sf_dir, tmp_path_factory):
+    """A warehouse the staged runner bootstrapped through 1999-12:
+    (returned Domain, stage dir). Tests close 2000-01 in a copy of its
+    published set (:func:`_warehouse_copy`), so the Domain's barrier
+    files under the bootstrap's stage dir are never overwritten."""
+    dom = build_domain(spark, sf_dir)
+    d = str(tmp_path_factory.mktemp("bootstrapped"))
+    out, _, _ = run_monthly_load_staged(spark, dom, (19950101, 19991231), d)
+    return out, d
+
+
+def _warehouse_copy(boot_dir: str, tmp_path) -> tuple[str, str]:
+    """A fresh stage dir holding a copy of the bootstrapped published
+    set: (stage dir, publish dir)."""
+    import os
+    import shutil
+
+    stage = str(tmp_path / "warehouse")
+    base = os.path.join(stage, "publish")
+    shutil.copytree(os.path.join(boot_dir, "publish"), base)
+    return stage, base
+
+
+def _set_pins(base: str) -> dict[str, int]:
+    """{table: delta version} the newest set commit under ``base`` pins."""
+    import os
+
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    coord = os.path.join(base, dl._SET_DIR)
+    return dict(dl._set_commit_at(coord, dl._versions(coord)[-1])["tables"])
+
+
+def test_close_publishes_ungrown_dims_without_commit(spark, tmp_path, bootstrapped):
+    """Every dim is complete after the bootstrap, so the close grows none
+    of the insert-grain dims: they get no new table version, and the
+    new set pins their previous versions next to the fact's new one."""
+    import os
+
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    dom, boot_dir = bootstrapped
+    stage, base = _warehouse_copy(boot_dir, tmp_path)
+    pins_before = _set_pins(base)
+    logs_before = {t: dl._all_versions(os.path.join(base, t)) for t in INSERT_DIMS}
+
+    _, _, report = run_monthly_load_staged(spark, dom, CLOSE_WINDOW, stage)
+
+    pins_after = _set_pins(base)
+    assert report[-1]["set_version"] == dl.published_set_versions(base)[-1] == 1
+    for t in INSERT_DIMS:
+        assert dl._all_versions(os.path.join(base, t)) == logs_before[t], t
+        assert pins_after[t] == pins_before[t], t
+    assert pins_after["fact_transaction"] > pins_before["fact_transaction"]
+
+
+def test_close_inserts_only_dim_growth(spark, tmp_path, bootstrapped):
+    """A close whose input dim lacks rows of the published table (two
+    seeded billing groups) re-inserts their names under new keys: the
+    publish appends exactly those rows and deletes nothing, where a
+    full sync would have dropped the two published rows."""
+    from dataclasses import replace
+
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    dom, boot_dir = bootstrapped
+    stage, base = _warehouse_copy(boot_dir, tmp_path)
+    tpath = f"{base}/dim_billing_group"
+
+    def rows(df):
+        return {(r.billing_group_key, r.billing_group_name) for r in df.collect()}
+
+    pins_before = _set_pins(base)
+    before = rows(dl.read_delta_table(spark, tpath))
+    shrunk = replace(
+        dom,
+        dim_billing_group=dom.dim_billing_group.filter(
+            ~F.col("billing_group_key").isin(1, 3)
+        ),
+    )
+    out, _, _ = run_monthly_load_staged(spark, shrunk, CLOSE_WINDOW, stage)
+
+    pins_after = _set_pins(base)
+    after = rows(dl.read_published_set_deltalog(spark, base)["dim_billing_group"])
+    grown = after - before
+    assert before <= after  # nothing deleted
+    assert {name for _, name in grown} == {"BG 0", "BG 2"}
+    assert min(k for k, _ in grown) > max(k for k, _ in before)
+    assert grown == rows(out.dim_billing_group) - before
+    acts = dl._read_actions(tpath, pins_after["dim_billing_group"])
+    info = next(a["commitInfo"] for a in acts if "commitInfo" in a)
+    assert info["operation"] == "APPEND"
+    assert info["operationParameters"]["publishSet"] == "true"
+    assert not any("remove" in a for a in acts)
+    for t in ("dim_patron", "pos_fingerprints"):
+        assert pins_after[t] == pins_before[t], t
+
+
+def test_close_fences_orphan_insert(spark, tmp_path, bootstrapped):
+    """A publish that crashed after its stamped insert-grain append but
+    before its set commit leaves an orphan table version; the next
+    close fences it, so the orphan row never reaches a set."""
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    dom, boot_dir = bootstrapped
+    stage, base = _warehouse_copy(boot_dir, tmp_path)
+    tpath = f"{base}/dim_patron"
+    pinned = _set_pins(base)["dim_patron"]
+
+    def rows(df):
+        return sorted(map(tuple, df.select("patron_id", "proxy_id").collect()))
+
+    published = rows(dl.read_delta_table(spark, tpath, version=pinned))
+    orphan = (
+        dl.read_delta_table(spark, tpath)
+        .limit(1)
+        .withColumn("patron_id", F.lit(10**9).cast("long"))
+        .withColumn("proxy_id", F.lit("orphan"))
+    )
+    res = dl.insert_if_absent_deltalog(
+        spark, tpath, orphan, ["patron_id"],
+        operation_parameters={"publishSet": "true"},
+    )
+    assert res == {"version": pinned + 1, "rows_inserted": 1}
+
+    run_monthly_load_staged(spark, dom, CLOSE_WINDOW, stage)
+
+    assert rows(dl.read_published_set_deltalog(spark, base)["dim_patron"]) == published
 
 
 def test_resumed_barriers_validate_like_observed_writes(spark, tmp_path, loaded):

@@ -147,6 +147,78 @@ def test_cow_merge_equals_per_month_merge_upsert(spark, tmp_path_factory, tgt, s
     assert got == expect
 
 
+@settings(max_examples=5, deadline=None)
+@given(
+    months=st.lists(
+        st.tuples(
+            st.sets(st.integers(min_value=0, max_value=11), max_size=5),
+            st.booleans(),
+        ),
+        min_size=1,
+        max_size=4,
+    ),
+)
+@pytest.mark.soak
+def test_insert_grain_publish_equals_full_sync(spark, tmp_path_factory, months):
+    """Random month sequences of an insert-only dim (each month inserts
+    the names it lacks, surrogate keys past the max) published through
+    the "insert" grain in one warehouse and the full-sync "dim" grain in
+    another: at every set version both hold the same rows, and the
+    insert grain never drops or rewrites a file of the previous set.
+    Each month's ``growth`` hint is given or left out at random."""
+    import hashlib
+    import os
+
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    root = tmp_path_factory.mktemp("insertgrain")
+    bases = {g: str(root / g) for g in ("insert", "dim")}
+    schema = "k BIGINT, name STRING"
+    state: list[tuple[int, str]] = [(1, "c0"), (2, "c1")]  # the bootstrap
+    seen_bytes: dict[str, str] = {}
+
+    def active(base: str, sv: int) -> dict[str, str]:
+        """{file: md5} of the dim at set version ``sv``."""
+        coord = os.path.join(base, dl._SET_DIR)
+        tpath = os.path.join(base, "dim")
+        pinned = dl._set_commit_at(coord, sv)["tables"]["dim"]
+        out = {}
+        for rel in dl._snapshot_state(tpath, pinned)[0]:
+            with open(os.path.join(tpath, rel), "rb") as fh:
+                out[rel] = hashlib.md5(fh.read()).hexdigest()
+        return out
+
+    for sv, (names, hint) in enumerate([(set(), False), *months]):
+        have = {n for _, n in state}
+        new = sorted(f"c{i}" for i in names if f"c{i}" not in have)
+        top = max(k for k, _ in state)
+        grown = state + [(top + i, n) for i, n in enumerate(new, start=1)]
+        frame = spark.createDataFrame(grown, schema)
+        insert_spec = {"on": ["k"], "grain": "insert"}
+        if hint:
+            insert_spec["growth"] = len(grown) - len(state)
+        specs = {
+            "insert": insert_spec,
+            "dim": {"on": ["k"], "grain": "dim", "delete_unmatched_source": True},
+        }
+        for g, base in bases.items():
+            assert dl.publish_set_deltalog(
+                {"dim": frame}, base, incremental={"dim": specs[g]}
+            ) == sv
+        state = grown
+        got = {
+            g: sorted(map(tuple, dl.read_published_set_deltalog(
+                spark, base, version=sv)["dim"].collect()))
+            for g, base in bases.items()
+        }
+        assert got["insert"] == got["dim"] == sorted(state)
+        files = active(bases["insert"], sv)
+        if sv:
+            assert set(active(bases["insert"], sv - 1)) <= set(files)
+        for rel, digest in files.items():
+            assert seen_bytes.setdefault(rel, digest) == digest, rel
+
+
 @settings(max_examples=30, deadline=None)
 @given(data=st.binary(min_size=0, max_size=2000))
 def test_tiff_lzw_roundtrips_arbitrary_bytes(data):
