@@ -1358,6 +1358,26 @@ def _num_records(add_action: dict) -> int:
     return json.loads(add_action["add"]["stats"])["numRecords"]
 
 
+def _log_rows_and_max(table: str, version: int, key: str) -> tuple | None:
+    """``(rows, MAX(key))`` of the snapshot at ``version`` from its add
+    actions' stats alone; None when a file carries a deletion vector or
+    lacks either number."""
+    active, _, _ = _snapshot_state(table, version)
+    rows, best = 0, None
+    for a in active.values():
+        stats = json.loads(a.get("stats") or "{}")
+        n = stats.get("numRecords")
+        if n is None or a.get("deletionVector"):
+            return None
+        if n:
+            top = stats.get("maxValues", {}).get(key)
+            if top is None:
+                return None
+            best = top if best is None else max(best, top)
+        rows += n
+    return rows, best
+
+
 def _safe_upcast(src, dst) -> bool:
     """True when every ``src`` value fits ``dst`` losslessly — the
     integral widening chain and float→double. Anything else (narrowing,
@@ -4763,15 +4783,15 @@ def publish_set_deltalog(
     published dim plus the new keys; it equals the "dim" grain's
     full-sync copy whenever the frame extends the last published state,
     as it does when each close starts from the previous close's output.
-    An optional ``"growth"`` in the spec carries the row count the
-    caller already knows the frame added over that state; ``0`` skips
-    the insert with no Spark job and no commit. Either way a publish
-    that adds nothing pins the table's current version, which is the
-    version the last set pinned once the usual orphan fence has run
-    (only an out-of-band commit past the pin, which the fence keeps,
-    makes them differ). Unlike the full sync, an unfenceable range
-    (orphan insert followed by an out-of-band commit) keeps the
-    orphan's rows.
+    A frame that is a bare local parquet scan holding as many rows as
+    the table under the same maximum integral ``on`` key (its footers
+    against the log's stats) has nothing absent: the publish runs no
+    Spark job, makes no commit and pins the table's current version, which is the version the last set pinned
+    once the usual orphan fence has run. When the fence cannot prove
+    the range past the pin publish-originated (an orphan followed by an
+    out-of-band commit), the table publishes through the "dim" grain's
+    full sync instead (``delete_unmatched_source=True``), so the frame
+    wins over any crashed publish's rows as it always did.
 
     Concurrency (round 11, ADVICE r10): the bootstrap overwrite is
     publishSet-STAMPED, so a first publish that crashes after its
@@ -4857,7 +4877,6 @@ def publish_set_deltalog(
         on = spec.pop("on")
         keyed_pby = None
         if grain == "insert":
-            growth = spec.pop("growth", None)
             if spec:
                 raise ValueError(
                     f"insert-grain incremental spec for {name} can't carry "
@@ -4994,6 +5013,13 @@ def publish_set_deltalog(
                     df.sparkSession, tpath, pinned_v,
                     operation_parameters={"publishSet": "true"},
                 )
+            elif grain == "insert":
+                # an unfenceable range may hold a crashed publish's
+                # rows, some under keys the frame gives other entities:
+                # the dim grain's full sync makes the frame win
+                grain = "dim"
+                spec = {"delete_unmatched_source": True}
+                dv_compact_threshold = cluster_by = None
             elif grain == "fact":
                 stale = _orphan_unmerge_months(tpath, pinned_v, latest)
                 if stale:
@@ -5024,16 +5050,28 @@ def publish_set_deltalog(
                             operation_parameters={"publishSet": "true"},
                         )
         if grain == "insert":
-            if growth != 0:
+            from etl_loading_scripts_spark.operators.mutations import (
+                footer_rows_and_max,
+            )
+
+            # nothing is absent when the frame (its footers) and the
+            # table (its log stats) hold as many rows under the same
+            # MAX key: a frame extending the table would hold more rows,
+            # and keys allocated past the frame's own MAX would raise it
+            latest = _all_versions(tpath)[-1]
+            frame = footer_rows_and_max(df, on[0]) if len(on) == 1 else None
+            if frame is None or frame != _log_rows_and_max(tpath, latest, on[0]):
                 res = insert_if_absent_deltalog(
                     df.sparkSession, tpath, df, on,
                     operation_parameters={"publishSet": "true"},
                 )
-                if name in opts and res["version"] is not None:
-                    return _maybe_optimize(
-                        name, df.sparkSession, tpath, res["version"]
-                    )
-            return _all_versions(tpath)[-1]  # nothing absent: pin as-is
+                if res["version"] is not None:
+                    latest = res["version"]
+                    if name in opts:
+                        latest = _maybe_optimize(
+                            name, df.sparkSession, tpath, latest
+                        )
+            return latest  # nothing absent: pin as-is
         if grain == "dim":
             res = merge_dim_deltalog_with_retry(
                 df.sparkSession, tpath, df, on,

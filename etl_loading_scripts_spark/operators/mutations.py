@@ -19,6 +19,7 @@ mean only ~1/100th of the data is rewritten per run.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Mapping, Sequence
 from urllib.parse import unquote, urlparse
 
@@ -271,75 +272,84 @@ def _local_parquet_files(node) -> list[str] | None:
     return paths
 
 
-def _plan_row_bound(node) -> int | None:
+def _plan_row_bound(node, cap: int) -> int | None:
     """Upper bound on the rows of a logical plan, summed from parquet
     footers: defined when every leaf is a local parquet scan and every
     operator above the leaves is row-bounded (see ``_ROW_BOUNDED``),
-    a Union, or a LeftSemi/LeftAnti join (bounded by its left side)."""
+    a Union, or a LeftSemi/LeftAnti join (bounded by its left side).
+    Footers are read only until the bound passes ``cap``, so any value
+    above ``cap`` means no more than "above ``cap``"."""
     import pyarrow.parquet as pq
 
     files = _local_parquet_files(node)
     if files is not None:
-        return sum(pq.read_metadata(f).num_rows for f in files)
+        total = 0
+        for f in files:
+            if total > cap:
+                break
+            total += pq.read_metadata(f).num_rows
+        return total
     kind = node.getClass().getSimpleName()
     children = node.children()
     kids = [children.apply(i) for i in range(children.size())]
     if kind == "Union":
-        bounds = [_plan_row_bound(k) for k in kids]
-        return None if None in bounds else sum(bounds)
+        total = 0
+        for k in kids:
+            bound = _plan_row_bound(k, cap - total)
+            if bound is None:
+                return None
+            total += bound
+            if total > cap:
+                break
+        return total
     if kind == "Join":
         if node.joinType().toString() not in ("LeftSemi", "LeftAnti"):
             return None
-        return _plan_row_bound(kids[0])
+        return _plan_row_bound(kids[0], cap)
     if kind not in _ROW_BOUNDED or len(kids) != 1:
         return None
-    bound = _plan_row_bound(kids[0])
+    bound = _plan_row_bound(kids[0], cap)
     if bound is not None and kind == "Aggregate":
         if node.groupingExpressions().isEmpty():
             bound = max(bound, 1)
     return bound
 
 
-def _footer_max(existing: DataFrame, key_col: str) -> tuple[bool, int | None]:
-    """``(True, MAX(key_col))`` read from parquet footer statistics when
-    ``existing`` is a bare local parquet scan of an integral key and every
-    row group carries exact integer min/max statistics for it; ``(False,
-    None)`` otherwise. Empty files have no row groups and add nothing, so
-    an all-empty scan answers ``(True, None)`` like ``MAX`` over no rows."""
-    import pyarrow.parquet as pq
+def footer_rows_and_max(df: DataFrame, key_col: str) -> tuple[int, int | None] | None:
+    """``(rows, MAX(key_col))`` of ``df`` from its parquet footer
+    statistics (``deltalog._file_stats``: exact values, the column
+    dropped when any row group lacks them), with no Spark job, when
+    ``df`` is a bare local parquet scan of an integral key; None when a
+    non-empty file has no max for the key or the shape is anything else.
+    Empty files add nothing, so an all-empty scan answers ``(0, None)``
+    like ``MAX`` over no rows."""
+    from etl_loading_scripts_spark.operators.deltalog import _file_stats
 
-    if not isinstance(existing.schema[key_col].dataType, _INTEGRAL_TYPES):
-        return False, None
-    files = _local_parquet_files(existing._jdf.queryExecution().optimizedPlan())
+    if not isinstance(df.schema[key_col].dataType, _INTEGRAL_TYPES):
+        return None
+    files = _local_parquet_files(df._jdf.queryExecution().optimizedPlan())
     if files is None:
-        return False, None
-    best = None
+        return None
+    rows, best = 0, None
     for f in files:
-        md = pq.read_metadata(f)
-        for rg in range(md.num_row_groups):
-            group = md.row_group(rg)
-            col = next(
-                (
-                    group.column(ci)
-                    for ci in range(group.num_columns)
-                    if group.column(ci).path_in_schema == key_col
-                ),
-                None,
-            )
-            if col is None or col.physical_type not in ("INT32", "INT64"):
-                return False, None
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                return False, None
-            best = st.max if best is None else max(best, st.max)
-    return True, best
+        stats = json.loads(_file_stats(f))
+        if not stats["numRecords"]:
+            continue
+        top = stats["maxValues"].get(key_col)
+        if top is None:
+            return None
+        rows += stats["numRecords"]
+        best = top if best is None else max(best, top)
+    return rows, best
 
 
 def _max_key(existing: DataFrame, key_col: str) -> int:
     """``MAX(existing.key_col)``, 0 when there is none: from the parquet
     footers when they answer it, else one aggregate job."""
-    known, max_key = _footer_max(existing, key_col)
-    if not known:
+    known = footer_rows_and_max(existing, key_col)
+    if known is not None:
+        max_key = known[1]
+    else:
         max_key = existing.agg(F.max(key_col)).collect()[0][0]
     return 0 if max_key is None else max_key
 
@@ -363,17 +373,18 @@ def allocate_surrogate_keys(
 
     No Spark job for what the parquet footers already hold:
 
-    - **Routing** uses an upper bound on ``new_rows``' rows summed from
-      the footers' row counts, when every leaf of its optimized plan is
-      a local parquet scan and no operator above them can add rows
-      (Project, Filter, Aggregate/Distinct, Sort, Union, LeftSemi/LeftAnti
-      join). A bound above ``max_window_rows`` routes to the partitioned
-      path even if fewer rows survive; both paths give the same keys.
+    - **Routing**: an upper bound on ``new_rows``' rows summed from the
+      footers' row counts proves the input small enough for the window
+      path, when every leaf of its optimized plan is a local parquet
+      scan and no operator above them can add rows (Project, Filter,
+      Aggregate/Distinct, Sort, Union, LeftSemi/LeftAnti join). A bound
+      above ``max_window_rows`` proves nothing (fewer rows may survive),
+      so the routing ``count()`` decides, as without a bound.
     - **MAX** comes from the footers' exact integer statistics when
       ``existing`` is a bare local parquet scan (the staged runner's
       barrier read-backs are).
 
-    Any other shape falls back to a routing ``count()`` and a ``MAX``
+    Any other shape falls back to the routing ``count()`` and a ``MAX``
     aggregate: an in-memory or non-parquet leaf, an inner or outer join
     in ``new_rows``, a filtered ``existing``, a row group with no
     statistics for the key (e.g. all nulls) or a non-integral key. The
@@ -383,8 +394,9 @@ def allocate_surrogate_keys(
     keeps keys stable across retries.
     """
     if max_window_rows is not None:
-        rows = _plan_row_bound(new_rows._jdf.queryExecution().optimizedPlan())
-        if rows is None:
+        plan = new_rows._jdf.queryExecution().optimizedPlan()
+        rows = _plan_row_bound(plan, max_window_rows)
+        if rows is None or rows > max_window_rows:
             rows = new_rows.count()
         if rows > max_window_rows:
             return allocate_surrogate_keys_partitioned(

@@ -55,16 +55,6 @@ from etl_loading_scripts_spark.pipeline.stages import (
     validate_stage5,
 )
 
-#: The dims the stages grow only by insert-if-absent, published through the
-#: "insert" grain: dim -> (surrogate key, checkpoint of the stage's output).
-_INSERT_DIMS = {
-    "pos_fingerprints": ("fingerprint_id", "s1_fingerprint_map_registry"),
-    "dim_patron": ("patron_id", "s2_patron_dims_dim_patron"),
-    "dim_billing_group": ("billing_group_key", "s4_billing_groups_dim_billing_group"),
-}
-#: observation name of a checkpoint's row count
-_ROWS = "__rows__"
-
 
 def shuffle_snapshot(spark: SparkSession) -> dict | None:
     """Cumulative shuffle-write totals for the application via the Spark
@@ -107,10 +97,7 @@ def run_monthly_load_staged(
     transform + checkpoint write) plus whatever ``snapshot``/``instrument``
     recorded. ``publish=True`` ends the close with one delta-log set
     commit of the five outputs under ``stage_dir/publish``, its fact
-    OPTIMIZEd and Z-ORDERed before the set commit. The barrier writes
-    also observe the row counts of the dims the stages only grow (the s0
-    copy and the stage's output); their difference is the growth the
-    publish uses to skip a dim that did not grow.
+    OPTIMIZEd and Z-ORDERed before the set commit.
 
     ``resume=True`` is the RESTART path the barriers exist for: any
     barrier whose parquet output is already committed (``_SUCCESS``
@@ -123,45 +110,36 @@ def run_monthly_load_staged(
     torn state to avoid — use a fresh dir per logical run)."""
     report: list[dict] = []
     metrics: dict[str, int] = {}
-    #: row counts of the dim checkpoints, by checkpoint name — observed
-    #: on the writes like the validations, kept out of ``metrics``
-    rows: dict[str, int] = {}
 
     def _resumable(path: str) -> bool:
         return resume and os.path.exists(os.path.join(path, "_SUCCESS"))
 
-    def checkpoint(
-        df: DataFrame, path: str, checks: dict | None = None
-    ) -> tuple[DataFrame, dict]:
+    def checkpoint(df: DataFrame, path: str, checks: dict | None = None) -> DataFrame:
         """Write ``df`` to ``path`` (unless a resumed checkpoint is already
         there) and read it back with ``df``'s schema, so the read needs no
         schema-inference job. ``checks`` (``{metric: aggregate Column}``)
-        are observed on the write itself and returned with the read-back;
-        a resumed checkpoint has no write, so they run as one aggregate
-        over the read-back."""
+        are observed on the write itself; a resumed checkpoint has no
+        write, so they run as one aggregate over the read-back."""
         if _resumable(path):
             back = spark.read.schema(df.schema).parquet(path)
-            return back, (evaluate(back, checks) if checks else {})
-        seen: dict = {}
+            if checks:
+                metrics.update(evaluate(back, checks))
+            return back
         if checks:
             obs = Observation()
             observed = df.observe(obs, *(c.alias(k) for k, c in checks.items()))
             observed.write.mode("overwrite").parquet(path)
-            seen = obs.get
+            metrics.update(obs.get)
         else:
             df.write.mode("overwrite").parquet(path)
-        return spark.read.schema(df.schema).parquet(path), seen
+        return spark.read.schema(df.schema).parquet(path)
 
     def barrier(
         name: str,
         dfs: dict[str, DataFrame],
         wall: float = 0.0,
         checks: dict[str, dict] | None = None,
-        counted: tuple[str, ...] = (),
     ):
-        """Checkpoint each of ``dfs`` as ``<name>_<key>``; the validation
-        ``checks`` go to ``metrics`` and the row counts of the ``counted``
-        keys to ``rows``."""
         t0 = time.time()
         profs = {}
         ckpt = {}
@@ -172,13 +150,7 @@ def run_monthly_load_staged(
                 resumed.append(key)
             elif instrument is not None:
                 profs[key] = instrument(df)
-            probes = dict((checks or {}).get(key) or {})
-            if key in counted:
-                probes[_ROWS] = F.count(F.lit(1))
-            ckpt[key], seen = checkpoint(df, path, probes)
-            if _ROWS in seen:
-                rows[f"{name}_{key}"] = seen.pop(_ROWS)
-            metrics.update(seen)
+            ckpt[key] = checkpoint(df, path, (checks or {}).get(key))
         rec: dict = {
             "stage": name,
             "wall_sec": round(time.time() - t0 + wall, 3),
@@ -207,7 +179,7 @@ def run_monthly_load_staged(
         17x-vs-10x shuffle slope at 10x fact (SCALING.md r6)."""
 
         def bar(df: DataFrame, name: str) -> DataFrame:
-            return checkpoint(df, os.path.join(stage_dir, f"{stage}_{name}"))[0]
+            return checkpoint(df, os.path.join(stage_dir, f"{stage}_{name}"))
 
         return bar
 
@@ -222,7 +194,6 @@ def run_monthly_load_staged(
             "pos_fingerprints": dom.pos_fingerprints,
             "dim_billing_group": dom.dim_billing_group,
         },
-        counted=tuple(_INSERT_DIMS),
     )
     raw = d0["raw"]
 
@@ -236,7 +207,6 @@ def run_monthly_load_staged(
         {"staging_map": staging_map, "registry": registry},
         time.time() - t0,
         {"staging_map": validate_stage1()},
-        counted=("registry",),
     )
 
     t0 = time.time()
@@ -249,7 +219,6 @@ def run_monthly_load_staged(
         {"fact": fact, "dim_patron": dim_patron},
         time.time() - t0,
         {"fact": validate_stage2(window)},
-        counted=("dim_patron",),
     )
 
     t0 = time.time()
@@ -274,7 +243,6 @@ def run_monthly_load_staged(
         {"fact": fact, "dim_billing_group": dim_billing_group},
         time.time() - t0,
         {"fact": validate_stage4(window)},
-        counted=("dim_billing_group",),
     )
 
     t0 = time.time()
@@ -336,18 +304,24 @@ def run_monthly_load_staged(
         # by insert-if-absent (s1 registers fingerprints, s2 patrons, s4
         # billing groups), so those publish through the "insert" grain:
         # the keys the published table lacks are appended and nothing
-        # is rewritten. Their growth is the row count the stage's dim
-        # checkpoint write observed minus the s0 copy's; a dim that did
-        # not grow (every dim, once the bootstrap has loaded the feed's
-        # entities) costs no Spark job and no commit — the set pins its
-        # last version. The published dim is the last published dim plus
-        # this close's inserts, which is the frame itself when the input
-        # Domain chains from the last close. dim_restaurant is updated
-        # in place (s3's U+FFFD scrub, s5's bi_reporting_id map), so it
-        # keeps the entity-KEYED full-sync merge (grain "dim",
-        # merge_dim_deltalog, delete_unmatched_source=True): only files
-        # holding changed rows rewrite; the rest carry over
-        # byte-identical (oracle: staged_publish_incremental_dims).
+        # is rewritten. A dim whose barrier read-back holds as many rows
+        # as the published table (its footers against the log's
+        # numRecords: every dim, once the bootstrap has loaded the
+        # feed's entities) costs no Spark job and no commit — the set
+        # pins its last version. The published dim is the last
+        # published dim plus this close's inserts, which is the frame
+        # itself when the input Domain chains from the last close.
+        # dim_restaurant is updated in place (s3's U+FFFD scrub, s5's
+        # bi_reporting_id map), so it keeps the entity-KEYED full-sync
+        # merge (grain "dim", merge_dim_deltalog,
+        # delete_unmatched_source=True): only files holding changed
+        # rows rewrite; the rest carry over byte-identical (oracle:
+        # staged_publish_incremental_dims).
+        insert_keys = {
+            "dim_patron": "patron_id",
+            "dim_billing_group": "billing_group_key",
+            "pos_fingerprints": "fingerprint_id",
+        }
         set_version = publish_set_deltalog(
             [
                 ("fact_transaction", out.fact_transaction),
@@ -371,12 +345,8 @@ def run_monthly_load_staged(
                     "delete_unmatched_source": True,
                 },
                 **{
-                    name: {
-                        "on": [key],
-                        "grain": "insert",
-                        "growth": rows[ckpt] - rows[f"s0_domain_{name}"],
-                    }
-                    for name, (key, ckpt) in _INSERT_DIMS.items()
+                    name: {"on": [key], "grain": "insert"}
+                    for name, key in insert_keys.items()
                 },
             },
         )

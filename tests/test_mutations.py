@@ -583,23 +583,31 @@ def test_allocate_surrogate_keys_falls_back_where_footers_cannot_answer(
         assert got == _expected_keys(names, base), case
 
 
-def test_allocate_surrogate_keys_routes_on_footer_bound(spark, tmp_path):
-    """The footer bound counts rows before the filter: a bound above
-    ``max_window_rows`` takes the partitioned path even though fewer
-    rows survive, with the same keys."""
+def test_allocate_surrogate_keys_counts_above_footer_bound(spark, tmp_path, jobs_of):
+    """A footer bound above ``max_window_rows`` proves nothing, since it
+    counts rows before the filter: the routing ``count()`` decides, as
+    without a bound. 5 surviving rows of 40 take the window path, all
+    40 take the partitioned path; both give the pinned path's keys."""
     existing = _barrier(spark, tmp_path, "existing", [(5, "e")], "sk long, nk string")
     new = _barrier(
         spark, tmp_path, "new",
         [(None, f"n{i:04d}") for i in range(40)], "sk long, nk string",
     )
-    new_rows = new.filter(F.col("nk") < "n0005")  # 5 rows, bound 40
-    routed = allocate_surrogate_keys(
-        new_rows, existing, "sk", ["nk"], max_window_rows=10
-    )
-    pinned = allocate_surrogate_keys(
-        new_rows, existing, "sk", ["nk"], max_window_rows=None
-    )
-    assert "SinglePartition" not in _plan_of(routed)  # partitioned path
-    assert "SinglePartition" in _plan_of(pinned)
-    names = [f"n{i:04d}" for i in range(5)]
-    assert _keys(routed) == _keys(pinned) == _expected_keys(names, 5)
+    for new_rows, partitioned in (
+        (new.filter(F.col("nk") < "n0005"), False),  # 5 rows, bound 40
+        (new, True),
+    ):
+        built = {}
+        assert jobs_of(
+            lambda: built.update(
+                out=allocate_surrogate_keys(
+                    new_rows, existing, "sk", ["nk"], max_window_rows=10
+                )
+            )
+        ) >= 1  # the routing count
+        pinned = allocate_surrogate_keys(
+            new_rows, existing, "sk", ["nk"], max_window_rows=None
+        )
+        assert ("SinglePartition" not in _plan_of(built["out"])) == partitioned
+        names = [r.nk for r in new_rows.collect()]
+        assert _keys(built["out"]) == _keys(pinned) == _expected_keys(names, 5)

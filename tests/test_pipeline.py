@@ -492,6 +492,44 @@ def test_close_fences_orphan_insert(spark, tmp_path, bootstrapped):
     assert rows(dl.read_published_set_deltalog(spark, base)["dim_patron"]) == published
 
 
+def test_close_full_syncs_unfenceable_insert_dim(spark, tmp_path, bootstrapped):
+    """An orphan insert followed by an out-of-band commit cannot be
+    fenced, so the close publishes that dim by full sync: the frame
+    wins, and neither the orphan row (under the key the next allocation
+    would hand another patron) nor the out-of-band row reaches the set."""
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    dom, boot_dir = bootstrapped
+    stage, base = _warehouse_copy(boot_dir, tmp_path)
+    tpath = f"{base}/dim_patron"
+    pinned = _set_pins(base)["dim_patron"]
+    table = dl.read_delta_table(spark, tpath)
+    top = table.agg(F.max("patron_id")).first()[0]
+
+    def stray(key: int, proxy: str, stamp: dict | None):
+        row = (
+            table.limit(1)
+            .withColumn("patron_id", F.lit(key).cast("long"))
+            .withColumn("proxy_id", F.lit(proxy))
+        )
+        return dl.insert_if_absent_deltalog(
+            spark, tpath, row, ["patron_id"], operation_parameters=stamp
+        )
+
+    assert stray(top + 1, "orphan", {"publishSet": "true"})["version"] == pinned + 1
+    assert stray(10**9, "out-of-band", None)["version"] == pinned + 2
+    assert not dl._publish_orphan_range(tpath, pinned, pinned + 2)
+
+    out, _, _ = run_monthly_load_staged(spark, dom, CLOSE_WINDOW, stage)
+
+    def rows(df):
+        return sorted(map(tuple, df.select("patron_id", "proxy_id").collect()))
+
+    published = rows(dl.read_published_set_deltalog(spark, base)["dim_patron"])
+    assert published == rows(out.dim_patron)
+    assert not {"orphan", "out-of-band"} & {proxy for _, proxy in published}
+
+
 def test_resumed_barriers_validate_like_observed_writes(spark, tmp_path, loaded):
     """A resumed barrier has no write to observe its validation on, so
     the runner aggregates over the read-back checkpoint instead. Resume
