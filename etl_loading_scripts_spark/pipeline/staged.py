@@ -26,20 +26,39 @@ is pinned to the written frame's schema (no schema-inference job), and
 the reference's "must return 0 rows" checks (``validate_stage1..5``)
 ride on the write as ``DataFrame.observe`` metrics instead of one
 ``count()`` job each over the checkpoint.
+
+Each frame is written once per run, like the reference's staging
+tables are written once and read where they lie:
+
+- every run writes its checkpoints under its own run directory
+  ``stage_dir/run-<key>/``, the key a hash of the window and of the
+  files each input frame reads, so a run never overwrites parquet that
+  its input ``Domain`` (or an older close's ``Domain``) still reads;
+- a frame that is already a bare local parquet scan with no validation
+  to observe is read where it lies, not copied: the previous close's
+  read-backs in stage 0, and the wave checkpoints the stage barriers
+  hand on. A chained close therefore writes nothing in stage 0;
+- a successful run deletes the checkpoints of earlier runs under
+  ``stage_dir`` that neither its input nor its output ``Domain``
+  reads. Its own run directory and ``stage_dir/publish`` are kept.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import shutil
 import time
 import urllib.request
-from dataclasses import replace
+from dataclasses import fields, replace
 from typing import Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from etl_loading_scripts_spark.operators.mutations import _local_parquet_files
 from etl_loading_scripts_spark.pipeline.domain import Domain
 from etl_loading_scripts_spark.pipeline.stages import (
     evaluate,
@@ -78,6 +97,54 @@ def shuffle_snapshot(spark: SparkSession) -> dict | None:
     }
 
 
+#: prefix of the per-run checkpoint directories under a stage dir: the
+#: cleanup of earlier runs deletes nothing else there
+_RUN_PREFIX = "run-"
+
+
+def _frames(dom: Domain) -> list[tuple[str, DataFrame]]:
+    return [(f.name, getattr(dom, f.name)) for f in fields(Domain)]
+
+
+def _is_parquet_scan(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is a bare local parquet scan."""
+    return _local_parquet_files(df._jdf.queryExecution().optimizedPlan()) is not None
+
+
+def _reads(dom: Domain) -> set[str]:
+    """Local paths of the files the frames of ``dom`` read."""
+    uris = (urlparse(u) for _, df in _frames(dom) for u in df.inputFiles())
+    return {unquote(u.path) for u in uris if u.scheme in ("", "file")}
+
+
+def _run_dir(stage_dir: str, dom: Domain, window: tuple[int, int]) -> str:
+    """``stage_dir/run-<key>``, the key a hash of the window and, per input
+    frame, whether it is a bare parquet scan (a read-back) or a lazy plan,
+    plus the sorted files it reads. Same inputs and window give the same
+    directory (what ``resume`` relies on); a run's own checkpoints are new
+    files, so the next close, reading them, keys a different directory."""
+    h = hashlib.sha256(json.dumps(list(window)).encode())
+    for name, df in _frames(dom):
+        ident = [name, "scan" if _is_parquet_scan(df) else "lazy", sorted(df.inputFiles())]
+        h.update(json.dumps(ident).encode())
+    return os.path.join(stage_dir, _RUN_PREFIX + h.hexdigest()[:16])
+
+
+def _drop_dead_runs(stage_dir: str, run_dir: str, live: set[str]) -> None:
+    """Delete the checkpoint dirs of earlier runs under ``stage_dir`` that
+    hold none of the ``live`` files, then the run dirs left empty."""
+    for run in os.listdir(stage_dir):
+        path = os.path.join(stage_dir, run)
+        if not run.startswith(_RUN_PREFIX) or path == run_dir:
+            continue
+        for ckpt in os.listdir(path):
+            prefix = os.path.join(path, ckpt, "")
+            if not any(f.startswith(prefix) for f in live):
+                shutil.rmtree(prefix)
+        if not os.listdir(path):
+            os.rmdir(path)
+
+
 def run_monthly_load_staged(
     spark: SparkSession,
     dom: Domain,
@@ -88,7 +155,8 @@ def run_monthly_load_staged(
     publish: bool = True,
     resume: bool = False,
 ) -> tuple[Domain, dict, list[dict]]:
-    """Execute stages 1-5 with checkpoint barriers under ``stage_dir``.
+    """Execute stages 1-5 with checkpoint barriers under
+    ``stage_dir/run-<key>/``.
 
     Returns ``(domain_out, metrics, stage_report)`` where ``metrics`` is
     the stages' validation dict, observed on the barrier writes (one
@@ -97,17 +165,35 @@ def run_monthly_load_staged(
     transform + checkpoint write) plus whatever ``snapshot``/``instrument``
     recorded. ``publish=True`` ends the close with one delta-log set
     commit of the five outputs under ``stage_dir/publish``, its fact
-    OPTIMIZEd and Z-ORDERed before the set commit.
+    OPTIMIZEd and Z-ORDERed before the set commit. Every frame of
+    ``domain_out`` (``raw_transactions`` included) reads parquet where it
+    lies, so the next close, fed ``domain_out``, writes nothing in stage 0.
+
+    Barriers are written once per run: ``<key>`` hashes the window and
+    the files each input frame reads (see :func:`_run_dir`), so a close
+    never overwrites parquet its input ``Domain`` reads, and any earlier
+    close's ``Domain`` stays readable while its checkpoints are kept. A
+    frame that is already a bare local parquet scan with no validation
+    to observe is handed on as it is, with no write and no read-back.
+    After a successful run, the checkpoints of earlier runs under
+    ``stage_dir`` that neither the input nor the returned ``Domain``
+    reads are deleted; this run's directory and ``stage_dir/publish``
+    are kept.
 
     ``resume=True`` is the RESTART path the barriers exist for: any
     barrier whose parquet output is already committed (``_SUCCESS``
-    present) under the SAME ``stage_dir`` is read back instead of
+    present) in this run's directory is read back instead of
     recomputed, so a load that died in stage 4 replays stages 0-3 as
     metadata reads and recomputes only from the failure point —
     per-stage restartability like the reference gets from its staging
-    tables. Caller contract: same ``stage_dir`` ⇒ same inputs and
-    window (a changed input with a stale checkpoint is the caller's
-    torn state to avoid — use a fresh dir per logical run)."""
+    tables. Same ``stage_dir``, input files and window give the same
+    run directory. An input that is not a bare parquet scan is keyed by
+    the files its plan reads, not by its plan: rerunning a changed lazy
+    input over the same files and window with ``resume=True`` reuses
+    stale checkpoints, the caller's torn state to avoid."""
+    stage_dir = os.path.abspath(stage_dir)
+    run_dir = _run_dir(stage_dir, dom, window)
+    in_reads = _reads(dom)
     report: list[dict] = []
     metrics: dict[str, int] = {}
 
@@ -119,7 +205,16 @@ def run_monthly_load_staged(
         there) and read it back with ``df``'s schema, so the read needs no
         schema-inference job. ``checks`` (``{metric: aggregate Column}``)
         are observed on the write itself; a resumed checkpoint has no
-        write, so they run as one aggregate over the read-back."""
+        write, so they run as one aggregate over the read-back. A frame
+        with no ``checks`` that is already a bare parquet scan is
+        returned as it is: it has been written, and is read where it
+        lies."""
+        if not checks and _is_parquet_scan(df):
+            return df
+        prefix = os.path.join(path, "")
+        assert not any(f.startswith(prefix) for f in in_reads), (
+            f"checkpoint {path} would overwrite files the input Domain reads"
+        )
         if _resumable(path):
             back = spark.read.schema(df.schema).parquet(path)
             if checks:
@@ -145,7 +240,7 @@ def run_monthly_load_staged(
         ckpt = {}
         resumed: list = []
         for key, df in dfs.items():
-            path = os.path.join(stage_dir, f"{name}_{key}")
+            path = os.path.join(run_dir, f"{name}_{key}")
             if _resumable(path):
                 resumed.append(key)
             elif instrument is not None:
@@ -179,11 +274,13 @@ def run_monthly_load_staged(
         17x-vs-10x shuffle slope at 10x fact (SCALING.md r6)."""
 
         def bar(df: DataFrame, name: str) -> DataFrame:
-            return checkpoint(df, os.path.join(stage_dir, f"{stage}_{name}"))
+            return checkpoint(df, os.path.join(run_dir, f"{stage}_{name}"))
 
         return bar
 
-    # stage 0: materialize the domain inputs (raw feed build, fact seed)
+    # stage 0: materialize the domain inputs that are lazy plans (the raw
+    # feed build and the fact seed of a bootstrap); a chained close's
+    # inputs are the previous run's read-backs and pass through unwritten
     d0 = barrier(
         "s0_domain",
         {
@@ -261,6 +358,7 @@ def run_monthly_load_staged(
 
     out = replace(
         dom,
+        raw_transactions=raw,
         fact_transaction=s4["fact"],
         dim_patron=s2["dim_patron"],
         dim_restaurant=s5["dim_restaurant"],
@@ -364,6 +462,7 @@ def run_monthly_load_staged(
                 barrier.last = snap
         report.append(rec)
 
+    _drop_dead_runs(stage_dir, run_dir, in_reads | _reads(out))
     return out, metrics, report
 
 

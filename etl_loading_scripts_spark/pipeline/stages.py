@@ -136,12 +136,15 @@ def stage1_fingerprint_map(
     probe = raw.select(
         "txn_id", *MERCHANT_FP_COLS, merchant_simhash().alias("sim_hash")
     )
-    staging_map = probe.join(
-        F.broadcast(pos_fingerprints.select("sim_hash", "fingerprint_id")),
-        "sim_hash",
-        "left",
+    # The probes no registry row matches. This anti-join equals the left
+    # join's NULL-fingerprint rows only because the registry's
+    # fingerprint_id is never NULL (seeded keys, allocated keys below):
+    # keep it so. Unlike the left join, the anti-join adds no rows, so
+    # the allocator's footer bound proves new_rows small when raw is a
+    # parquet read-back, and it skips its routing count().
+    unmatched = probe.join(
+        F.broadcast(pos_fingerprints.select("sim_hash")), "sim_hash", "left_anti"
     )
-    unmatched = staging_map.filter(F.col("fingerprint_id").isNull())
 
     new_candidates = (
         unmatched.groupBy("sim_hash", *MERCHANT_FP_COLS)

@@ -158,8 +158,8 @@ def test_multi_month_incremental(spark, sf_dir, tmp_path):
     dir: each run maps only its own window, leaves other months'
     sentinels untouched, and the second run builds on the first's
     dimension inserts (the reference's actual operating cadence,
-    BASELINE 'monthly batch'). Month-1 frames are read before run 2,
-    which overwrites their barrier files in place."""
+    BASELINE 'monthly batch'). Run 2 writes its barriers under its own
+    run directory, reading run 1's where they lie."""
     dom = build_domain(spark, sf_dir)
     months = sorted(
         r["m"]
@@ -285,19 +285,21 @@ def test_run_sql_script_returns_last_statement(spark):
 #: dependent: a change that adds a job or a stage to the close must
 #: re-measure and justify raising these. The job count is the same on
 #: every core count; the task count grows with it, because AQE coalesces
-#: shuffles down to the default parallelism (76 tasks on 1 core, 97 on
-#: 2, 109 on 4), and stops growing at the 8 shuffle partitions: the
-#: budget is that ceiling.
-CLOSE_JOB_BUDGET = 71
-CLOSE_TASK_BUDGET = 119
+#: shuffles down to the default parallelism (62 tasks on 1 core, 76 on
+#: 2, 84 on 4), and stops growing at the 8 shuffle partitions (90 on 8
+#: cores): the budget is that ceiling.
+CLOSE_JOB_BUDGET = 57
+CLOSE_TASK_BUDGET = 90
 
 
 def test_month_close_job_and_task_budget(spark, sf_dir, tmp_path):
     """Job/task ratchet on one month close: the validations ride on the
     barrier writes (no count job per probe), barrier read-backs infer
     no schema, AQE coalesces the dim merge's cached diff, surrogate keys
-    route and offset from parquet footers, and dims that did not grow
-    publish without a job. Jobs are
+    route and offset from parquet footers, dims that did not grow
+    publish without a job, and frames that are already parquet
+    read-backs (the input Domain, the wave checkpoints the stage
+    barriers hand on) are not copied. Jobs are
     counted by job group with ``statusTracker``; tasks are the completed
     tasks of those jobs' stages."""
     import uuid
@@ -365,8 +367,9 @@ CLOSE_WINDOW = (20000101, 20000131)
 def bootstrapped(spark, sf_dir, tmp_path_factory):
     """A warehouse the staged runner bootstrapped through 1999-12:
     (returned Domain, stage dir). Tests close 2000-01 in a copy of its
-    published set (:func:`_warehouse_copy`), so the Domain's barrier
-    files under the bootstrap's stage dir are never overwritten."""
+    published set (:func:`_warehouse_copy`), so each starts from the
+    bootstrap's set; the Domain's barrier files stay under the
+    bootstrap's stage dir, which no close writes to."""
     dom = build_domain(spark, sf_dir)
     d = str(tmp_path_factory.mktemp("bootstrapped"))
     out, _, _ = run_monthly_load_staged(spark, dom, (19950101, 19991231), d)
@@ -530,6 +533,83 @@ def test_close_full_syncs_unfenceable_insert_dim(spark, tmp_path, bootstrapped):
     assert not {"orphan", "out-of-band"} & {proxy for _, proxy in published}
 
 
+def _row_hashes(dom) -> dict[str, list[int]]:
+    """{frame: sorted row hashes} of every frame of ``dom``."""
+    from etl_loading_scripts_spark.pipeline.domain import Domain
+
+    out = {}
+    for name in Domain.__dataclass_fields__:
+        df = getattr(dom, name)
+        out[name] = sorted(r[0] for r in df.select(F.xxhash64(*df.columns)).collect())
+    return out
+
+
+def _run_dirs(stage: str) -> set[str]:
+    """The run directories under a stage dir: every entry but the
+    published set."""
+    import os
+
+    return set(os.listdir(stage)) - {"publish"}
+
+
+NEXT_WINDOW = (20000201, 20000229)
+
+
+def test_chained_close_keeps_input_domain_readable(spark, tmp_path, bootstrapped):
+    """Close month N, then N+1 from N's returned Domain in the same
+    stage dir: every frame of the Domain that fed the N+1 close reads
+    the same rows afterwards (the close neither overwrote nor deleted
+    its files), and the N+1 close wrote no stage-0 checkpoint: its
+    inputs are N's read-backs, read where they lie."""
+    import os
+
+    dom, boot_dir = bootstrapped
+    stage, _ = _warehouse_copy(boot_dir, tmp_path)
+    out_n, _, _ = run_monthly_load_staged(spark, dom, CLOSE_WINDOW, stage)
+    hashes = _row_hashes(out_n)
+    runs = _run_dirs(stage)
+
+    run_monthly_load_staged(spark, out_n, NEXT_WINDOW, stage)
+
+    assert _row_hashes(out_n) == hashes
+    [run] = _run_dirs(stage) - runs
+    assert not [c for c in os.listdir(os.path.join(stage, run)) if c.startswith("s0_")]
+
+
+def test_chained_closes_keep_only_live_checkpoints(spark, tmp_path, bootstrapped):
+    """After three chained closes the stage dir holds the published set,
+    the last run's directory whole, and of earlier runs only the
+    checkpoints the last close's input or returned Domain reads."""
+    import os
+    from urllib.parse import urlparse
+
+    from etl_loading_scripts_spark.pipeline.domain import Domain
+
+    dom, boot_dir = bootstrapped
+    stage, _ = _warehouse_copy(boot_dir, tmp_path)
+    for window in (CLOSE_WINDOW, NEXT_WINDOW, (20000301, 20000331)):
+        last_in, runs = dom, _run_dirs(stage)
+        dom, _, _ = run_monthly_load_staged(spark, dom, window, stage)
+    [run] = _run_dirs(stage) - runs
+
+    read_dirs = {
+        os.path.dirname(urlparse(u).path)
+        for d in (last_in, dom)
+        for name in Domain.__dataclass_fields__
+        for u in getattr(d, name).inputFiles()
+    }
+    live = {
+        os.path.relpath(p, stage) for p in read_dirs
+        if p.startswith(os.path.join(stage, ""))
+    }
+    current = {f"{run}/{c}" for c in os.listdir(os.path.join(stage, run))}
+    kept = {f"{r}/{c}" for r in _run_dirs(stage) for c in os.listdir(os.path.join(stage, r))}
+    assert kept == current | live
+    assert live - current  # the input Domain reads the previous run's
+    # the first close's run dir is gone: nothing the last close saw reads it
+    assert len(_run_dirs(stage)) == 2
+
+
 def test_resumed_barriers_validate_like_observed_writes(spark, tmp_path, loaded):
     """A resumed barrier has no write to observe its validation on, so
     the runner aggregates over the read-back checkpoint instead. Resume
@@ -549,9 +629,11 @@ def test_resumed_barriers_validate_like_observed_writes(spark, tmp_path, loaded)
     _, metrics_fresh, _ = run_monthly_load_staged(
         spark, dom, window, d, publish=False
     )
-    for f in os.listdir(d):
+    [run] = _run_dirs(d)
+    run = os.path.join(d, run)
+    for f in os.listdir(run):
         if f.startswith(("s4_", "s5_")):
-            shutil.rmtree(os.path.join(d, f))
+            shutil.rmtree(os.path.join(run, f))
     _, metrics_resumed, report = run_monthly_load_staged(
         spark, dom, window, d, publish=False, resume=True
     )
@@ -561,7 +643,7 @@ def test_resumed_barriers_validate_like_observed_writes(spark, tmp_path, loaded)
     assert metrics_resumed == metrics_fresh
 
     def barrier(name: str):
-        return spark.read.parquet(os.path.join(d, name))
+        return spark.read.parquet(os.path.join(run, name))
 
     def unmapped(name: str, col: str, sentinel: int) -> int:
         return barrier(name).filter(
@@ -639,12 +721,15 @@ def test_staged_load_resumes_from_last_barrier(spark, tmp_path, loaded):
     assert metrics_full == metrics_ref
     # simulate a crash during stage 4: its outputs (and everything
     # after) never committed
-    for f in os.listdir(d):
-        if f.startswith(("s4_", "s5_", "publish")):
-            shutil.rmtree(os.path.join(d, f))
+    shutil.rmtree(os.path.join(d, "publish"))
+    [run] = _run_dirs(d)
+    run = os.path.join(d, run)
+    for f in os.listdir(run):
+        if f.startswith(("s4_", "s5_")):
+            shutil.rmtree(os.path.join(run, f))
     mtimes_before = {
-        f: os.path.getmtime(os.path.join(d, f, "_SUCCESS"))
-        for f in os.listdir(d)
+        f: os.path.getmtime(os.path.join(run, f, "_SUCCESS"))
+        for f in os.listdir(run)
         if f.startswith(("s0_", "s1_", "s2_", "s3_"))
     }
     _, metrics_resumed, report = run_monthly_load_staged(
@@ -653,7 +738,7 @@ def test_staged_load_resumes_from_last_barrier(spark, tmp_path, loaded):
     assert metrics_resumed == metrics_full
     # completed barriers were NOT rewritten
     for f, t in mtimes_before.items():
-        assert os.path.getmtime(os.path.join(d, f, "_SUCCESS")) == t, f
+        assert os.path.getmtime(os.path.join(run, f, "_SUCCESS")) == t, f
     by_stage = {r["stage"]: r for r in report}
     assert set(by_stage["s0_domain"].get("resumed", [])) == {
         "raw", "fact", "dim_patron", "dim_restaurant",
