@@ -10,6 +10,9 @@ staging-table discipline the reference itself uses, ``S1:46`` stages
 - wall seconds (stage transform + checkpoint write; the stage's
   validation probes are observed on that write, not run as separate
   counts),
+- the driver JVM's JIT compilation seconds over the stage
+  (``compile_s``: the delta of the compilation MXBean's total, summed
+  over compiler threads, so it can exceed the stage's wall seconds),
 - cumulative shuffle bytes/records delta (when a ``snapshot`` callable
   is supplied — e.g. :func:`shuffle_snapshot` over the Spark REST API),
 - an optional per-output plan profile (``instrument`` hook — the test
@@ -107,8 +110,10 @@ def _frames(dom: Domain) -> list[tuple[str, DataFrame]]:
 
 
 def _is_parquet_scan(df: DataFrame) -> bool:
-    """True when ``df``'s optimized plan is a bare local parquet scan."""
-    return _local_parquet_files(df._jdf.queryExecution().optimizedPlan()) is not None
+    """True when ``df``'s analyzed plan is a bare local parquet scan. The
+    analyzed plan is built with the frame, so this runs no optimizer; a
+    read-back (``spark.read.parquet``) is a bare scan there already."""
+    return _local_parquet_files(df._jdf.queryExecution().analyzed()) is not None
 
 
 def _reads(dom: Domain) -> set[str]:
@@ -162,12 +167,14 @@ def run_monthly_load_staged(
     the stages' validation dict, observed on the barrier writes (one
     aggregate over the read-back for a resumed barrier), and
     ``stage_report`` has one entry per barrier with wall seconds (stage
-    transform + checkpoint write) plus whatever ``snapshot``/``instrument``
-    recorded. ``publish=True`` ends the close with one delta-log set
-    commit of the five outputs under ``stage_dir/publish``, its fact
-    OPTIMIZEd and Z-ORDERed before the set commit. Every frame of
-    ``domain_out`` (``raw_transactions`` included) reads parquet where it
-    lies, so the next close, fed ``domain_out``, writes nothing in stage 0.
+    transform + checkpoint write) and the driver JVM's JIT compilation
+    seconds over the stage (``compile_s``) plus whatever
+    ``snapshot``/``instrument`` recorded. ``publish=True`` ends the
+    close with one delta-log set commit of the five outputs under
+    ``stage_dir/publish``, its fact OPTIMIZEd and Z-ORDERed before the
+    set commit. Every frame of ``domain_out`` (``raw_transactions``
+    included) reads parquet where it lies, so the next close, fed
+    ``domain_out``, writes nothing in stage 0.
 
     Barriers are written once per run: ``<key>`` hashes the window and
     the files each input frame reads (see :func:`_run_dir`), so a close
@@ -196,6 +203,16 @@ def run_monthly_load_staged(
     in_reads = _reads(dom)
     report: list[dict] = []
     metrics: dict[str, int] = {}
+    jit = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    jit_ms = jit.getTotalCompilationTime()
+
+    def compile_s() -> float:
+        """JIT compilation seconds of the driver JVM since the last call
+        (one py4j call)."""
+        nonlocal jit_ms
+        now = jit.getTotalCompilationTime()
+        delta, jit_ms = now - jit_ms, now
+        return round(delta / 1000, 3)
 
     def _resumable(path: str) -> bool:
         return resume and os.path.exists(os.path.join(path, "_SUCCESS"))
@@ -249,6 +266,7 @@ def run_monthly_load_staged(
         rec: dict = {
             "stage": name,
             "wall_sec": round(time.time() - t0 + wall, 3),
+            "compile_s": compile_s(),
         }
         if resumed:
             rec["resumed"] = resumed
@@ -451,6 +469,7 @@ def run_monthly_load_staged(
         rec = {
             "stage": "s6_publish_deltalog",
             "wall_sec": round(time.time() - t0, 3),
+            "compile_s": compile_s(),
             "set_version": set_version,
         }
         if snapshot is not None:

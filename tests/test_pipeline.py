@@ -576,6 +576,16 @@ def test_chained_close_keeps_input_domain_readable(spark, tmp_path, bootstrapped
     assert not [c for c in os.listdir(os.path.join(stage, run)) if c.startswith("s0_")]
 
 
+def test_stage_report_records_compile_time(spark, tmp_path, bootstrapped):
+    """Every stage record of a close, the publish included, carries the
+    driver JVM's JIT compilation seconds over the stage."""
+    dom, boot_dir = bootstrapped
+    stage, _ = _warehouse_copy(boot_dir, tmp_path)
+    _, _, report = run_monthly_load_staged(spark, dom, CLOSE_WINDOW, stage)
+    assert [r["stage"] for r in report][-1] == "s6_publish_deltalog"
+    assert all(r["compile_s"] >= 0 for r in report)
+
+
 def test_chained_closes_keep_only_live_checkpoints(spark, tmp_path, bootstrapped):
     """After three chained closes the stage dir holds the published set,
     the last run's directory whole, and of earlier runs only the
