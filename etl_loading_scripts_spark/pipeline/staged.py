@@ -41,13 +41,24 @@ tables are written once and read where they lie:
   to observe is read where it lies, not copied: the previous close's
   read-backs in stage 0, and the wave checkpoints the stage barriers
   hand on. A chained close therefore writes nothing in stage 0;
-- a successful run deletes the checkpoints of earlier runs under
-  ``stage_dir`` that neither its input nor its output ``Domain``
-  reads. Its own run directory and ``stage_dir/publish`` are kept.
+- the fact barrier is laid out by month, one parquet file per month
+  under ``<checkpoint>/month=yyyymm/``, so a file's month is read from
+  its path alone. Stage 0 writes the fact this way when its input is
+  not already so laid out (a bootstrap's lazy fact); stages 2-4 read
+  only the window's month files, so their fact barriers hold only the
+  window's rows, and the mappings their updates join cover only the
+  window's transactions. The returned fact is one bare scan of the
+  input's other months, read where they lie and never rewritten, plus
+  the window's months as stage 4 wrote them;
+- a successful run deletes what earlier runs under ``stage_dir`` wrote
+  and neither its input nor its output ``Domain`` reads: run dirs,
+  checkpoints and the months of fact checkpoints. Its own run
+  directory and ``stage_dir/publish`` are kept.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -76,6 +87,7 @@ from etl_loading_scripts_spark.pipeline.stages import (
     validate_stage4,
     validate_stage5,
 )
+from etl_loading_scripts_spark.sources.io import MONTH_COL, with_month
 
 
 def shuffle_snapshot(spark: SparkSession) -> dict | None:
@@ -116,6 +128,31 @@ def _is_parquet_scan(df: DataFrame) -> bool:
     return _local_parquet_files(df._jdf.queryExecution().analyzed()) is not None
 
 
+def _month_files(df: DataFrame) -> dict[int | None, list[str]] | None:
+    """``{month: files}`` of a bare local parquet scan whose every file
+    lies in a ``month=yyyymm`` directory, the month read from the path
+    alone (None for the null month's directory); None for any other
+    frame, or one that reads the month directories as a column."""
+    files = _local_parquet_files(df._jdf.queryExecution().analyzed())
+    if files is None or MONTH_COL in df.columns:
+        return None
+    out: dict[int | None, list[str]] = {}
+    for f in files:
+        key, eq, value = os.path.basename(os.path.dirname(f)).partition("=")
+        if key != MONTH_COL or not eq:
+            return None
+        out.setdefault(int(value) if value.isdigit() else None, []).append(f)
+    return out
+
+
+def _read_files(spark: SparkSession, schema, files: list[str]) -> DataFrame:
+    """A bare parquet scan of explicit ``files`` under ``schema``: no
+    schema inference, and no partition column from their directories."""
+    if not files:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*sorted(files))
+
+
 def _reads(dom: Domain) -> set[str]:
     """Local paths of the files the frames of ``dom`` read."""
     uris = (urlparse(u) for _, df in _frames(dom) for u in df.inputFiles())
@@ -135,19 +172,44 @@ def _run_dir(stage_dir: str, dom: Domain, window: tuple[int, int]) -> str:
     return os.path.join(stage_dir, _RUN_PREFIX + h.hexdigest()[:16])
 
 
+def _drop_dead(path: str, live: set[str]) -> None:
+    """Delete ``path`` when it holds none of the ``live`` files; else
+    apply the same to each directory in it. A run dir, a checkpoint and a
+    month of a month-laid-out checkpoint each go as soon as nothing live
+    is left in them."""
+    prefix = os.path.join(path, "")
+    if not any(f.startswith(prefix) for f in live):
+        shutil.rmtree(path)
+        return
+    for entry in os.scandir(path):
+        if entry.is_dir():
+            _drop_dead(entry.path, live)
+
+
 def _drop_dead_runs(stage_dir: str, run_dir: str, live: set[str]) -> None:
-    """Delete the checkpoint dirs of earlier runs under ``stage_dir`` that
-    hold none of the ``live`` files, then the run dirs left empty."""
+    """Delete what earlier runs under ``stage_dir`` wrote and none of the
+    ``live`` files lies in: whole run dirs, checkpoints, and the months
+    of the fact checkpoints."""
     for run in os.listdir(stage_dir):
         path = os.path.join(stage_dir, run)
-        if not run.startswith(_RUN_PREFIX) or path == run_dir:
-            continue
-        for ckpt in os.listdir(path):
-            prefix = os.path.join(path, ckpt, "")
-            if not any(f.startswith(prefix) for f in live):
-                shutil.rmtree(prefix)
-        if not os.listdir(path):
-            os.rmdir(path)
+        if run.startswith(_RUN_PREFIX) and path != run_dir:
+            _drop_dead(path, live)
+
+
+def _fact_merges(publish_dir: str) -> bool:
+    """True when a publish to ``publish_dir`` merges the fact by month
+    rather than bootstrapping it: the table has a log and the last set
+    commit pins it, so ``publish_set_deltalog`` cannot take its
+    bootstrap branch, which needs the full fact."""
+    from etl_loading_scripts_spark.operators.deltalog import (
+        _all_versions,
+        _last_pinned_version,
+    )
+
+    name = "fact_transaction"
+    return bool(_all_versions(os.path.join(publish_dir, name))) and (
+        _last_pinned_version(publish_dir, name) is not None
+    )
 
 
 def run_monthly_load_staged(
@@ -174,7 +236,11 @@ def run_monthly_load_staged(
     ``stage_dir/publish``, its fact OPTIMIZEd and Z-ORDERed before the
     set commit. Every frame of ``domain_out`` (``raw_transactions``
     included) reads parquet where it lies, so the next close, fed
-    ``domain_out``, writes nothing in stage 0.
+    ``domain_out``, writes nothing in stage 0. Its fact is laid out one
+    file per month: the input's months outside the window, as they
+    were, plus the window's months written by stage 4. The publish
+    merges the window's months of the fact; only a publish that
+    bootstraps the fact table is handed the whole fact.
 
     Barriers are written once per run: ``<key>`` hashes the window and
     the files each input frame reads (see :func:`_run_dir`), so a close
@@ -182,10 +248,10 @@ def run_monthly_load_staged(
     close's ``Domain`` stays readable while its checkpoints are kept. A
     frame that is already a bare local parquet scan with no validation
     to observe is handed on as it is, with no write and no read-back.
-    After a successful run, the checkpoints of earlier runs under
-    ``stage_dir`` that neither the input nor the returned ``Domain``
-    reads are deleted; this run's directory and ``stage_dir/publish``
-    are kept.
+    After a successful run, the checkpoints (for the fact, the months)
+    of earlier runs under ``stage_dir`` that neither the input nor the
+    returned ``Domain`` reads are deleted; this run's directory and
+    ``stage_dir/publish`` are kept.
 
     ``resume=True`` is the RESTART path the barriers exist for: any
     barrier whose parquet output is already committed (``_SUCCESS``
@@ -217,40 +283,59 @@ def run_monthly_load_staged(
     def _resumable(path: str) -> bool:
         return resume and os.path.exists(os.path.join(path, "_SUCCESS"))
 
-    def checkpoint(df: DataFrame, path: str, checks: dict | None = None) -> DataFrame:
+    def checkpoint(
+        df: DataFrame, path: str, checks: dict | None = None, layout: str | None = None
+    ) -> DataFrame:
         """Write ``df`` to ``path`` (unless a resumed checkpoint is already
         there) and read it back with ``df``'s schema, so the read needs no
         schema-inference job. ``checks`` (``{metric: aggregate Column}``)
         are observed on the write itself; a resumed checkpoint has no
         write, so they run as one aggregate over the read-back. A frame
-        with no ``checks`` that is already a bare parquet scan is
-        returned as it is: it has been written, and is read where it
-        lies."""
-        if not checks and _is_parquet_scan(df):
+        with no ``checks`` that is already a bare parquet scan (for a
+        ``layout``, one laid out by month) is returned as it is: it has
+        been written, and is read where it lies.
+
+        ``layout`` lays the fact out by month, one file per month under
+        ``path/month=yyyymm/``: ``"month"`` for a frame of one month, one
+        task writing it with no shuffle; ``"months"`` for any number of
+        months, shuffled by month first."""
+        if not checks and (
+            _month_files(df) is not None if layout else _is_parquet_scan(df)
+        ):
             return df
         prefix = os.path.join(path, "")
         assert not any(f.startswith(prefix) for f in in_reads), (
             f"checkpoint {path} would overwrite files the input Domain reads"
         )
-        if _resumable(path):
-            back = spark.read.schema(df.schema).parquet(path)
+        resumed = _resumable(path)
+        if not resumed:
+            out = df
             if checks:
-                metrics.update(evaluate(back, checks))
-            return back
-        if checks:
-            obs = Observation()
-            observed = df.observe(obs, *(c.alias(k) for k, c in checks.items()))
-            observed.write.mode("overwrite").parquet(path)
-            metrics.update(obs.get)
+                obs = Observation()
+                out = df.observe(obs, *(c.alias(k) for k, c in checks.items()))
+            if layout:
+                out = with_month(out)
+                out = out.coalesce(1) if layout == "month" else out.repartition(MONTH_COL)
+                out.write.mode("overwrite").partitionBy(MONTH_COL).parquet(path)
+            else:
+                out.write.mode("overwrite").parquet(path)
+            if checks:
+                metrics.update(obs.get)
+        if layout:
+            files = glob.glob(os.path.join(path, f"{MONTH_COL}=*", "*.parquet"))
+            back = _read_files(spark, df.schema, files)
         else:
-            df.write.mode("overwrite").parquet(path)
-        return spark.read.schema(df.schema).parquet(path)
+            back = spark.read.schema(df.schema).parquet(path)
+        if resumed and checks:
+            metrics.update(evaluate(back, checks))
+        return back
 
     def barrier(
         name: str,
         dfs: dict[str, DataFrame],
         wall: float = 0.0,
         checks: dict[str, dict] | None = None,
+        layouts: dict[str, str] | None = None,
     ):
         t0 = time.time()
         profs = {}
@@ -262,7 +347,9 @@ def run_monthly_load_staged(
                 resumed.append(key)
             elif instrument is not None:
                 profs[key] = instrument(df)
-            ckpt[key] = checkpoint(df, path, (checks or {}).get(key))
+            ckpt[key] = checkpoint(
+                df, path, (checks or {}).get(key), (layouts or {}).get(key)
+            )
         rec: dict = {
             "stage": name,
             "wall_sec": round(time.time() - t0 + wall, 3),
@@ -298,7 +385,9 @@ def run_monthly_load_staged(
 
     # stage 0: materialize the domain inputs that are lazy plans (the raw
     # feed build and the fact seed of a bootstrap); a chained close's
-    # inputs are the previous run's read-backs and pass through unwritten
+    # inputs are the previous run's read-backs and pass through unwritten.
+    # The fact is laid out one file per month, so stages 2-4 read only
+    # the window's months and the untouched ones stay where they lie.
     d0 = barrier(
         "s0_domain",
         {
@@ -309,12 +398,20 @@ def run_monthly_load_staged(
             "pos_fingerprints": dom.pos_fingerprints,
             "dim_billing_group": dom.dim_billing_group,
         },
+        layouts={"fact": "months"},
     )
     raw = d0["raw"]
+    lo, hi = window
+    fact_months = _month_files(d0["fact"]) or {}  # {} when it has no rows
+    window_months = {m for m in fact_months if m is not None and lo // 100 <= m <= hi // 100}
+    fact_slice = _read_files(
+        spark, d0["fact"].schema,
+        [f for m in window_months for f in fact_months[m]],
+    )
 
     t0 = time.time()
     staging_map, registry, _ = stage1_fingerprint_map(
-        raw, d0["pos_fingerprints"], validate=False,
+        raw, d0["pos_fingerprints"], window, validate=False,
         barrier=wave_barrier("s1"),
     )
     s1 = barrier(
@@ -326,7 +423,7 @@ def run_monthly_load_staged(
 
     t0 = time.time()
     fact, dim_patron, _ = stage2_patron_dims(
-        raw, d0["fact"], d0["dim_patron"], window, validate=False,
+        raw, fact_slice, d0["dim_patron"], window, validate=False,
         barrier=wave_barrier("s2"),
     )
     s2 = barrier(
@@ -358,6 +455,7 @@ def run_monthly_load_staged(
         {"fact": fact, "dim_billing_group": dim_billing_group},
         time.time() - t0,
         {"fact": validate_stage4(window)},
+        {"fact": "month" if len(window_months) == 1 else "months"},
     )
 
     t0 = time.time()
@@ -374,10 +472,17 @@ def run_monthly_load_staged(
         {"bridge": validate_stage5()},
     )
 
+    # the returned fact: the input's untouched months where they lie,
+    # plus the window's months as stage 4 wrote them
+    fact_out = _read_files(
+        spark, d0["fact"].schema,
+        [f for m, fs in fact_months.items() if m not in window_months for f in fs]
+        + [f for fs in (_month_files(s4["fact"]) or {}).values() for f in fs],
+    )
     out = replace(
         dom,
         raw_transactions=raw,
-        fact_transaction=s4["fact"],
+        fact_transaction=fact_out,
         dim_patron=s2["dim_patron"],
         dim_restaurant=s5["dim_restaurant"],
         pos_fingerprints=s1["registry"],
@@ -438,15 +543,19 @@ def run_monthly_load_staged(
             "dim_billing_group": "billing_group_key",
             "pos_fingerprints": "fingerprint_id",
         }
+        # A merge reads only the window's rows of the fact frame, so it
+        # gets the window's months; only a bootstrap needs the whole fact.
+        publish_dir = os.path.join(stage_dir, "publish")
+        fact_pub = s4["fact"] if _fact_merges(publish_dir) else out.fact_transaction
         set_version = publish_set_deltalog(
             [
-                ("fact_transaction", out.fact_transaction),
+                ("fact_transaction", fact_pub),
                 ("dim_patron", out.dim_patron),
                 ("dim_restaurant", out.dim_restaurant),
                 ("dim_billing_group", out.dim_billing_group),
                 ("pos_fingerprints", out.pos_fingerprints),
             ],
-            os.path.join(stage_dir, "publish"),
+            publish_dir,
             optimize=opt,
             incremental={
                 "fact_transaction": {

@@ -8,7 +8,9 @@ caller asserts on — "the final query must return 0 rows" (S3:91-99).
 Incremental discipline: every fact update is guarded by BOTH the month
 window (``datekey BETWEEN`` — partition pruning at scale) and the unmapped
 sentinel (only untouched rows rewritten), exactly the reference's two-guard
-idiom (S4:91-107).
+idiom (S4:91-107). The mappings those updates join are built from the
+window's transactions only (:func:`window_txns`), so no shuffle on the fact
+path grows with the history; the dim insert waves read the whole feed.
 """
 
 from __future__ import annotations
@@ -45,6 +47,18 @@ def month_guard(lo_datekey: int, hi_datekey: int) -> Column:
 
 def _identity_barrier(df: DataFrame, name: str) -> DataFrame:
     return df
+
+
+def window_txns(txns: DataFrame, window: tuple[int, int]) -> DataFrame:
+    """The rows of ``txns`` (raw transactions, or a projection of them
+    that keeps ``txn_date``) in the month window. A fact row's datekey
+    is its raw row's ``txn_date`` (``build_domain``), so every fact row a
+    window guard admits finds its raw row here: the mappings the guarded
+    updates join need no other rows. Should a fact ever disagree with
+    its feed, the rows it misses stay unmapped, which the stages'
+    zero-unmapped probes count."""
+    lo, hi = window
+    return txns.filter(tsql.datekey("txn_date").between(lo, hi))
 
 
 # ---------------------------------------------------------------------------
@@ -119,6 +133,7 @@ def validate_stage5() -> dict[str, Column]:
 def stage1_fingerprint_map(
     raw: DataFrame,
     pos_fingerprints: DataFrame,
+    window: tuple[int, int],
     validate: bool = True,
     barrier=_identity_barrier,
 ) -> tuple[DataFrame, DataFrame, dict]:
@@ -127,14 +142,17 @@ def stage1_fingerprint_map(
     unmatched merchant groups with ClientCount quality metadata + anti-join
     insert guard (S1:46-128).
 
-    Returns (txn→fingerprint staging map, updated registry, metrics).
+    Returns (txn→fingerprint staging map, updated registry, metrics). The
+    registry grows from the whole feed; the staging map covers only the
+    ``window``'s transactions (the reference's monthly ``#map``, S1:46),
+    since stage 3's update reads no other rows.
     ``barrier`` (df, name) → df lets the staged runner materialize the
     updated registry before the final probe re-reads it (the reference's
     own staging-table discipline); ``validate=False`` leaves the
     zero-unmapped probe (:func:`validate_stage1`) to the caller, which
     observes it on the checkpoint write."""
     probe = raw.select(
-        "txn_id", *MERCHANT_FP_COLS, merchant_simhash().alias("sim_hash")
+        "txn_id", "txn_date", *MERCHANT_FP_COLS, merchant_simhash().alias("sim_hash")
     )
     # The probes no registry row matches. This anti-join equals the left
     # join's NULL-fingerprint rows only because the registry's
@@ -170,7 +188,7 @@ def stage1_fingerprint_map(
         ),
         "registry",
     )
-    final_map = probe.join(
+    final_map = window_txns(probe, window).join(
         F.broadcast(registry.select("sim_hash", "fingerprint_id")), "sim_hash", "left"
     ).select("txn_id", "fingerprint_id", "sim_hash")
     metrics = evaluate(final_map, validate_stage1()) if validate else {}
@@ -268,7 +286,7 @@ def stage2_patron_dims(
     )
 
     # fact updates: join through the txn's (possibly synthesized) proxy
-    txn_proxy = raw.select(
+    txn_proxy = window_txns(raw, window).select(
         "txn_id",
         F.coalesce(
             F.col("proxy_id"),
@@ -317,7 +335,7 @@ def stage3_restaurant_map(
         guard=(F.col("fingerprint_id") == UNMAPPED_FINGERPRINT_ID) & month_guard(lo, hi),
     )
 
-    site_map = raw.select("txn_id", "site_id").join(
+    site_map = window_txns(raw, window).select("txn_id", "site_id").join(
         F.broadcast(dim_clean.select("site_id", F.col("restaurant_key").alias("rk_new"))),
         "site_id",
     )
@@ -351,6 +369,7 @@ def stage4_billing_groups(
     lo, hi = window
     cleaned = raw.select(
         "txn_id",
+        "txn_date",
         F.trim(tsql.clean_chain(F.col("billgroup_raw"), BILLING_GROUP_CLEANUPS)).alias(
             "billing_group_name"
         ),
@@ -373,7 +392,7 @@ def stage4_billing_groups(
         ),
         "dim_billing_group",
     )
-    mapping = cleaned.join(
+    mapping = window_txns(cleaned, window).join(
         F.broadcast(dim_out.select("billing_group_name", F.col("billing_group_key").alias("bg_new"))),
         "billing_group_name",
     )

@@ -83,6 +83,13 @@ def get_spark(
             "spark.driver.defaultJavaOptions",
             "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=256m",
         )
+        # List up to 4096 paths on the driver. Spark's default (32) lists
+        # a longer path list with a Spark job of one task per path. The
+        # engine's multi-path reads name local leaf files (a delta
+        # snapshot's data files, a month-laid-out fact's month files),
+        # and listing one is a stat(2) call on the driver, microseconds
+        # each; the job costs a scheduling round and one task per file.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         .config("spark.ui.enabled", "false")
         # the events table stores TIMESTAMP(NANOS) which vanilla Spark
         # rejects; read as long nanos, normalized to TimestampType in

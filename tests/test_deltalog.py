@@ -42,6 +42,25 @@ def test_create_read_and_log_shape(spark, table):
     assert all(a["add"]["size"] > 0 for a in actions if "add" in a)
 
 
+def test_snapshot_read_of_many_files_runs_no_job(spark, tmp_path, jobs_of):
+    """Spark lists more paths than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (default
+    32) with a Spark job of one task per path. The engine's session lists
+    them on the driver: building a snapshot read over 40 local data
+    files runs no Spark job before an action."""
+    d = str(tmp_path / "many")
+    write_delta_table(spark.range(0, 40, 1, numPartitions=40), d)
+    df = None
+
+    def build():
+        nonlocal df
+        df = read_delta_table(spark, d)
+
+    assert jobs_of(build) == 0
+    assert len(df.inputFiles()) == 40
+    assert df.count() == 40
+
+
 def test_append_overwrite_and_time_travel(spark, table):
     more = spark.range(10, 15).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")

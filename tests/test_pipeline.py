@@ -586,10 +586,27 @@ def test_stage_report_records_compile_time(spark, tmp_path, bootstrapped):
     assert all(r["compile_s"] >= 0 for r in report)
 
 
+def _leaf_dirs(stage: str, run: str) -> set[str]:
+    """The directories of a run dir that hold no directory, relative to
+    the stage dir: each checkpoint, or each month of a checkpoint laid
+    out by month. The cleanup of earlier runs keeps or deletes these
+    whole."""
+    import os
+
+    return {
+        os.path.relpath(root, stage)
+        for root, dirs, _ in os.walk(os.path.join(stage, run))
+        if not dirs and root != os.path.join(stage, run)
+    }
+
+
 def test_chained_closes_keep_only_live_checkpoints(spark, tmp_path, bootstrapped):
     """After three chained closes the stage dir holds the published set,
     the last run's directory whole, and of earlier runs only the
-    checkpoints the last close's input or returned Domain reads."""
+    checkpoints, and the months of the fact checkpoints, that the last
+    close's input or returned Domain reads. Every close leaves its month
+    of the fact where it wrote it, so all three run dirs stay, the
+    first holding nothing but that month."""
     import os
     from urllib.parse import urlparse
 
@@ -597,10 +614,12 @@ def test_chained_closes_keep_only_live_checkpoints(spark, tmp_path, bootstrapped
 
     dom, boot_dir = bootstrapped
     stage, _ = _warehouse_copy(boot_dir, tmp_path)
+    runs = []
     for window in (CLOSE_WINDOW, NEXT_WINDOW, (20000301, 20000331)):
-        last_in, runs = dom, _run_dirs(stage)
+        last_in, before = dom, _run_dirs(stage)
         dom, _, _ = run_monthly_load_staged(spark, dom, window, stage)
-    [run] = _run_dirs(stage) - runs
+        [run] = _run_dirs(stage) - before
+        runs.append(run)
 
     read_dirs = {
         os.path.dirname(urlparse(u).path)
@@ -612,12 +631,67 @@ def test_chained_closes_keep_only_live_checkpoints(spark, tmp_path, bootstrapped
         os.path.relpath(p, stage) for p in read_dirs
         if p.startswith(os.path.join(stage, ""))
     }
-    current = {f"{run}/{c}" for c in os.listdir(os.path.join(stage, run))}
-    kept = {f"{r}/{c}" for r in _run_dirs(stage) for c in os.listdir(os.path.join(stage, r))}
+    current = _leaf_dirs(stage, run)
+    kept = {d for r in _run_dirs(stage) for d in _leaf_dirs(stage, r)}
     assert kept == current | live
     assert live - current  # the input Domain reads the previous run's
-    # the first close's run dir is gone: nothing the last close saw reads it
-    assert len(_run_dirs(stage)) == 2
+    assert _run_dirs(stage) == set(runs)
+    assert _leaf_dirs(stage, runs[0]) == {
+        f"{runs[0]}/s4_billing_groups_fact/month=200001"
+    }
+
+
+def test_close_rewrites_no_untouched_month(spark, tmp_path, bootstrapped):
+    """The fact is laid out one file per month, and a close reads and
+    writes only its window's months: the bootstrap published one data
+    file per month with no OPTIMIZE commit; after a chained close every
+    fact file outside the window is one of the input Domain's files,
+    unchanged on disk; and the s2-s4 fact checkpoints hold exactly the
+    window's rows, s4's in one file."""
+    import glob
+    import os
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
+    from etl_loading_scripts_spark.operators import deltalog as dl
+
+    dom, boot_dir = bootstrapped
+    boot_fact = os.path.join(boot_dir, "publish", "fact_transaction")
+    active, _, _ = dl._snapshot_state(
+        boot_fact, _set_pins(os.path.join(boot_dir, "publish"))["fact_transaction"]
+    )
+    months = [a["partitionValues"]["month"] for a in active.values()]
+    n_months = dom.fact_transaction.select(
+        (F.col("datekey") / 100).cast("int")
+    ).distinct().count()
+    assert len(months) == len(set(months)) == n_months
+    ops = {
+        a["commitInfo"]["operation"]
+        for v in dl._versions(boot_fact)
+        for a in dl._read_actions(boot_fact, v)
+        if "commitInfo" in a
+    }
+    assert "OPTIMIZE" not in ops
+
+    def files(df) -> dict[str, tuple[int, int]]:
+        paths = (urlparse(u).path for u in df.inputFiles())
+        return {p: (os.stat(p).st_size, os.stat(p).st_mtime_ns) for p in paths}
+
+    stage, _ = _warehouse_copy(boot_dir, tmp_path)
+    before = files(dom.fact_transaction)
+    out, _, _ = run_monthly_load_staged(spark, dom, CLOSE_WINDOW, stage)
+    window_dir = f"/month={CLOSE_WINDOW[0] // 100}/"
+    outside = {p: st for p, st in files(out.fact_transaction).items() if window_dir not in p}
+    assert len(outside) == n_months - 1
+    assert outside.items() <= before.items()
+
+    n_window = dom.fact_transaction.filter(F.col("datekey").between(*CLOSE_WINDOW)).count()
+    [run] = _run_dirs(stage)
+    for ckpt in ("s2_patron_dims_fact", "s3_restaurant_map_fact", "s4_billing_groups_fact"):
+        parts = glob.glob(os.path.join(stage, run, ckpt, "**", "*.parquet"), recursive=True)
+        assert sum(pq.read_metadata(f).num_rows for f in parts) == n_window, ckpt
+    assert len(glob.glob(os.path.join(stage, run, "s4_billing_groups_fact", "*", "*.parquet"))) == 1
 
 
 def test_resumed_barriers_validate_like_observed_writes(spark, tmp_path, loaded):
